@@ -302,17 +302,17 @@ def test_simhash_vectorized_matches_reference():
 
 
 def test_hyperplane_buckets_deterministic_and_shaped():
+    # wrong-dim rows never reach the UDF: dense_embeddings drops them
+    # (pinned by test_embedding_dim_derived_and_drops_surfaced)
     e64 = [np.arange(64, dtype=float).tolist(), (np.ones(64) * -1).tolist()]
-    bad = [[1.0, 2.0]]  # wrong dim
     udf64 = dataops._hyperplane_buckets_udf(64)
-    out = udf64.func(pd.Series(e64 + bad)).tolist()
-    assert len(out) == 3
+    out = udf64.func(pd.Series(e64)).tolist()
+    assert len(out) == 2
     assert len(out[0]) == dataops._LSH_TABLES
-    assert out[2] == [-1] * dataops._LSH_TABLES
     # table id spaces are disjoint
     for t_idx, b in enumerate(out[0]):
         assert b >> dataops._LSH_PLANES == t_idx
-    out2 = dataops._hyperplane_buckets_udf(64).func(pd.Series(e64 + bad)).tolist()
+    out2 = dataops._hyperplane_buckets_udf(64).func(pd.Series(e64)).tolist()
     assert out == out2
 
 
@@ -543,13 +543,127 @@ def test_embedding_dim_derived_and_drops_surfaced(spark):
     rows = [(i, rng.standard_normal(48).tolist()) for i in range(40)]
     rows += [(100, rng.standard_normal(16).tolist()), (101, rng.standard_normal(16).tolist())]
     df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-    dim, dropped = dataops.embedding_dim_and_dropped(df)
-    assert (dim, dropped) == (48, 2)
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        dense, n, dim = dataops.dense_embeddings(df)
+    assert (n, dim) == (40, 48) and dense.count() == 40
+    assert any("2 rows dropped" in str(x.message) for x in w)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         out = dataops.hyperplane_ann(df).collect()
     assert any("2 rows dropped" in str(x.message) for x in w)
     assert out and all(r.q_id < 100 and r.vec_id < 100 for r in out)
+
+
+def _planted_48d_rows():
+    """48-d store: 6 near-duplicate groups of 4 (cosine ~0.99) plus 16
+    random singletons, so dedup yields multi-member components."""
+    rng = np.random.default_rng(11)
+    vecs = []
+    for _ in range(6):
+        c = rng.standard_normal(48)
+        vecs += [c + 0.05 * rng.standard_normal(48) for _ in range(4)]
+    vecs += [rng.standard_normal(48) for _ in range(16)]
+    return [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+
+
+def _dedup_rows(df):
+    return sorted(
+        tuple(r) for r in dataops.embedding_dedup_pipeline(df, threshold=0.9).collect()
+    )
+
+
+def test_null_element_row_is_dropped_at_the_boundary(spark):
+    """A null element would become NaN in the Arrow decode, and
+    `cosine >= threshold` accepts NaN. The boundary counts
+    and drops the row instead, so dedup and ANN answer exactly as on
+    the store without it."""
+    import warnings
+
+    rows = _planted_48d_rows()
+    holed = list(rows[1][1])
+    holed[5] = None  # near-duplicate of group 0 with one null element
+    schema = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(rows, schema)
+    dirty = spark.createDataFrame(rows + [(500, holed)], schema)
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        got_dedup = _dedup_rows(dirty)
+        got_ann = sorted(tuple(r) for r in dataops.hyperplane_ann(dirty).collect())
+    assert sum("1 rows dropped" in str(x.message) for x in w) == 2
+    assert got_dedup == _dedup_rows(clean)
+    assert got_ann == sorted(tuple(r) for r in dataops.hyperplane_ann(clean).collect())
+    assert any(not keep for _, _, keep in got_dedup)
+
+
+def test_ragged_store_dedup_equals_dense_rows(spark):
+    """16-d rows and a null vector are dropped at the boundary, never
+    scored against 48-d rows (a zip of mismatched dims would silently
+    truncate): the dedup answer is exactly the 48-d rows' answer."""
+    rows = _planted_48d_rows()
+    rng = np.random.default_rng(12)
+    extra = [(200 + i, rng.standard_normal(16).tolist()) for i in range(3)]
+    schema = "vec_id long, embedding array<double>"
+    dense = spark.createDataFrame(rows, schema)
+    ragged = spark.createDataFrame(rows + extra + [(300, None)], schema)
+    with pytest.warns(UserWarning, match="4 rows dropped"):
+        got = _dedup_rows(ragged)
+    assert got == _dedup_rows(dense)
+
+
+def test_fold_kernel_matches_jvm_cosine_bitwise(spark):
+    """The numpy kernel in its pair shape (_pair_cosine_arrow) and grid
+    shape (_cell_topk_cosine with the margin filter disabled) returns
+    exactly the doubles of the JVM _cosine fold — no rounding. A zero
+    vector divides by a zero norm: numpy yields NaN, and the JVM, which
+    raises under ANSI mode, yields null with ANSI off, in the same
+    places (the grid shape's pandas return carries NaN as null)."""
+    import math
+
+    rng = np.random.default_rng(5)
+    X = rng.standard_normal((24, 64)).astype(np.float32)
+    X[7] = 0.0
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(X)],
+        "vec_id long, embedding array<float>",
+    )
+    pairs = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("ea")).crossJoin(
+        emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("eb"))
+    ).filter(F.col("a") != F.col("b"))
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        jvm = {
+            (r.a, r.b): r.c
+            for r in pairs.select(
+                "a", "b", dataops._cosine(F.col("ea"), F.col("eb")).alias("c")
+            ).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+    def same(x, y):
+        # the cogroup's pandas→Arrow return turns NaN into null
+        return (x is None or math.isnan(x)) if y is None else x == y
+
+    pair = {
+        (r.a, r.b): r.cosine
+        for r in dataops._pair_cosine_arrow(pairs, "a", "b", "ea", "eb").collect()
+    }
+    assert pair.keys() == jvm.keys()
+    assert all(same(pair[k], jvm[k]) for k in jvm)
+    assert sum(math.isnan(c) for c in pair.values()) == 2 * (len(X) - 1)
+
+    cell = F.col("vec_id") % 2
+    qs = emb.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe"), cell.alias("c"))
+    data = emb.select("vec_id", "embedding", cell.alias("c"))
+    grid = {
+        (r.vec_id, r.q_id): r.cosine
+        for r in dataops._cell_topk_cosine(qs, data, "c", margin=float("inf")).collect()
+    }
+    want = {k: v for k, v in jvm.items() if k[0] % 2 == k[1] % 2}
+    assert grid.keys() == want.keys()
+    assert all(same(grid[k], want[k]) for k in want)
 
 
 def test_langid_accuracy_on_multilingual_fixture():

@@ -364,22 +364,10 @@ def d05(spark, sf):
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
     )
     j = e.crossJoin(F.broadcast(qv)).filter(F.col("vec_id") != F.col("q_id"))
-    dot = F.aggregate(
-        F.zip_with("embedding", "qe", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = lambda c: F.sqrt(
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
     sims = j.select(
         "q_id",
         "vec_id",
-        F.round(dot / norm(F.col("embedding")) / norm(F.col("qe")), 4).alias("cosine"),
+        F.round(_cosine(F.col("embedding"), F.col("qe")), 4).alias("cosine"),
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return sims.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5).select(
@@ -441,33 +429,52 @@ def emb_stats(df, col: str = "embedding", id_col: str = "vec_id"):
     VERDICT r5 #4: the adaptive-sizing paths previously burned a
     min_by agg + a filter-count + a separate count(), three full store
     scans before any real work started). One groupBy over size(col)
-    yields a handful of (dim, cnt, min_id) rows; everything derives
-    driver-side. Canonical dim = the dim of the globally smallest id —
-    the same min_by semantics as embedding_dim_and_dropped, so every
-    pinned floor keeps its exact behavior."""
+    yields a handful of (dim, cnt, min_id, holes) rows; everything
+    derives driver-side. Canonical dim = the dim of the globally
+    smallest id (deterministic at any cluster size). n_dropped counts
+    the rows dense_embeddings filters out: null vectors, rows of any
+    other dim, and canonical-dim rows holding a null element."""
     rows = (
         df.groupBy(F.size(col).alias("dim"))
-        .agg(F.count(F.lit(1)).alias("cnt"), F.min(id_col).alias("min_id"))
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.min(id_col).alias("min_id"),
+            F.count_if(F.exists(col, lambda x: x.isNull())).alias("holes"),
+        )
         .collect()
     )
     if not rows:
         return 0, 0, 0
     n = int(sum(r["cnt"] for r in rows))
     canon = min(rows, key=lambda r: r["min_id"])
-    return n, int(canon["dim"]), n - int(canon["cnt"])
+    return n, int(canon["dim"]), n - int(canon["cnt"]) + int(canon["holes"])
 
 
-def embedding_dim_and_dropped(df, col: str = "embedding", id_col: str = "vec_id"):
-    """Canonical embedding dim (the dim of the smallest id — deterministic
-    at any cluster size) plus the COUNT of rows whose dim differs.
-    Round-3 fix (VERDICT r2 wrong #2): the ANN paths previously hardcoded
-    dim=64 and silently routed any other-dim row to bucket -1; a schema
-    drift on a real corpus would silently exclude rows from dedup/search.
-    Callers now derive dim from the data and surface the dropped count."""
-    dim = df.agg(F.min_by(F.size(col), id_col)).first()[0]
-    if dim is None:
-        return 0, 0
-    return int(dim), int(df.filter(F.size(col) != dim).count())
+def dense_embeddings(e, stats: tuple[int, int, int] | None = None):
+    """The embedding-store boundary every ANN path enters through ONCE:
+    (vec_id, embedding) → (dense frame, n, dim). Null vectors, rows
+    whose dim differs from the canonical dim and rows holding a null
+    element are counted by the single emb_stats job (or by `stats`, a
+    caller's emb_stats result), warned about once, and filtered out
+    here, so every kernel downstream sees one (n, dim) matrix and
+    carries no per-row shape check or fallback. On a dense store
+    (nothing dropped) the frame is returned untouched — its plan is
+    unchanged. Callers that pass the dense frame on pass (n, dim, 0)
+    as its stats, which makes a nested call a no-op."""
+    n, dim, dropped = emb_stats(e) if stats is None else stats
+    if dropped:
+        import warnings
+
+        warnings.warn(
+            f"embedding store: {dropped} rows dropped "
+            f"(null, embedding dim != {dim}, or a null element)",
+            stacklevel=2,
+        )
+        e = e.filter(
+            (F.size("embedding") == dim)
+            & ~F.exists("embedding", lambda x: x.isNull())
+        )
+    return e, n - dropped, dim
 
 
 def _hyperplane_buckets_udf(dim: int, n_planes: int = _LSH_PLANES):
@@ -477,9 +484,8 @@ def _hyperplane_buckets_udf(dim: int, n_planes: int = _LSH_PLANES):
     (distinct id spaces per table, so a plain explode+equi-join unions
     the tables). Seeded per (dim, n_planes) — deterministic across
     partitions / executors; n_planes comes from _adaptive_planes so the
-    per-table bucket space scales with the store (round 5). Rows whose
-    dim differs get bucket -1 (filtered out downstream; the count is
-    surfaced by embedding_dim_and_dropped)."""
+    per-table bucket space scales with the store. Input rows are dense
+    `dim`-d vectors (see dense_embeddings)."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def buckets(embs: pd.Series) -> pd.Series:
@@ -488,25 +494,12 @@ def _hyperplane_buckets_udf(dim: int, n_planes: int = _LSH_PLANES):
         )
         weights = 1 << np.arange(n_planes, dtype=np.int64)
         base = (np.arange(_LSH_TABLES, dtype=np.int64) << n_planes)
-        out: list[list[int] | None] = []
-        ok_rows, mats = [], []
-        for i, e in enumerate(embs):
-            v = np.asarray(e, dtype=np.float64)
-            if v.shape == (dim,):
-                ok_rows.append(i)
-                mats.append(v)
-            out.append([-1] * _LSH_TABLES)
-        if mats:
-            proj = np.stack(mats) @ planes.T  # (B, tables·planes)
-            bits = (proj > 0).astype(np.int64).reshape(len(mats), _LSH_TABLES, n_planes)
-            ids = (bits * weights[None, None, :]).sum(axis=2) + base[None, :]
-            for row, i in enumerate(ok_rows):
-                out[i] = [int(x) for x in ids[row]]
-        return pd.Series(out)
+        X = np.stack(embs.to_list()).astype(np.float64)
+        bits = (X @ planes.T > 0).astype(np.int64).reshape(len(X), _LSH_TABLES, n_planes)
+        ids = (bits * weights[None, None, :]).sum(axis=2) + base[None, :]
+        return pd.Series(ids.tolist())
 
     return buckets
-
-
 
 
 @q("d06_ann_lsh_bucketed")  # ⊘ rows-only (approximate; recall gated by d14)
@@ -556,56 +549,31 @@ def _cosine(ca, cb):
     return dot / norm(ca) / norm(cb)
 
 
-def _cos_fold_f64(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """Batch cosine with the SAME float64 operation order as the JVM
-    fold expressions (_cosine/_cosine_pre): dot, |a|², |b|² each
-    accumulate left-to-right over the dim axis (one vectorized add per
-    dim preserves the per-row op order exactly), sqrt is IEEE correctly
-    rounded in both numpy and Java, and the division order is
-    dot / |a| / |b| — so every double is bit-identical to the
-    interpreted fold it replaces (asserted by tests and the golden
-    oracle sweep)."""
-    n, d = A.shape
-    acc = np.zeros(n, dtype=np.float64)
-    na = np.zeros(n, dtype=np.float64)
-    nb = np.zeros(n, dtype=np.float64)
-    for j in range(d):
-        a = A[:, j]
-        b = B[:, j]
-        acc += a * b
-        na += a * a
-        nb += b * b
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return acc / np.sqrt(na) / np.sqrt(nb)
+def _fold_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """The one numpy cosine kernel: Σ_j A[j]·B[j] in float64, summed
+    left to right over the LEADING (dim) axis, with numpy broadcasting
+    over the rest. It is the JVM fold's exact operation order (_cosine:
+    aggregate from 0.0, adding x·y per element in dim order), so with
+    A is B it gives the squared norm, and for (dim, n) pairs, (dim, q,
+    1) × (dim, 1, n) grids or (dim, B, 1) × (dim, 1, K) centroid
+    tables it gives every dot product bit-identical to the JVM's.
+    Callers take sqrt (IEEE correctly rounded in numpy and Java alike)
+    and divide in their own order. Inputs are dense (see
+    dense_embeddings)."""
+    shape = np.broadcast_shapes(A.shape, B.shape)
+    acc = np.zeros(shape[1:], dtype=np.float64)
+    for j in range(shape[0]):
+        acc += A[j] * B[j]
+    return acc
 
 
 def _arrow_list_to_2d(col):
-    """Arrow list<float|double> column → (n, d) float64 matrix, or None
-    when the column is ragged / has nulls (caller falls back to the
-    exact per-row fold). Zero-copy flatten: the list values are one
-    contiguous buffer, so no per-row object materialization happens."""
-    import pyarrow as pa
-
-    if pa.types.is_fixed_size_list(col.type):
-        if col.null_count:
-            return None
-        d = col.type.list_size
-        vals = col.values.to_numpy(zero_copy_only=False)
-        return vals.reshape(len(col), d).astype(np.float64, copy=False)
-    offs = col.offsets.to_numpy()
-    widths = np.diff(offs)
-    if col.null_count or len(widths) == 0 or not (widths == widths[0]).all():
-        return None
-    d = int(widths[0])
-    if d == 0:
-        return None
-    vals = col.values.to_numpy(zero_copy_only=False)
-    start = int(offs[0])
-    return (
-        vals[start : start + len(col) * d]
-        .reshape(len(col), d)
-        .astype(np.float64, copy=False)
-    )
+    """Arrow list<float|double> column of a dense store → (n, d)
+    float64 matrix. flatten() honours a sliced array's offset, and the
+    list values are one contiguous buffer, so no per-row object
+    materialization happens."""
+    vals = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    return vals.reshape(len(col), len(vals) // max(len(col), 1))
 
 
 def _pair_cosine_arrow(df, id1: str, id2: str, a_col: str, b_col: str):
@@ -617,48 +585,21 @@ def _pair_cosine_arrow(df, id1: str, id2: str, a_col: str, b_col: str):
     interpreted Catalyst — ~64 boxed lambda evaluations per pair, and
     the ANN candidate joins score millions of pairs (sf1: ~12M for
     d15). One Arrow crossing of (two ids + two 64-float vectors) per
-    pair feeds a numpy loop over the dim axis instead; the op order is
-    preserved per row (see _cos_fold_f64) so results are bit-identical
-    — this is a pure execution-engine swap, not an algorithm change.
-    Ragged / null vector rows take an exact per-row Python fold with
-    the same op order (never hit on the canonical-dim-filtered ANN
-    paths; kept for safety)."""
-    import math
-
+    pair feeds _fold_dot over the dim axis instead, with the fold's
+    division order dot / |a| / |b|, so results are bit-identical —
+    this is a pure execution-engine swap, not an algorithm change."""
     sel = df.select(id1, id2, a_col, b_col)
 
     def fn(it):
         import pyarrow as pa
 
         for batch in it:
-            A = _arrow_list_to_2d(batch.column(2))
-            B = _arrow_list_to_2d(batch.column(3))
-            if A is not None and B is not None and A.shape == B.shape:
-                cos = _cos_fold_f64(A, B)
-                out = pa.array(cos, type=pa.float64())
-            else:  # exact same fold, row at a time (ragged/null safety)
-                a_rows = batch.column(2).to_pylist()
-                b_rows = batch.column(3).to_pylist()
-                vals: list[float | None] = []
-                for a, b in zip(a_rows, b_rows):
-                    if a is None or b is None:
-                        vals.append(None)
-                        continue
-                    acc = na = nb_ = 0.0
-                    for x, y in zip(a, b):
-                        x = float(x)
-                        y = float(y)
-                        acc = acc + x * y
-                        na = na + x * x
-                        nb_ = nb_ + y * y
-                    da, db_ = math.sqrt(na), math.sqrt(nb_)
-                    v = np.float64(acc)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        v = v / np.float64(da) / np.float64(db_)
-                    vals.append(float(v))
-                out = pa.array(vals, type=pa.float64())
+            A = _arrow_list_to_2d(batch.column(2)).T
+            B = _arrow_list_to_2d(batch.column(3)).T
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = _fold_dot(A, B) / np.sqrt(_fold_dot(A, A)) / np.sqrt(_fold_dot(B, B))
             yield pa.RecordBatch.from_arrays(
-                [batch.column(0), batch.column(1), out],
+                [batch.column(0), batch.column(1), pa.array(cos, type=pa.float64())],
                 names=[id1, id2, "cosine"],
             )
 
@@ -675,10 +616,9 @@ def _cell_topk_cosine(qs, data, key: str, margin: float = 2e-4):
     of vector traffic for d15). Here both sides cogroup by `key`, so
     every vector crosses ONCE per cell it belongs to (data: once,
     queries: nprobe times — ~77 MB at sf1), and one numpy pass per
-    cell computes the whole (queries × data) cosine grid with the SAME
-    float64 op order as the JVM fold (see _cos_fold_f64): the dot and
-    both norms accumulate left-to-right over the dim axis, division
-    order dot / |data| / |query| — bit-identical doubles.
+    cell computes the whole (queries × data) cosine grid with _fold_dot,
+    the JVM fold's float64 op order, and division order
+    dot / |data| / |query| — bit-identical doubles.
 
     Output pre-filter (also exact): only rows that can still reach the
     global rounded top-3 are emitted. Per query per cell, a row is
@@ -703,52 +643,13 @@ def _cell_topk_cosine(qs, data, key: str, margin: float = 2e-4):
     def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if not len(left) or not len(right):
             return pd.DataFrame(_empty)
-        qm = [np.asarray(v, dtype=np.float64) for v in left["qe"]]
-        dm = [np.asarray(v, dtype=np.float64) for v in right["embedding"]]
-        dim0 = qm[0].shape
-        if any(v.shape != dim0 for v in qm) or any(v.shape != dim0 for v in dm):
-            # ragged store: exact per-pair fold (never hit on the
-            # canonical-dim-filtered ANN paths; kept for safety)
-            out_q, out_v, out_c = [], [], []
-            for qi, qv in zip(left["q_id"], qm):
-                for vi, dv in zip(right["vec_id"], dm):
-                    if qi == vi or qv.shape != dv.shape:
-                        continue
-                    acc = na = nb = 0.0
-                    for x, y in zip(dv, qv):
-                        acc = acc + float(x) * float(y)
-                        na = na + float(x) * float(x)
-                        nb = nb + float(y) * float(y)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        c = float(
-                            np.float64(acc)
-                            / np.float64(np.sqrt(na))
-                            / np.float64(np.sqrt(nb))
-                        )
-                    out_q.append(int(qi))
-                    out_v.append(int(vi))
-                    out_c.append(c)
-            return pd.DataFrame(
-                {
-                    "q_id": pd.Series(out_q, dtype="int64"),
-                    "vec_id": pd.Series(out_v, dtype="int64"),
-                    "cosine": pd.Series(out_c, dtype="float64"),
-                }
-            )
-        Q = np.stack(qm)
-        Dm = np.stack(dm)
-        n_q, n_d = len(Q), len(Dm)
-        acc = np.zeros((n_q, n_d), dtype=np.float64)
-        qn = np.zeros(n_q, dtype=np.float64)
-        dn = np.zeros(n_d, dtype=np.float64)
-        for j in range(Q.shape[1]):
-            qj = Q[:, j]
-            dj = Dm[:, j]
-            acc += qj[:, None] * dj[None, :]
-            qn += qj * qj
-            dn += dj * dj
+        Q = np.stack(left["qe"].to_list(), axis=1).astype(np.float64)  # (dim, q)
+        Dm = np.stack(right["embedding"].to_list(), axis=1).astype(np.float64)
+        n_d = Dm.shape[1]
+        dn = np.sqrt(_fold_dot(Dm, Dm))
+        qn = np.sqrt(_fold_dot(Q, Q))
         with np.errstate(divide="ignore", invalid="ignore"):
-            cos = (acc / np.sqrt(dn)[None, :]) / np.sqrt(qn)[:, None]
+            cos = (_fold_dot(Q[:, :, None], Dm[:, None, :]) / dn[None, :]) / qn[:, None]
         q_ids = left["q_id"].to_numpy()
         v_ids = right["vec_id"].to_numpy()
         valid = q_ids[:, None] != v_ids[None, :]
@@ -758,7 +659,7 @@ def _cell_topk_cosine(qs, data, key: str, margin: float = 2e-4):
         if n_d >= 3:
             t3 = np.partition(cons, n_d - 3, axis=1)[:, n_d - 3]
         else:
-            t3 = np.full(n_q, -np.inf)
+            t3 = np.full(len(q_ids), -np.inf)
         keep = valid & (np.isnan(cos) | (cos >= (t3 - margin)[:, None]))
         qi, di = np.nonzero(keep)
         return pd.DataFrame(
@@ -815,14 +716,7 @@ def _hyperplane_scored_pairs(emb, stats: tuple[int, int, int] | None = None):
     dropped rows are strictly beaten by ≥3 kept same-bucket rows even
     after F.round(·,4), so the global rounded top-3 per query is
     bit-identical while the dedup+window input shrinks ~3×."""
-    import warnings
-
-    n_rows, dim, dropped = emb_stats(emb) if stats is None else stats
-    if dropped:
-        warnings.warn(
-            f"hyperplane ann: {dropped} rows dropped (embedding dim != {dim})",
-            stacklevel=2,
-        )
+    emb, n_rows, dim = dense_embeddings(emb, stats)
     n_planes = _adaptive_planes(n_rows)
     e = (
         emb.select(
@@ -832,7 +726,6 @@ def _hyperplane_scored_pairs(emb, stats: tuple[int, int, int] | None = None):
                 "bucket"
             ),
         )
-        .filter(F.col("bucket") >= 0)
         .select("bucket", "vec_id", F.xxhash64("vec_id").alias("h"), "embedding")
         .repartition(F.col("bucket"))
     )
@@ -847,11 +740,6 @@ def _hyperplane_scored_pairs(emb, stats: tuple[int, int, int] | None = None):
         bks, idss, hss, embs = [], [], [], []
         for batch in it:
             E = _arrow_list_to_2d(batch.column(3))
-            if E is None:  # ragged store — cannot happen post-filter,
-                # decode row-wise to keep the exact fold anyway
-                E = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in batch.column(3).to_pylist()]
-                )
             bks.append(batch.column(0).to_numpy())
             idss.append(batch.column(1).to_numpy())
             hss.append(batch.column(2).to_numpy())
@@ -861,13 +749,11 @@ def _hyperplane_scored_pairs(emb, stats: tuple[int, int, int] | None = None):
         bk = np.concatenate(bks)
         ids = np.concatenate(idss)
         hs = np.concatenate(hss)
-        M = np.vstack(embs)
-        # per-vector norm, exact fold order (see _cos_fold_f64)
-        norm_acc = np.zeros(len(M), dtype=np.float64)
-        for j in range(M.shape[1]):
-            mj = M[:, j]
-            norm_acc += mj * mj
-        norms = np.sqrt(norm_acc)
+        # dim-major copy so each per-dim accumulation of _fold_dot reads
+        # contiguous memory (column slices of the C-order gather were
+        # cache-miss bound)
+        MT = np.ascontiguousarray(np.vstack(embs).T)
+        norms = np.sqrt(_fold_dot(MT, MT))
         # bucket runs + rep rank by (xxhash64, vec_id) inside each run
         order = np.lexsort((ids, hs, bk))  # bucket-major, then hash rank
         bk_s = bk[order]
@@ -886,18 +772,11 @@ def _hyperplane_scored_pairs(emb, stats: tuple[int, int, int] | None = None):
         out_a, out_b, out_c = [], [], []
         mi_runs = np.concatenate(mi_all)
         ri_runs = np.concatenate(ri_all)
-        # flat exact cosine over all pairs, chunked. MT is the dim-major
-        # copy so each per-dim accumulation reads contiguous memory
-        # (column slices of the C-order gather were cache-miss bound).
-        MT = np.ascontiguousarray(M.T)
+        # flat exact cosine over all pairs, chunked
         cos_flat = np.empty(len(mi_runs), dtype=np.float64)
         for s in range(0, len(mi_runs), pair_chunk):
             e2 = min(s + pair_chunk, len(mi_runs))
-            A = MT[:, mi_runs[s:e2]]
-            B = MT[:, ri_runs[s:e2]]
-            acc = np.zeros(e2 - s, dtype=np.float64)
-            for j in range(M.shape[1]):
-                acc += A[j] * B[j]
+            acc = _fold_dot(MT[:, mi_runs[s:e2]], MT[:, ri_runs[s:e2]])
             ia = ids[mi_runs[s:e2]]
             ib = ids[ri_runs[s:e2]]
             n_first = np.where(ia < ib, norms[mi_runs[s:e2]], norms[ri_runs[s:e2]])
@@ -983,15 +862,7 @@ def _matrix_topk_arrow(emb, q_ids, k: int, cos_batch):
         cand_cos: list[list[np.ndarray]] = [[] for _ in range(n_q)]
         for batch in it:
             ids = batch.column(0).to_numpy()
-            X = _arrow_list_to_2d(batch.column(1))
-            if X is None:
-                X = np.stack(
-                    [
-                        np.asarray(v, dtype=np.float64)
-                        for v in batch.column(1).to_pylist()
-                    ]
-                )
-            cos = cos_batch(X)  # (B, n_q) rounded
+            cos = cos_batch(_arrow_list_to_2d(batch.column(1)))  # (B, n_q) rounded
             key = np.where(np.isnan(cos), np.inf, cos)
             key = np.where(ids[:, None] != qid_arr[None, :], key, -np.inf)
             B = len(ids)
@@ -1049,24 +920,15 @@ def _hyperplane_id_pairs(emb, stats: tuple[int, int, int] | None = None):
     out by ingestion time would systematically under-serve newer docs
     in hot buckets — while a hash rank spreads representation uniformly
     over members; vec_id stays as the deterministic tie-break."""
-    import warnings
-
-    # one grouped agg (emb_stats) yields n + dim + dropped together —
-    # the store is scanned ONCE for sizing, not three times (round 6);
     # n sizes the per-table bucket space (round 5): constant mean
     # occupancy at any n, so candidate volume stays
     # O(n·occupancy·tables) instead of saturating at n·cap·tables
-    n_rows, dim, dropped = emb_stats(emb) if stats is None else stats
-    if dropped:
-        warnings.warn(
-            f"hyperplane ann: {dropped} rows dropped (embedding dim != {dim})",
-            stacklevel=2,
-        )
+    emb, n_rows, dim = dense_embeddings(emb, stats)
     n_planes = _adaptive_planes(n_rows)
     e = emb.select(
         "vec_id",
         F.explode(_hyperplane_buckets_udf(dim, n_planes)("embedding")).alias("bucket"),
-    ).filter(F.col("bucket") >= 0)
+    )
     wb = Window.partitionBy("bucket").orderBy(F.xxhash64("vec_id"), "vec_id")
     reps = (
         e.withColumn("rn", F.row_number().over(wb))
@@ -1091,18 +953,18 @@ def _hyperplane_id_pairs(emb, stats: tuple[int, int, int] | None = None):
 
 def hyperplane_ann(emb):
     """d06's reusable core over any (vec_id, embedding) DataFrame: dim
-    is derived from the data (not hardcoded 64) and wrong-dim rows are
-    counted and warned about, never silently dropped (round-3 fix).
-    Round 4: candidates come from _hyperplane_id_pairs (ids-only
-    shuffle, capped hot buckets); the exact cosine is computed ONCE per
-    undirected pair after a slim join-back, then both query directions
-    are emitted for the per-query top-3 — half the cosine work of the
-    old per-direction join and no duplicate-hit groupBy."""
+    is derived from the data (not hardcoded 64) and rows the store
+    boundary drops are counted and warned about, never silently dropped
+    (see dense_embeddings). The exact cosine is computed
+    ONCE per undirected pair, then both query directions are emitted
+    for the per-query top-3 — half the cosine work of a per-direction
+    join and no duplicate-hit groupBy."""
     # Round 7: pairs are generated AND scored per bucket in one grouped
     # numpy pass (see _hyperplane_scored_pairs) — embeddings cross once
     # per bucket membership instead of twice per candidate pair, and
     # both join-backs disappear; doubles are bit-identical.
-    scored = _hyperplane_scored_pairs(emb).select(
+    emb, n, dim = dense_embeddings(emb)
+    scored = _hyperplane_scored_pairs(emb, (n, dim, 0)).select(
         "ua", "ub", F.round(F.col("cosine"), 4).alias("cosine")
     )
     directed = scored.select(
@@ -1186,60 +1048,35 @@ def _spherical_kmeans(X: np.ndarray, k: int = None, iters: int = None) -> np.nda
     return C
 
 
-def _ivf_centroids(spark, sf, n: int | None = None) -> np.ndarray:
-    """Seeded spherical k-means on a bounded sample — deterministic,
-    bounded driver memory at any corpus size. Round 5: k adapts to the
-    store (_adaptive_ivf_k) and the sample is the max(_IVF_TRAIN_CAP,
-    8·k) lowest-xxhash64(vec_id) rows — a TakeOrdered over a uniform
-    hash, so training is uncorrelated with ingestion-time id assignment
-    (the d06 bucket-cap ADVICE lesson applied to the trainer; below
-    2048 vectors every row is sampled either way, so the measured
-    sf0.001/sf0.01 floors keep their exact round-4 centroids)."""
-    e = t(spark, sf, "embeddings")
-    if n is None:  # callers that already sized the store pass n (round 6)
-        n = e.count()
+def _ivf_centroids(e, sf, n: int) -> np.ndarray:
+    """Flat-IVF centroids for the dense store `e` of `n` vectors,
+    cached per (sf, k): seeded spherical k-means on a bounded sample —
+    deterministic, bounded driver memory at any corpus size. k adapts
+    to the store (_adaptive_ivf_k) and the sample is the
+    max(_IVF_TRAIN_CAP, 8·k) lowest-xxhash64(vec_id) rows (see
+    _train_centroids_df) — a TakeOrdered over a uniform hash, so
+    training is uncorrelated with ingestion-time id assignment (the
+    d06 bucket-cap rule applied to the trainer; below 2048 vectors
+    every row is sampled either way, so the measured sf0.001/sf0.01
+    floors keep their exact centroids)."""
     k = _adaptive_ivf_k(n)
-    cap = max(_IVF_TRAIN_CAP, 8 * k)
-    key = (sf, k, cap)
-    if key in _ivf_cache:
-        return _ivf_cache[key]
-    # vec_id-sorted sample matrix: k-means seeding indexes into X, so
-    # row order must be deterministic AND, for stores at or under the
-    # cap (= the whole store sampled), identical to the round-4 order —
-    # keeping every measured floor's centroids bit-stable.
-    _, vecs = _collect_id_emb(
-        e.orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(cap)
-        .select("vec_id", "embedding")
-    )
-    # Train only on the canonical dim (dim of the first sample vector) —
-    # a stray wrong-dim row must not crash np.stack or skew centroids.
-    X = np.stack([v for v in vecs if v.shape == vecs[0].shape])
-    _ivf_cache[key] = _spherical_kmeans(X, k=k)
+    key = (sf, k)
+    if key not in _ivf_cache:
+        _ivf_cache[key] = _train_centroids_df(e, k)
     return _ivf_cache[key]
 
 
 def _ivf_cells_udf(C: np.ndarray, nprobe: int):
-    """Pandas UDF: embedding → its `nprobe` nearest centroid cells (one
-    batch matmul; centroids ride the closure → shipped once per task)."""
+    """Pandas UDF: dense embedding → its `nprobe` nearest centroid cells
+    (one batch matmul; centroids ride the closure → shipped once per
+    task)."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def cells(embs: pd.Series) -> pd.Series:
-        dim = C.shape[1]
-        out: list[list[int]] = []
-        ok_rows, mats = [], []
-        for i, e in enumerate(embs):
-            v = np.asarray(e, dtype=np.float64)
-            if v.shape == (dim,):
-                ok_rows.append(i)
-                mats.append(v / max(np.linalg.norm(v), 1e-30))
-            out.append([-1])
-        if mats:
-            sims = np.stack(mats) @ C.T
-            top = np.argsort(-sims, axis=1)[:, :nprobe]
-            for row, i in enumerate(ok_rows):
-                out[i] = [int(x) for x in top[row]]
-        return pd.Series(out)
+        X = np.stack(embs.to_list()).astype(np.float64)
+        norms = np.array([np.linalg.norm(v) for v in X])
+        sims = (X / np.maximum(norms, 1e-30)[:, None]) @ C.T
+        return pd.Series(np.argsort(-sims, axis=1)[:, :nprobe].tolist())
 
     return cells
 
@@ -1252,17 +1089,16 @@ def d15(spark, sf):
     probe cells are distinct, so each (q, v) pair matches at most once —
     no dedup aggregate needed. Work scales with cell occupancy × nprobe,
     never corpus²."""
-    e = t_spread(spark, sf, "embeddings")
     # ONE sizing scan shared by trainer and query path (round 6 —
     # VERDICT r5 #4: this used to be a count() in the trainer plus an
     # agg + filter-count inside ivf_topk, three store scans)
-    stats = emb_stats(e)
-    if stats[0] > _IVF2_THRESHOLD:
+    e, n, dim = dense_embeddings(t_spread(spark, sf, "embeddings"))
+    if n > _IVF2_THRESHOLD:
         # past the flat trainer's k cap the two-level coarse quantizer
         # takes over (round 6 — VERDICT r5 #3); every sf at or below
         # the measured decades stays on the flat path bit-for-bit
-        return ivf2_topk(e, stats=stats)
-    return ivf_topk(e, _ivf_centroids(spark, sf, n=stats[0]), stats=stats)
+        return ivf2_topk(e, stats=(n, dim, 0))
+    return ivf_topk(e, _ivf_centroids(e, sf, n), stats=(n, dim, 0))
 
 
 def ivf_topk(e, C: np.ndarray, stats: tuple[int, int, int] | None = None):
@@ -1271,26 +1107,19 @@ def ivf_topk(e, C: np.ndarray, stats: tuple[int, int, int] | None = None):
     cosine re-rank top-3. d29 runs this exact code over the planted
     cluster store where probe coverage makes recall 1.0 by construction,
     licensing a brute-force DuckDB value oracle."""
+    e, _, _ = dense_embeddings(e, stats)
     home = _ivf_cells_udf(C, 1)
     probe = _ivf_cells_udf(C, _IVF_NPROBE)
-    _, _, dropped = emb_stats(e) if stats is None else stats
-    if dropped:
-        import warnings
-
-        warnings.warn(
-            f"IVF ANN: {dropped} rows dropped (embedding dim != centroid dim)",
-            stacklevel=2,
-        )
     data = e.select(
         "vec_id",
         "embedding",
         F.explode(home("embedding")).alias("cell"),
-    ).filter(F.col("cell") >= 0)
+    )
     qs = e.select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("qe"),
         F.explode(probe("embedding")).alias("cell"),
-    ).filter(F.col("cell") >= 0)
+    )
     # Round 7 (guide §8): cogroup by cell instead of joining and scoring
     # per pair — vectors cross the exchange once per cell instead of
     # once per candidate pair (sf1: 77 MB instead of 6 GB), the cosine
@@ -1342,17 +1171,17 @@ _IVF2_LEAF_STRIDE = 1 << 20  # leaf id = tcell * STRIDE + sub (k2 << STRIDE)
 
 
 def _train_centroids_df(e, k: int) -> np.ndarray:
-    """_ivf_centroids' trainer generalized to any (vec_id, embedding)
-    DataFrame (no sf-keyed cache): seeded spherical k-means over the
-    max(_IVF_TRAIN_CAP, 8k) lowest-xxhash64 rows, vec_id-sorted so the
-    centroids are deterministic at any parallelism."""
+    """The IVF trainer over any dense (vec_id, embedding) DataFrame:
+    seeded spherical k-means over the max(_IVF_TRAIN_CAP, 8k)
+    lowest-xxhash64 rows, vec_id-sorted so the centroids are
+    deterministic at any parallelism."""
     cap = max(_IVF_TRAIN_CAP, 8 * k)
     _, vecs = _collect_id_emb(
         e.orderBy(F.xxhash64("vec_id"), "vec_id")
         .limit(cap)
         .select("vec_id", "embedding")
     )
-    X = np.stack([v for v in vecs if v.shape == vecs[0].shape])
+    X = np.stack(vecs)
     return _spherical_kmeans(X, k=min(k, len(X)))
 
 
@@ -1373,8 +1202,7 @@ def _ivf2_sub_centroids(data_top, k2: int):
 
     def train(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id")
-        vecs = [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-        X = np.stack([v for v in vecs if v.shape == vecs[0].shape])
+        X = np.stack(pdf["embedding"].to_list()).astype(np.float64)
         C = _spherical_kmeans(X, k=min(k2, len(X)))
         return pd.DataFrame(
             {
@@ -1412,25 +1240,19 @@ def _ivf2_assign(vecs_top, subc, nsub: int):
         dim = int(cdf["dim"].iloc[0])
         C = np.asarray(cdf["cents"].iloc[0], dtype=np.float64).reshape(k, dim)
         tcell = int(key[0])
-        ids, embs, mats = [], [], []
-        for vid, emb in zip(vdf["vec_id"], vdf["embedding"]):
-            v = np.asarray(emb, dtype=np.float64)
-            if v.shape == (dim,):
-                ids.append(int(vid))
-                embs.append(v)
-                mats.append(v / max(np.linalg.norm(v), 1e-30))
-        if not ids:
-            return empty
-        sims = np.stack(mats) @ C.T
+        X = np.stack(vdf["embedding"].to_list()).astype(np.float64)
+        norms = np.array([np.linalg.norm(v) for v in X])
+        sims = (X / np.maximum(norms, 1e-30)[:, None]) @ C.T
         m = min(nsub, k)
         top = np.argsort(-sims, axis=1, kind="stable")[:, :m]
-        out_id, out_emb, out_leaf = [], [], []
-        for i in range(len(ids)):
-            for s in top[i]:
-                out_id.append(ids[i])
-                out_emb.append(embs[i].tolist())
-                out_leaf.append(tcell * _IVF2_LEAF_STRIDE + int(s))
-        return pd.DataFrame({"vec_id": out_id, "embedding": out_emb, "leaf": out_leaf})
+        rows = np.repeat(np.arange(len(X)), m)
+        return pd.DataFrame(
+            {
+                "vec_id": vdf["vec_id"].to_numpy(dtype=np.int64)[rows],
+                "embedding": [X[i].tolist() for i in rows],
+                "leaf": tcell * _IVF2_LEAF_STRIDE + top.ravel(),
+            }
+        )
 
     return vecs_top.groupby("tcell").cogroup(subc.groupby("tcell")).applyInPandas(
         assign, schema="vec_id long, embedding array<double>, leaf long"
@@ -1450,14 +1272,7 @@ def ivf2_topk(
     4dp and ties broken by vec_id."""
     import math
 
-    n, _dim, dropped = emb_stats(e) if stats is None else stats
-    if dropped:
-        import warnings
-
-        warnings.warn(
-            f"IVF2 ANN: {dropped} rows dropped (embedding dim != canonical)",
-            stacklevel=2,
-        )
+    e, n, _ = dense_embeddings(e, stats)
     k_leaf = max(top_probe * sub_probe, n // max(target_cell, 1))
     K1 = min(_IVF_MAX_K, max(2, math.isqrt(max(k_leaf - 1, 1)) + 1))
     k2 = -(-k_leaf // K1)
@@ -1468,12 +1283,12 @@ def ivf2_topk(
     probe = _ivf_cells_udf(C1, min(top_probe, len(C1)))
     data_top = e.select(
         "vec_id", "embedding", F.explode(home("embedding")).alias("tcell")
-    ).filter(F.col("tcell") >= 0)
+    )
     subc = _ivf2_sub_centroids(data_top, k2)
     data = _ivf2_assign(data_top, subc, 1)
     q_top = e.select(
         "vec_id", "embedding", F.explode(probe("embedding")).alias("tcell")
-    ).filter(F.col("tcell") >= 0)
+    )
     qs = _ivf2_assign(q_top, subc, sub_probe).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("qe"),
@@ -1501,21 +1316,8 @@ def _exact_top3(spark, sf):
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
     )
     j = e.crossJoin(F.broadcast(qv)).filter(F.col("vec_id") != F.col("q_id"))
-    dot = F.aggregate(
-        F.zip_with("embedding", "qe", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = lambda c: F.sqrt(
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
     sims = j.select(
-        "q_id", "vec_id",
-        (dot / norm(F.col("embedding")) / norm(F.col("qe"))).alias("cosine"),
+        "q_id", "vec_id", _cosine(F.col("embedding"), F.col("qe")).alias("cosine")
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return sims.withColumn("rn", F.row_number().over(w)).filter(
@@ -2696,7 +2498,8 @@ def embedding_dedup_pipeline(emb, threshold: float):
     same (vec_id, component, keep) answer — the full value oracle for
     the pipeline; d38 does the same over a planted 100-member cluster,
     value-proving the degree cap preserves the keep-set."""
-    pairs = _cap_pair_degree(_hyperplane_id_pairs(emb))
+    emb, n, dim = dense_embeddings(emb)
+    pairs = _cap_pair_degree(_hyperplane_id_pairs(emb, (n, dim, 0)))
     ea = emb.select(F.col("vec_id").alias("ua"), F.col("embedding").alias("ea"))
     eb = emb.select(F.col("vec_id").alias("ub"), F.col("embedding").alias("eb"))
     # exact cosine verify batch-vectorized in Arrow/numpy — bit-identical
@@ -3848,16 +3651,16 @@ def _centroid_assign(e):
         )
 
     # Round 7 (guide §4.2): the K interpreted 64-term dot folds per row
-    # become ONE Arrow pass emitting the K RAW cosines per row — the
-    # per-dim numpy loop preserves the fold's float64 op order and the
-    # dot / |e| / |c| division order, so each raw double is bit-equal.
+    # become ONE Arrow pass emitting the K RAW cosines per row — _fold_dot
+    # preserves the fold's float64 op order and the dot / |e| / |c|
+    # division order is kept, so each raw double is bit-equal.
     # Rounding and the (cosine, negcid) greatest tie-break STAY JVM-side
     # on element_at of the array, so the selection semantics (Spark
     # HALF_UP round, NaN/null ordering) are byte-for-byte the old ones.
     # Wrong-dim / null rows return a NULL array: element_at(NULL, i) is
     # null exactly like the old zip_with null-fold for those rows.
     dimc = cent_dims.pop()
-    Cm = np.array([[float(x) for x in r.embedding] for r in cents], dtype=np.float64)
+    CmT = np.array([[float(x) for x in r.embedding] for r in cents], dtype=np.float64).T
     cnorms = np.array([norm_lit(r.embedding) for r in cents], dtype=np.float64)
     from pyspark.sql.types import DoubleType
 
@@ -3873,15 +3676,10 @@ def _centroid_assign(e):
                     mats.append(a)
                 out.append(None)
             if mats:
-                X = np.stack(mats)
-                dots = np.zeros((len(X), len(Cm)), dtype=np.float64)
-                nacc = np.zeros(len(X), dtype=np.float64)
-                for j in range(dimc):
-                    xj = X[:, j]
-                    dots += xj[:, None] * Cm[:, j][None, :]
-                    nacc += xj * xj
+                XT = np.stack(mats, axis=1)  # (dim, rows)
+                dots = _fold_dot(XT[:, :, None], CmT[:, None, :])
                 with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = (dots / np.sqrt(nacc)[:, None]) / cnorms[None, :]
+                    cos = (dots / np.sqrt(_fold_dot(XT, XT))[:, None]) / cnorms[None, :]
                 for row, i in enumerate(ok_rows):
                     out[i] = cos[row]
             yield pd.Series(out)
@@ -3994,7 +3792,7 @@ def _cluster_pair_candidates(m, floor: float):
     every within-cluster pair (a_id < b_id, same embedding dim) whose
     RAW cosine is >= floor or NaN — the margin superset d42's exact
     rounded-tau filter then prunes (see d42). Cosines keep the JVM
-    fold's float64 op order exactly (per-dim accumulation, division
+    fold's float64 op order exactly (_fold_dot, division
     dot / |a| / |b|)."""
 
     _empty = {
@@ -4023,19 +3821,13 @@ def _cluster_pair_candidates(m, floor: float):
             ids = ids_all[idxs]
             order = np.argsort(ids, kind="stable")
             ids = ids[order]
-            M = np.stack([embs[idxs[o]] for o in order])
-            n = len(M)
-            nacc = np.zeros(n, dtype=np.float64)
-            for j in range(M.shape[1]):
-                mj = M[:, j]
-                nacc += mj * mj
-            norms = np.sqrt(nacc)
+            MT = np.stack([embs[idxs[o]] for o in order], axis=1)  # (dim, n)
+            n = MT.shape[1]
+            norms = np.sqrt(_fold_dot(MT, MT))
             chunk = max(1, (1 << 22) // max(n, 1))  # ~32 MB grid chunks
             for s in range(0, n - 1, chunk):
                 e_ = min(s + chunk, n - 1)
-                acc = np.zeros((e_ - s, n), dtype=np.float64)
-                for j in range(M.shape[1]):
-                    acc += M[s:e_, j][:, None] * M[:, j][None, :]
+                acc = _fold_dot(MT[:, s:e_, None], MT[:, None, :])
                 with np.errstate(divide="ignore", invalid="ignore"):
                     cos = (acc / norms[s:e_, None]) / norms[None, :]
                 # upper triangle only (a_id < b_id after the id sort)
@@ -4592,16 +4384,16 @@ _PQ_TRAIN_CAP = 2048  # bounded driver-side training sample (faiss shape)
 _pq_cache: dict = {}
 
 
-def _pq_books(spark, sf, n: int, dim: int) -> np.ndarray:
-    """Codebooks from the max(_PQ_TRAIN_CAP, 32·ksub) lowest-
-    xxhash64(vec_id) rows — the _ivf_centroids sampling rule verbatim
-    (uniform-hash TakeOrdered, uncorrelated with id assignment)."""
+def _pq_books(e, sf, n: int, dim: int) -> np.ndarray:
+    """Codebooks for the dense store `e` of `n` `dim`-d vectors, cached
+    per sf, from its max(_PQ_TRAIN_CAP, 32·ksub) lowest-xxhash64(vec_id)
+    rows — the _ivf_centroids sampling rule verbatim (uniform-hash
+    TakeOrdered, uncorrelated with id assignment)."""
     ksub = _pq_ksub(n)
     cap = max(_PQ_TRAIN_CAP, 32 * ksub)
     key = (sf, dim, ksub, cap)
     if key in _pq_cache:
         return _pq_cache[key]
-    e = t(spark, sf, "embeddings").filter(F.size("embedding") == dim)
     _, vecs = _collect_id_emb(
         e.orderBy(F.xxhash64("vec_id"), "vec_id")
         .limit(cap)
@@ -4626,11 +4418,8 @@ def d46(spark, sf):
     LSH/IVF prune CANDIDATES, PQ shrinks the per-candidate cost — a
     production system composes them; here PQ runs as a full compressed
     scan so its recall is measured in isolation."""
-    e = t_spread(spark, sf, "embeddings")
-    n, dim, dropped = emb_stats(e)
-    if dropped:
-        e = e.filter(F.size("embedding") == dim)
-    books = _pq_books(spark, sf, n, dim)
+    e, n, dim = dense_embeddings(t_spread(spark, sf, "embeddings"))
+    books = _pq_books(e, sf, n, dim)
     q_ids, qvecs = _collect_id_emb(
         e.filter(F.col("vec_id") < _RECALL_QUERIES).select("vec_id", "embedding")
     )
@@ -4776,21 +4565,9 @@ def _exact_refine(e, short, queries: np.ndarray, q_ids: list, k: int):
         short.join(e.select("vec_id", "embedding"), "vec_id")
         .join(F.broadcast(qdf), "q_id")
     )
-    dot = F.aggregate(
-        F.zip_with("embedding", "qe", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = lambda c: F.sqrt(
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
     sims = j.select(
         "q_id", "vec_id",
-        F.round(dot / norm(F.col("embedding")) / norm(F.col("qe")), 4).alias("cosine"),
+        F.round(_cosine(F.col("embedding"), F.col("qe")), 4).alias("cosine"),
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return (
@@ -4857,7 +4634,6 @@ def ivfpq_topk(
             F.explode(home("embedding")).alias("cell"),
             _pq_encode_udf(books)("embedding").alias("codes"),
         )
-        .filter(F.col("cell") >= 0)
     )
 
     @F.pandas_udf("double")
@@ -4885,23 +4661,7 @@ def ivfpq_topk(
         .select("q_id", "vec_id")
     )
     # exact refine: only shortlist rows' raw vectors are read back
-    qdf = spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in zip(q_ids, Q)],
-        "q_id long, qe array<double>",
-    )
-    jr = short.join(e.select("vec_id", "embedding"), "vec_id").join(
-        F.broadcast(qdf), "q_id"
-    )
-    sims = jr.select(
-        "q_id", "vec_id",
-        F.round(_cosine(F.col("embedding"), F.col("qe")), 4).alias("cosine"),
-    )
-    w2 = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        sims.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine")
-    )
+    return _exact_refine(e, short, Q, q_ids, k)
 
 
 @q("d49_ann_ivfpq")  # ⊘ rows-only BY DESIGN (doubly approximate: IVF
@@ -4913,12 +4673,9 @@ def d49(spark, sf):
     probed-cell equi join over 8-byte codes; shortlist 32 → exact
     refine. The composition a 10^11-vector deployment actually runs:
     d06/d15 prune candidates OR d46 compresses — this op does both."""
-    e = t_spread(spark, sf, "embeddings")
-    n, dim, dropped = emb_stats(e)
-    if dropped:
-        e = e.filter(F.size("embedding") == dim)
-    C = _ivf_centroids(spark, sf, n=n)
-    books = _pq_books(spark, sf, n, dim)
+    e, n, dim = dense_embeddings(t_spread(spark, sf, "embeddings"))
+    C = _ivf_centroids(e, sf, n)
+    books = _pq_books(e, sf, n, dim)
     q_ids, qvecs = _collect_id_emb(
         e.filter(F.col("vec_id") < _RECALL_QUERIES).select("vec_id", "embedding")
     )
@@ -6548,10 +6305,10 @@ def sq8_minmax(e, dim: int) -> tuple[np.ndarray, np.ndarray]:
     element_at agg's (which was measured ~1 s of interpreted-expression
     overhead at sf1 for 128 agg columns). Spark NaN semantics are
     reproduced explicitly: NaN ranks above every double, so a NaN
-    element wins max and never wins min. A ragged store falls back to
-    the JVM agg (element_at yields null past the end, which min/max
-    skip). At 100 TB this remains the cheapest full-scan agg there is
-    — map-side partials, 2·dim doubles per partition."""
+    element wins max and never wins min. `e` is a dense store of
+    `dim`-d vectors (see dense_embeddings). At 100 TB this remains the
+    cheapest full-scan agg there is — map-side partials, 2·dim doubles
+    per partition."""
 
     def fn(it):
         import pyarrow as pa
@@ -6559,13 +6316,9 @@ def sq8_minmax(e, dim: int) -> tuple[np.ndarray, np.ndarray]:
         mn_p = np.full(dim, np.inf)
         mx_p = np.full(dim, -np.inf)
         has_nan = np.zeros(dim, dtype=bool)
-        ragged = False
         n_seen = 0
         for batch in it:
             X = _arrow_list_to_2d(batch.column(0))
-            if X is None or X.shape[1] != dim:
-                ragged = True
-                break
             n_seen += len(X)
             with np.errstate(invalid="ignore"):
                 import warnings as _w
@@ -6577,32 +6330,17 @@ def sq8_minmax(e, dim: int) -> tuple[np.ndarray, np.ndarray]:
             has_nan |= np.isnan(X).any(axis=0)
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array([1 if ragged else 0], type=pa.int32()),
                 pa.array([[float(x) for x in mn_p]], type=pa.list_(pa.float64())),
                 pa.array([[float(x) for x in mx_p]], type=pa.list_(pa.float64())),
                 pa.array([[bool(x) for x in has_nan]], type=pa.list_(pa.bool_())),
                 pa.array([n_seen], type=pa.int64()),
             ],
-            names=["ragged", "mn", "mx", "nan", "n"],
+            names=["mn", "mx", "nan", "n"],
         )
 
     parts = e.select("embedding").mapInArrow(
-        fn, "ragged int, mn array<double>, mx array<double>, nan array<boolean>, n long"
+        fn, "mn array<double>, mx array<double>, nan array<boolean>, n long"
     ).collect()
-    if any(r["ragged"] for r in parts):
-        row = e.agg(
-            *[
-                F.min(F.element_at("embedding", i + 1)).alias(f"mn{i}")
-                for i in range(dim)
-            ],
-            *[
-                F.max(F.element_at("embedding", i + 1)).alias(f"mx{i}")
-                for i in range(dim)
-            ],
-        ).collect()[0]
-        mn = np.array([row[f"mn{i}"] for i in range(dim)], dtype=np.float64)
-        mx = np.array([row[f"mx{i}"] for i in range(dim)], dtype=np.float64)
-        return mn, mx
     live = [r for r in parts if r["n"]]
     if not live:
         return np.full(dim, np.nan), np.full(dim, np.nan)
@@ -6676,10 +6414,7 @@ def d72(spark, sf):
     compression path a hot 100-TB serving tier uses (no codebook drift,
     re-encode is a pure map). Recall vs the d05 exact twin is gated in
     tests/test_dataops_session4.py."""
-    e = t_spread(spark, sf, "embeddings")
-    _n, dim, dropped = emb_stats(e)
-    if dropped:
-        e = e.filter(F.size("embedding") == dim)
+    e, _, dim = dense_embeddings(t_spread(spark, sf, "embeddings"))
     mn, mx = sq8_minmax(e, dim)
     q_ids, qvecs = _collect_id_emb(
         e.filter(F.col("vec_id") < _RECALL_QUERIES).select("vec_id", "embedding")
