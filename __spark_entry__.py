@@ -84,14 +84,14 @@ def entry(spark: SparkSession) -> DataFrame:
     _ensure_workers(spark)
     from pyspark.sql import functions as F
 
-    from text_extraction_spark.pipeline import extract_text_udf
+    from text_extraction_spark.pipeline import extract_text_udf_timed
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     extracted = docs.select(
         "doc_id",
         "lang",
         "n_chars",
-        extract_text_udf("text").alias("main_text"),
+        extract_text_udf_timed("text")["out_text"].alias("main_text"),
     )
     return (
         extracted.groupBy("lang")

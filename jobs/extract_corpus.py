@@ -4,7 +4,7 @@
   tools/make_dist.sh
   spark-submit --py-files dist/engine.zip jobs/extract_corpus.py \\
       --input /path/to/corpus --output /path/to/out --run-id run1 \\
-      [--buckets 64] [--salt-partitions 256]
+      [--buckets 64] [--salt-partitions N]  # default N: task slots
 
 The corpus dir must contain documents.parquet + media.parquet
 (input_hint shape [B:15]); outputs: extracted/ (bucket-partitioned),
@@ -23,7 +23,12 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--buckets", type=int, default=16)
-    ap.add_argument("--salt-partitions", type=int, default=None)
+    ap.add_argument(
+        "--salt-partitions",
+        type=int,
+        default=None,
+        help="text-path salt partitions (default: the number of task slots)",
+    )
     ap.add_argument("--master", default=None, help="override (tests/local)")
     args = ap.parse_args()
 

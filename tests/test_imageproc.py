@@ -334,17 +334,44 @@ def test_batched_threshold_denoise_equal_per_image():
 def test_batch_media_extract_equals_per_item():
     """The batched media extractor must return exactly what the
     per-item path returns for every media kind (raw/png/rgb/pdf,
-    embedded + skewed), including None for broken payloads."""
+    embedded + skewed), including None for broken payloads, row for
+    row, in any batch order. One degenerate image must not fail its
+    Arrow batch: 0×0, 1-px, thin, truncated and garbage payloads of
+    every format ride along (a 0×0 size group used to raise from np.pad
+    inside the stacked threshold and fail the whole batch)."""
+    from text_extraction_spark.engine.imageproc import encode_png_gray8, encode_png_rgb8
     from text_extraction_spark.pipeline import _extract_media_batch, _extract_one_media
 
     media = [corpus.gen_media(f"img-{i:08d}-0") for i in range(40)]
-    widths = [m.width for m in media] + [10]
-    heights = [m.height for m in media] + [10]
-    fmts = [m.fmt for m in media] + ["png"]
-    datas = [m.data for m in media] + [b"not a png"]
-    got = _extract_media_batch(widths, heights, fmts, datas)
-    want = [
-        _extract_one_media(w, h, f, d)
-        for w, h, f, d in zip(widths, heights, fmts, datas)
+    pdf = next(m for m in media if m.fmt == "pdf")
+    img = next(m for m in media if m.fmt != "pdf")
+    gray = np.zeros((img.height, img.width), np.uint8)
+    rows = [(m.width, m.height, m.fmt, m.data) for m in media] + [
+        (10, 10, "png", b"not a png"),
+        (0, 0, "raw-u8", b""),
+        (0, 0, "raw-u8", b""),
+        (0, 0, "raw-rgb8", b""),
+        (0, 0, "png", encode_png_gray8(np.zeros((0, 0), np.uint8))),
+        (1, 1, "raw-u8", b"\x80"),
+        (1, 1, "raw-rgb8", b"\x10\x20\x30"),
+        (1, 1, "png", encode_png_gray8(np.full((1, 1), 200, np.uint8))),
+        (1, 1, "png", encode_png_rgb8(np.full((1, 1, 3), 200, np.uint8))),
+        (37, 1, "raw-u8", bytes(range(37))),
+        (1, 37, "raw-u8", bytes(range(37))),
+        (5000, 2, "raw-u8", bytes(10000)),
+        (img.width, img.height, "raw-u8", b"\x00" * 100),
+        (img.width, img.height, "raw-rgb8", img.data[:-1]),
+        (img.width, img.height, "png", encode_png_gray8(gray)[:50]),
+        (612, 792, "pdf", pdf.data[: len(pdf.data) // 2]),
+        (612, 792, "pdf", b"%PDF-1.4 garbage"),
+        (5, 5, "tiff", b"x" * 25),
+        (3, 3, "raw-u8", None),
     ]
-    assert got == want
+    rng = np.random.default_rng(7)
+    for order in [np.arange(len(rows))] + [rng.permutation(len(rows)) for _ in range(3)]:
+        batch = [rows[i] for i in order]
+        widths, heights, fmts, datas = (list(c) for c in zip(*batch))
+        got = _extract_media_batch(widths, heights, fmts, datas)
+        want = [_extract_one_media(*r) for r in batch]
+        assert got == want
+        assert sum(v is not None for v in want) >= len(media) // 2

@@ -130,13 +130,14 @@ def test_pdf_udf_matches_expected_on_spark(spark, tiny_corpus):
 
     from pyspark.sql import functions as F
 
-    from text_extraction_spark.pipeline import extract_media_udf
+    from text_extraction_spark.pipeline import extract_media_udf_timed
 
     m = spark.read.parquet(os.path.join(tiny_corpus, "media.parquet")).filter(
         F.col("fmt") == "pdf"
     )
     got = m.select(
-        "media_ref", extract_media_udf("width", "height", "fmt", "data").alias("t")
+        "media_ref",
+        extract_media_udf_timed("width", "height", "fmt", "data")["out_text"].alias("t"),
     )
     exp = spark.read.parquet(os.path.join(tiny_corpus, "pdf_expected.parquet"))
     joined = got.join(exp, "media_ref", "full_outer")

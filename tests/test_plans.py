@@ -95,6 +95,28 @@ def test_salt_repartition_is_aqe_exempt(spark, tiny_corpus):
     assert "REPARTITION_BY_NUM" in plan
 
 
+def test_text_salt_is_sized_by_task_slots(spark, tiny_corpus):
+    """The text path's salted Exchange runs one Python task per task
+    slot (defaultParallelism, 8 under local[8]), not one per shuffle
+    partition (16 here): every Python task pays a fixed worker set-up
+    cost that dwarfs its share of text compute. Still span-level
+    (doc_id, offset) and still REPARTITION_BY_NUM."""
+    import re
+
+    c = pipeline.load_corpus(spark, tiny_corpus)
+    m = pipeline.load_media(spark, tiny_corpus)
+    plan = _plan(pipeline.extract_spans(c, m))
+    salted = [l for l in plan.splitlines() if "hashpartitioning(xxhash64(" in l]
+    assert len(salted) == 1, plan
+    assert re.search(
+        r"Exchange hashpartitioning\(xxhash64\(doc_id#\d+, offset#\d+, 42\), 8\), "
+        r"REPARTITION_BY_NUM",
+        salted[0],
+    ), salted[0]
+    assert spark.sparkContext.defaultParallelism == 8
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "16"
+
+
 def test_resume_read_prunes_committed_buckets(spark, tiny_corpus, tmp_path_factory):
     """Partition pruning on the bucket= layout: a bucket filter must
     reach the file index (partition filters), not scan all buckets."""

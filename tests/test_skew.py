@@ -111,3 +111,20 @@ def test_corpus_skew_fraction_and_oracle_consistency():
         assert out == out2  # deterministic (drop or same text)
         decoded += out is not None
     assert decoded >= 8  # deskew recovers media round 1 dropped
+
+
+def test_rotate_mask_nn_multi_equals_int64_rotation_at_any_size():
+    """The batched rotation keeps int32 fixed-point math only while it is
+    exact: on a thin, very wide (or tall) mask the products c·dx pass
+    2^31 (from max(h, w) ≈ 2^15), where int32 would wrap and sample the
+    wrong pixels. Every shape must equal the int64 single-angle rotation
+    per angle — the fixture-scale page and 4×70 000 / 70 000×4 masks
+    (small in memory; 4×40 000 still fits int32)."""
+    rng = np.random.default_rng(3)
+    angles = [-3.0, -0.5, 0.0, 0.7, 2.5]
+    for shape in [(60, 180), (4, 70_000), (70_000, 4)]:
+        mask = (rng.random(shape) < 0.3).astype(np.uint8)
+        got = imageproc.rotate_mask_nn_multi(mask, angles)
+        assert got.shape == (len(angles), *shape)
+        for k, a in enumerate(angles):
+            assert np.array_equal(got[k], imageproc.rotate_mask_nn(mask, a)), (shape, a)

@@ -75,11 +75,23 @@ def register_extraction_functions(spark: SparkSession) -> None:
         SELECT tes_simhash(text)                  -- d03 64-bit SimHash
         SELECT tes_minhash(text)                  -- d02 MinHash signature
     The same fused Arrow UDFs the pipeline/queries use — one
-    registration, any SQL surface (spark.sql, thrift, notebooks)."""
+    registration, any SQL surface (spark.sql, thrift, notebooks). The
+    extraction UDFs register under `*_timed` names returning the
+    pipeline's (out_text, proc_ms) struct; the plain names are SQL
+    functions selecting `out_text` from them (still one Python crossing)."""
     from .dataops import minhash_sig_udf, simhash_udf
-    from .pipeline import extract_media_udf, extract_text_udf
+    from .pipeline import extract_media_udf_timed, extract_text_udf_timed
 
-    spark.udf.register("tes_extract_main", extract_text_udf)
-    spark.udf.register("tes_extract_table", extract_media_udf)
+    spark.udf.register("tes_extract_main_timed", extract_text_udf_timed)
+    spark.udf.register("tes_extract_table_timed", extract_media_udf_timed)
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY FUNCTION tes_extract_main(text STRING) "
+        "RETURNS STRING RETURN tes_extract_main_timed(text).out_text"
+    )
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY FUNCTION tes_extract_table("
+        "width INT, height INT, fmt STRING, data BINARY) RETURNS STRING "
+        "RETURN tes_extract_table_timed(width, height, fmt, data).out_text"
+    )
     spark.udf.register("tes_simhash", simhash_udf)
     spark.udf.register("tes_minhash", minhash_sig_udf)

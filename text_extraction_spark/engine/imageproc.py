@@ -548,15 +548,17 @@ def rotate_mask_nn_multi(mask: np.ndarray, angles: list[float]) -> np.ndarray:
     Returns an (A, h, w) array."""
     h, w = mask.shape
     cy, cx = (h - 1) // 2, (w - 1) // 2
-    # int32 throughout (round 7): |c|,|s| <= 2^16 and |dx|,|dy| < 2^11
-    # for any fixture-scale image, so every product and sum stays well
-    # under 2^27 — identical integers at half the memory traffic of the
-    # old int64 path (this multi-rotate was ~24% of the skew fallback).
-    dy = np.arange(h, dtype=np.int32) - np.int32(cy)
-    dx = np.arange(w, dtype=np.int32) - np.int32(cx)
+    # int32 while exact (round 7): |c|,|s| <= 2^16 and |dx| + |dy| <=
+    # max(h, w), so |c·dx + s·dy| + 2^15 < 2^31 whenever max(h, w) < 2^15
+    # — identical integers at half the memory traffic of int64 (this
+    # multi-rotate was ~24% of the skew fallback). int64 above that, so
+    # an oversized scan rotates exactly instead of wrapping around.
+    dt = np.int64 if max(h, w) >= 1 << 15 else np.int32
+    dy = np.arange(h, dtype=dt) - dt(cy)
+    dx = np.arange(w, dtype=dt) - dt(cx)
     rad = [np.deg2rad(a) for a in angles]
-    cs = np.array([int(round(np.cos(a) * _FIX)) for a in rad], dtype=np.int32)
-    ss = np.array([int(round(np.sin(a) * _FIX)) for a in rad], dtype=np.int32)
+    cs = np.array([int(round(np.cos(a) * _FIX)) for a in rad], dtype=dt)
+    ss = np.array([int(round(np.sin(a) * _FIX)) for a in rad], dtype=dt)
     sx = (
         (cs[:, None, None] * dx[None, None, :])
         + (ss[:, None, None] * dy[None, :, None])
@@ -567,8 +569,8 @@ def rotate_mask_nn_multi(mask: np.ndarray, angles: list[float]) -> np.ndarray:
         + (cs[:, None, None] * dy[None, :, None])
         + _FIX // 2
     ) >> 16
-    sx += np.int32(cx)
-    sy += np.int32(cy)
+    sx += dt(cx)
+    sy += dt(cy)
     ok = (sy >= 0) & (sy < h) & (sx >= 0) & (sx < w)
     out = mask[np.clip(sy, 0, h - 1), np.clip(sx, 0, w - 1)]
     out[~ok] = 0

@@ -53,11 +53,11 @@ def q(name: str, sql: str | None = None):
 def x01(spark, sf):
     """A5+A6+A14 fused UDF over flat documents: single zero-link block →
     Kohlschütter keeps iff words > 16; dropped docs are filtered."""
-    from .pipeline import extract_text_udf
+    from .pipeline import extract_text_udf_timed
 
     return (
         t_spread(spark, sf, "documents")
-        .select("doc_id", extract_text_udf("text").alias("main_text"))
+        .select("doc_id", extract_text_udf_timed("text")["out_text"].alias("main_text"))
         .filter(F.col("main_text").isNotNull())
     )
 
@@ -179,12 +179,14 @@ def x06(spark, sf):
     media_golden.parquet — the single-process oracle's per-media outputs
     — so a hash match proves the distributed extraction is bit-equal for
     every media kind (raw/png/color/pdf/embedded/skewed)."""
-    from .pipeline import extract_media_udf
+    from .pipeline import extract_media_udf_timed
 
     m = spark.read.parquet(os.path.join(corpus_dir(), "media.parquet"))
     return m.select(
         "media_ref",
-        extract_media_udf("width", "height", "fmt", "data").alias("table_text"),
+        extract_media_udf_timed("width", "height", "fmt", "data")["out_text"].alias(
+            "table_text"
+        ),
     )
 
 
@@ -203,14 +205,16 @@ def x08(spark, sf):
     lossless, so the DuckDB twin reads the generation-time expected text
     (pdf_expected.parquet) — a full value-hash oracle, not rows-only:
     a match proves the distributed byte-stream parse equals truth."""
-    from .pipeline import extract_media_udf
+    from .pipeline import extract_media_udf_timed
 
     m = spark.read.parquet(os.path.join(corpus_dir(), "media.parquet")).filter(
         F.col("fmt") == "pdf"
     )
     return m.select(
         "media_ref",
-        extract_media_udf("width", "height", "fmt", "data").alias("pdf_text"),
+        extract_media_udf_timed("width", "height", "fmt", "data")["out_text"].alias(
+            "pdf_text"
+        ),
     )
 
 
@@ -237,12 +241,12 @@ def x09(spark, sf):
     whole-stage-codegen string work after the one Arrow UDF pass; no
     extra shuffle is introduced (narrow explode), so the op inherits
     the media path's scan partitioning at any corpus size."""
-    from .pipeline import extract_media_udf
+    from .pipeline import extract_media_udf_timed
 
     m = spark.read.parquet(os.path.join(corpus_dir(), "media.parquet"))
     tt = m.select(
         "media_ref",
-        extract_media_udf("width", "height", "fmt", "data").alias("tt"),
+        extract_media_udf_timed("width", "height", "fmt", "data")["out_text"].alias("tt"),
     ).filter(F.col("tt").isNotNull())
     rows = tt.select(
         "media_ref",

@@ -16,12 +16,24 @@ Physical design (SURVEY §3.2 / §4):
                       offset) dissolves media-heavy-document skew; AQE
                       cannot do this because Python-UDF cost is opaque
                       to it (and the repartition is REPARTITION_BY_NUM,
-                      exempt from AQE coalescing).
+                      exempt from AQE coalescing). It is sized by task
+                      slots (sparkContext.defaultParallelism), not by
+                      spark.sql.shuffle.partitions: see Stage 3.
   Stage 3 (UDFs)      one fused Arrow pandas UDF per path — each span
                       crosses the JVM⇄Python boundary exactly once
                       (A5+A6 for text; A7–A14 for media, which runs AT
                       SCAN PARTITIONING so image bytes never shuffle —
                       only (media_ref, extracted text) joins to spans).
+                      Python stages run one task per slot, in one wave:
+                      every Python task pays a fixed 0.2–0.3 s of worker
+                      CPU before its first row (measured on a 4-core
+                      local[4] session, even for an empty task; ~96% of
+                      it is pyspark's per-task setup_spark_files →
+                      importlib.invalidate_caches(), which re-lists a
+                      zipped pyspark once per cached zip importer),
+                      while text compute is ~0.08 ms per span: 32 text
+                      tasks on 4 slots spent ~8 s of worker CPU in
+                      set-up against ~1.2 s of extraction.
                       A17 timing rides inside the UDF return struct;
                       partition ids are stamped JVM-side in the same
                       stage (even=text / odd=media).
@@ -119,7 +131,8 @@ def extract_text_udf_timed(texts: Iterator[pd.Series]) -> Iterator[pd.DataFrame]
     per-row share of the batch's Python wall — summing per partition
     reconstructs partition wall time; a separate mapInPandas tap would
     cost a second full Python crossing and block filter pushdown).
-    out_text NULL = span dropped (every block boilerplate)."""
+    out_text NULL = span dropped (every block boilerplate). The one text
+    UDF: callers that want only the string select its `out_text`."""
     for batch in texts:
         t0 = time.monotonic()
         vals = [
@@ -129,19 +142,6 @@ def extract_text_udf_timed(texts: Iterator[pd.Series]) -> Iterator[pd.DataFrame]
         dt_ms = (time.monotonic() - t0) * 1000.0
         yield pd.DataFrame(
             {"out_text": pd.Series(vals, dtype="object"), "proc_ms": dt_ms / max(len(batch), 1)}
-        )
-
-
-@F.pandas_udf(StringType())
-def extract_text_udf(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Plain-string variant of the fused text path (entry/flagship use)."""
-    for batch in texts:
-        yield pd.Series(
-            [
-                (normalize_text(extract_main(s)) or None) if s is not None else None
-                for s in batch
-            ],
-            dtype="object",
         )
 
 
@@ -169,8 +169,10 @@ def _extract_media_batch(widths, heights, fmts, datas) -> list:
     cost ~size-group-fold. Per-image semantics are preserved exactly —
     the batch ops are the 2-D ops with a leading axis (asserted
     element-equal in tests), decode/PDF/grid failures stay isolated to
-    their own row (each per-image step keeps its own try/except), and
-    the downstream grid/fallback decode is the unchanged per-image
+    their own row (each per-image step keeps its own try/except), a
+    size group whose stacked pass raises (e.g. 0×0 images, where
+    np.pad cannot reflect) falls back to _extract_one_media for that group's rows only,
+    and the downstream grid/fallback decode is the unchanged per-image
     path (ocr.extract_table_from_mask)."""
     import numpy as np
 
@@ -195,9 +197,15 @@ def _extract_media_batch(widths, heights, fmts, datas) -> list:
             continue
         grays[i] = g
         groups.setdefault(g.shape, []).append(i)
-    for shape, idxs in groups.items():
-        stack = np.stack([grays[i] for i in idxs])
-        masks = denoise_batch(adaptive_threshold_batch(stack))
+    for idxs in groups.values():
+        try:
+            masks = denoise_batch(
+                adaptive_threshold_batch(np.stack([grays[i] for i in idxs]))
+            )
+        except Exception:
+            for i in idxs:
+                out[i] = _extract_one_media(widths[i], heights[i], fmts[i], datas[i])
+            continue
         for j, i in enumerate(idxs):
             try:
                 out[i] = extract_table_from_mask(masks[j]) or None
@@ -228,20 +236,6 @@ def extract_media_udf_timed(
         )
 
 
-@F.pandas_udf(StringType())
-def extract_media_udf(
-    it: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series]],
-) -> Iterator[pd.Series]:
-    """Plain-string variant of the fused media path (standalone OCR query)."""
-    for width, height, fmt, data in it:
-        yield pd.Series(
-            _extract_media_batch(
-                width.to_numpy(), height.to_numpy(), fmt.tolist(), data.tolist()
-            ),
-            dtype="object",
-        )
-
-
 # The extraction UDFs ARE deterministic (bit-deterministic, asserted by
 # tests), but they are marked nondeterministic ON PURPOSE: otherwise
 # Catalyst pushes `isNotNull(out_text)` filters below the salt
@@ -251,8 +245,6 @@ def extract_media_udf(
 # pushdown/collapse THROUGH the UDF; results and retries are unaffected.
 extract_text_udf_timed = extract_text_udf_timed.asNondeterministic()
 extract_media_udf_timed = extract_media_udf_timed.asNondeterministic()
-extract_text_udf = extract_text_udf.asNondeterministic()
-extract_media_udf = extract_media_udf.asNondeterministic()
 
 
 # ------------------------------------------------------------------ pipeline
@@ -282,9 +274,11 @@ def extract_spans(
     with out_text NULL for dropped spans (kept here so metrics can count
     drops; filtered by reassemble()).
     """
-    spark = corpus.sparkSession
     if salt_partitions is None:
-        salt_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        # one text task per task slot, in a single wave: each Python task
+        # costs a fixed 0.2–0.3 s of worker set-up, while a text span
+        # costs ~0.08 ms of compute (module docstring, Stage 3)
+        salt_partitions = corpus.sparkSession.sparkContext.defaultParallelism
 
     spans = corpus.select(
         "doc_id", F.explode("spans").alias("s")
