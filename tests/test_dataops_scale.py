@@ -60,6 +60,24 @@ def test_ann_bucket_cap_degenerate_store(spark):
     assert n_pairs == cap * (cap - 1) // 2 + cap * (n - cap)
 
 
+def test_ann_grid_scorer_degenerate_store(spark):
+    """d06's grid scorer on the degenerate store: 10 000 identical
+    vectors form one 10 000-member bucket per table, which the scorer
+    splits across fold calls. Every query still gets exactly 3
+    neighbours at cosine 1.0, none of them itself."""
+    n = 10_000
+    emb = spark.createDataFrame(
+        [(i, [1.0, -0.5] * 8) for i in range(n)],
+        "vec_id long, embedding array<double>",
+    )
+    rows = dataops.hyperplane_ann(emb).collect()
+    per_q = {}
+    for r in rows:
+        per_q[r.q_id] = per_q.get(r.q_id, 0) + 1
+    assert len(per_q) == n and set(per_q.values()) == {3}
+    assert all(r.cosine == 1.0 and r.q_id != r.vec_id for r in rows)
+
+
 def test_ann_bucket_cap_connectivity(spark):
     """d26 semantics on a degenerate bucket: the capped pairs must keep
     every member connected (through the representative set) so
@@ -611,13 +629,80 @@ def test_ragged_store_dedup_equals_dense_rows(spark):
     assert got == _dedup_rows(dense)
 
 
+def _dirty_16d_store(spark):
+    """(X, clean, dirty): 16-d stores of 200 seeded rows X, the first 40 in 10
+    near-duplicate groups of 4, and the dirty store adds an all-zero
+    row, a row with a NaN element and one with a +inf element (the last
+    two are copies of group members)."""
+    rng = np.random.default_rng(21)
+    X = rng.standard_normal((200, 16))
+    for g in range(10):
+        X[4 * g : 4 * g + 4] = X[4 * g] + 0.05 * rng.standard_normal((4, 16))
+    rows = [(i, i % 5, [float(x) for x in v]) for i, v in enumerate(X)]
+    nan_row, inf_row = list(rows[1][2]), list(rows[5][2])
+    nan_row[4], inf_row[2] = float("nan"), float("inf")
+    dirty = rows + [(900, 0, [0.0] * 16), (901, 1, nan_row), (902, 2, inf_row)]
+    schema = "vec_id long, label int, embedding array<double>"
+    return X, spark.createDataFrame(rows, schema), spark.createDataFrame(dirty, schema)
+
+
+def test_embedding_contract_drops_zero_and_non_finite_rows(spark, tmp_path):
+    """An all-zero vector has no cosine, and a NaN or inf element makes
+    every cosine of its row NaN (or raises under ANSI mode in the JVM
+    fold). The store boundary counts and drops such rows, so every
+    exact-kernel path answers exactly as on the store without them."""
+    import warnings
+
+    X, clean, dirty = _dirty_16d_store(spark)
+    C = dataops._spherical_kmeans(X, k=8)
+    books = dataops._pq_train(X, m=4, ksub=8)
+    Q, q_ids = X[:10], list(range(10))
+
+    def sq8(df):
+        e, _, dim = dataops.dense_embeddings(df)
+        mn, mx = dataops.sq8_minmax(e, dim)
+        return dataops.sq8_refined_topk(e, Q, q_ids, mn, mx)
+
+    def pq_(df):
+        e, _, _ = dataops.dense_embeddings(df)
+        return dataops.pq_refined_topk(e, Q, q_ids, books)
+
+    for tag, df in (("clean", clean), ("dirty", dirty)):
+        df.write.parquet(str(tmp_path / tag / "embeddings.parquet"))
+
+    def query(fn):
+        return lambda df: fn(spark, str(tmp_path / ("dirty" if df is dirty else "clean")))
+
+    paths = {
+        "hyperplane_ann": dataops.hyperplane_ann,
+        "ivf_topk": lambda df: dataops.ivf_topk(df, C),
+        "embedding_dedup_pipeline": lambda df: dataops.embedding_dedup_pipeline(
+            df.select("vec_id", "embedding"), threshold=0.9
+        ),
+        "sq8_refined_topk": sq8,
+        "pq_refined_topk": pq_,
+        "_centroid_assign": dataops._centroid_assign,
+        "d05": query(dataops.d05),
+        "d12": query(dataops.d12),
+        "d42": query(dataops.d42),
+    }
+    for name, path in paths.items():
+        want = sorted(tuple(r) for r in path(clean).collect())
+        with warnings.catch_warnings(record=True) as w:
+            warnings.simplefilter("always")
+            got = sorted(tuple(r) for r in path(dirty).collect())
+        assert any("3 rows dropped" in str(x.message) for x in w), name
+        assert got == want, name
+        assert want, name
+
+
 def test_fold_kernel_matches_jvm_cosine_bitwise(spark):
     """The numpy kernel in its pair shape (_pair_cosine_arrow) and grid
     shape (_cell_topk_cosine with the margin filter disabled) returns
-    exactly the doubles of the JVM _cosine fold — no rounding. A zero
-    vector divides by a zero norm: numpy yields NaN, and the JVM, which
-    raises under ANSI mode, yields null with ANSI off, in the same
-    places (the grid shape's pandas return carries NaN as null)."""
+    exactly the doubles of the JVM _cosine fold — no rounding. In the
+    pair shape a zero vector divides by a zero norm: numpy yields NaN,
+    and the JVM, which raises under ANSI mode, yields null with ANSI
+    off, in the same places."""
     import math
 
     rng = np.random.default_rng(5)
@@ -654,14 +739,17 @@ def test_fold_kernel_matches_jvm_cosine_bitwise(spark):
     assert all(same(pair[k], jvm[k]) for k in jvm)
     assert sum(math.isnan(c) for c in pair.values()) == 2 * (len(X) - 1)
 
+    # the grid shape runs behind the store boundary, which drops the
+    # zero row 7 (test_embedding_contract_drops_zero_and_non_finite_rows)
     cell = F.col("vec_id") % 2
-    qs = emb.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe"), cell.alias("c"))
-    data = emb.select("vec_id", "embedding", cell.alias("c"))
+    dense = emb.filter(F.col("vec_id") != 7)
+    qs = dense.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe"), cell.alias("c"))
+    data = dense.select("vec_id", "embedding", cell.alias("c"))
     grid = {
         (r.vec_id, r.q_id): r.cosine
         for r in dataops._cell_topk_cosine(qs, data, "c", margin=float("inf")).collect()
     }
-    want = {k: v for k, v in jvm.items() if k[0] % 2 == k[1] % 2}
+    want = {k: v for k, v in jvm.items() if k[0] % 2 == k[1] % 2 and 7 not in k}
     assert grid.keys() == want.keys()
     assert all(same(grid[k], want[k]) for k in want)
 

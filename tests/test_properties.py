@@ -5,7 +5,7 @@ test_pipeline.py)."""
 import string
 
 import numpy as np
-from hypothesis import given, settings, strategies as st
+from hypothesis import given, seed, settings, strategies as st
 
 from text_extraction_spark.corpus import stable_hash
 from text_extraction_spark.engine.boilerplate import classify
@@ -136,3 +136,62 @@ def test_minhash_signature_batch_composition_invariant(texts, split):
         else minhash_sig_udf.func(pd.Series(texts[:cut])).tolist()
     )
     assert whole == parts
+
+
+_MEDIA_FMTS = ("raw-u8", "raw-rgb8", "png", "pdf", "tiff")
+
+
+@st.composite
+def media_batches(draw):
+    """Random batches of (width, height, fmt, payload): real corpus media
+    and random pixels of every format at 0×0, 1-px, thin and small
+    sizes, each payload intact, truncated, garbage, empty or None."""
+    from text_extraction_spark import corpus
+    from text_extraction_spark.engine.imageproc import encode_png_gray8, encode_png_rgb8
+
+    rows = []
+    for _ in range(draw(st.integers(1, 8))):
+        if draw(st.booleans()):
+            m = corpus.gen_media(f"img-{draw(st.integers(0, 30)):08d}-0")
+            w, h, fmt, data = m.width, m.height, m.fmt, m.data
+        else:
+            fmt = draw(st.sampled_from(_MEDIA_FMTS))
+            w = draw(st.sampled_from((0, 1, 2, 37, 64)))
+            h = draw(st.sampled_from((0, 1, 3, 48)))
+            rng = np.random.default_rng(draw(st.integers(0, 2**16)))
+            px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+            data = {
+                "raw-u8": lambda: px[:, :, 0].tobytes(),
+                "raw-rgb8": lambda: px.tobytes(),
+                "png": lambda: (
+                    encode_png_rgb8(px) if draw(st.booleans()) else encode_png_gray8(px[:, :, 0])
+                ),
+                "pdf": lambda: b"%PDF-1.4\n" + px.tobytes()[:64],
+                "tiff": lambda: px.tobytes(),
+            }[fmt]()
+        kind = draw(st.sampled_from(("intact", "truncated", "garbage", "empty", "none")))
+        if kind == "truncated":
+            data = data[: draw(st.integers(0, max(len(data) - 1, 0)))]
+        elif kind == "garbage":
+            data = draw(st.binary(max_size=64))
+        elif kind == "empty":
+            data = b""
+        elif kind == "none":
+            data = None
+        rows.append((w, h, fmt, data))
+    return rows
+
+
+@seed(20240511)
+@given(media_batches())
+@settings(max_examples=40, deadline=None)
+def test_media_batch_fuzz_equals_per_item(rows):
+    """A bad payload affects only its own row: the batched media
+    extractor never raises on any mix of payloads and returns exactly
+    what the per-item path returns, row for row."""
+    from text_extraction_spark.pipeline import _extract_media_batch, _extract_one_media
+
+    widths, heights, fmts, datas = (list(c) for c in zip(*rows))
+    assert _extract_media_batch(widths, heights, fmts, datas) == [
+        _extract_one_media(*r) for r in rows
+    ]

@@ -359,7 +359,7 @@ def d05(spark, sf):
     vectors, JVM-side zip_with + aggregate in DOUBLE (no Python, no
     shuffle except the final top-k window). At 100 TB this is the
     verifier for d06's approximate path."""
-    e = t_spread(spark, sf, "embeddings")
+    e, _, _ = dense_embeddings(t_spread(spark, sf, "embeddings"))
     qv = e.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
     )
@@ -424,57 +424,76 @@ def _collect_id_emb(df) -> tuple[list[int], list[np.ndarray]]:
     )
 
 
+def _bad_element(x):
+    """An embedding element no cosine kernel can take: null, NaN or ±inf."""
+    return x.isNull() | F.isnan(x) | (F.abs(x) == float("inf"))
+
+
 def emb_stats(df, col: str = "embedding", id_col: str = "vec_id"):
-    """(n_rows, canonical_dim, n_dropped) in ONE Spark job (round 6 —
+    """(n_rows, canonical_dim, drops) in ONE Spark job (round 6 —
     VERDICT r5 #4: the adaptive-sizing paths previously burned a
     min_by agg + a filter-count + a separate count(), three full store
     scans before any real work started). One groupBy over size(col)
-    yields a handful of (dim, cnt, min_id, holes) rows; everything
-    derives driver-side. Canonical dim = the dim of the globally
-    smallest id (deterministic at any cluster size). n_dropped counts
-    the rows dense_embeddings filters out: null vectors, rows of any
-    other dim, and canonical-dim rows holding a null element."""
+    yields a handful of (dim, cnt, min_id, holes, zeros) rows;
+    everything derives driver-side. Canonical dim = the dim of the
+    globally smallest id (deterministic at any cluster size). `drops`
+    maps each reason dense_embeddings filters rows out for — null
+    vector, another dim, a null or non-finite element, all elements
+    zero — to its nonzero row count ({} on a clean store)."""
     rows = (
         df.groupBy(F.size(col).alias("dim"))
         .agg(
             F.count(F.lit(1)).alias("cnt"),
             F.min(id_col).alias("min_id"),
-            F.count_if(F.exists(col, lambda x: x.isNull())).alias("holes"),
+            F.count_if(F.exists(col, _bad_element)).alias("holes"),
+            F.count_if(F.forall(col, lambda x: x == 0)).alias("zeros"),
         )
         .collect()
     )
     if not rows:
-        return 0, 0, 0
+        return 0, 0, {}
     n = int(sum(r["cnt"] for r in rows))
     canon = min(rows, key=lambda r: r["min_id"])
-    return n, int(canon["dim"]), n - int(canon["cnt"]) + int(canon["holes"])
+    dim = int(canon["dim"])
+    null_vecs = sum(r["cnt"] for r in rows if r["dim"] is None or r["dim"] < 0)
+    drops = {
+        "null vector": null_vecs,
+        f"embedding dim != {dim}": n - int(canon["cnt"]) - null_vecs,
+        "null or non-finite element": int(canon["holes"]),
+        "all-zero": int(canon["zeros"]),
+    }
+    return n, dim, {why: c for why, c in drops.items() if c}
 
 
-def dense_embeddings(e, stats: tuple[int, int, int] | None = None):
-    """The embedding-store boundary every ANN path enters through ONCE:
-    (vec_id, embedding) → (dense frame, n, dim). Null vectors, rows
-    whose dim differs from the canonical dim and rows holding a null
-    element are counted by the single emb_stats job (or by `stats`, a
-    caller's emb_stats result), warned about once, and filtered out
-    here, so every kernel downstream sees one (n, dim) matrix and
-    carries no per-row shape check or fallback. On a dense store
-    (nothing dropped) the frame is returned untouched — its plan is
-    unchanged. Callers that pass the dense frame on pass (n, dim, 0)
+def dense_embeddings(e, stats: tuple[int, int, dict] | None = None):
+    """The embedding-store boundary every reader that feeds a cosine
+    kernel enters through ONCE: (vec_id, embedding) → (dense frame, n,
+    dim). Null vectors, rows whose dim differs from the canonical dim,
+    rows holding a null, NaN or ±inf element and all-zero rows are
+    counted by the single emb_stats job (or by `stats`, a caller's
+    emb_stats result), warned about once with the count per reason,
+    and filtered out here. Every kernel downstream therefore sees one
+    (n, dim) matrix of finite vectors with nonzero norms, and carries
+    no per-row shape check, NaN ranking or zero-norm guard. On a clean
+    store (nothing dropped) the frame is returned untouched — its plan
+    is unchanged. Callers that pass the dense frame on pass (n, dim, {})
     as its stats, which makes a nested call a no-op."""
-    n, dim, dropped = emb_stats(e) if stats is None else stats
-    if dropped:
+    n, dim, drops = emb_stats(e) if stats is None else stats
+    if drops:
         import warnings
 
+        dropped = sum(drops.values())
+        reasons = ", ".join(f"{why}: {c}" for why, c in drops.items())
         warnings.warn(
-            f"embedding store: {dropped} rows dropped "
-            f"(null, embedding dim != {dim}, or a null element)",
-            stacklevel=2,
+            f"embedding store: {dropped} rows dropped ({reasons})", stacklevel=2
         )
         e = e.filter(
             (F.size("embedding") == dim)
-            & ~F.exists("embedding", lambda x: x.isNull())
+            & ~F.exists("embedding", _bad_element)
+            & F.exists("embedding", lambda x: x != 0)
         )
-    return e, n - dropped, dim
+        n -= dropped
+    return e, n, dim
 
 
 def _hyperplane_buckets_udf(dim: int, n_planes: int = _LSH_PLANES):
@@ -627,10 +646,10 @@ def _cell_topk_cosine(qs, data, key: str, margin: float = 2e-4):
     of those 3 kept rows' rounded values strictly exceed the dropped
     row's rounded value (y−5e-5 > x+5e-5 whenever y−x > 2e-4 ≥ 1e-4),
     and a strictly-beaten row can never enter the rounded top-3 under
-    ANY vec_id tie-break. NaN cosines (zero vectors) rank above every
-    number in Spark's ordering, so they are ranked as +inf and always
-    kept. Callers apply F.round and the top-3 window unchanged —
-    results are bit-identical, the window input is just ~10× smaller.
+    ANY vec_id tie-break. Both sides are dense stores (see
+    dense_embeddings), so no cosine is NaN. Callers apply F.round and
+    the top-3 window unchanged — results are bit-identical, the window
+    input is just ~10× smaller.
 
     Returns (q_id, vec_id, cosine) with cosine RAW (unrounded)."""
 
@@ -648,19 +667,16 @@ def _cell_topk_cosine(qs, data, key: str, margin: float = 2e-4):
         n_d = Dm.shape[1]
         dn = np.sqrt(_fold_dot(Dm, Dm))
         qn = np.sqrt(_fold_dot(Q, Q))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = (_fold_dot(Q[:, :, None], Dm[:, None, :]) / dn[None, :]) / qn[:, None]
+        cos = (_fold_dot(Q[:, :, None], Dm[:, None, :]) / dn[None, :]) / qn[:, None]
         q_ids = left["q_id"].to_numpy()
         v_ids = right["vec_id"].to_numpy()
         valid = q_ids[:, None] != v_ids[None, :]
-        # rank NaN as +inf (Spark sorts NaN above every double desc)
         cons = np.where(valid, cos, -np.inf)
-        cons = np.where(np.isnan(cons), np.inf, cons)
         if n_d >= 3:
             t3 = np.partition(cons, n_d - 3, axis=1)[:, n_d - 3]
         else:
             t3 = np.full(len(q_ids), -np.inf)
-        keep = valid & (np.isnan(cos) | (cos >= (t3 - margin)[:, None]))
+        keep = valid & (cos >= (t3 - margin)[:, None])
         qi, di = np.nonzero(keep)
         return pd.DataFrame(
             {
@@ -677,7 +693,7 @@ def _cell_topk_cosine(qs, data, key: str, margin: float = 2e-4):
     )
 
 
-def _hyperplane_scored_pairs(emb, stats: tuple[int, int, int] | None = None):
+def _hyperplane_scored_pairs(emb, stats: tuple[int, int, dict] | None = None):
     """(vec_id, embedding) → distinct undirected candidate pairs
     (ua < ub, cosine) from the multi-table hyperplane buckets, scored
     per BUCKET instead of per pair (round 7, guide §8).
@@ -705,11 +721,13 @@ def _hyperplane_scored_pairs(emb, stats: tuple[int, int, int] | None = None):
     directly. Buckets are small (occupancy is held ~_LSH_TARGET_BUCKET
     by the adaptive plane count), so the scorer buffers its partition
     (rows·dim·8 B ≈ 5 MB at 64 shuffle partitions / sf1), groups bucket
-    runs itself with one argsort, and scores ALL the partition's pairs
-    through flat gathered index arrays — per-bucket numpy calls on
+    runs itself with one argsort, and scores every bucket of one size m
+    together as ONE (buckets × m × min(cap, m)) _fold_dot grid, each
+    call bounded to cell_budget cells — per-bucket numpy calls on
     20-row grids were measured overhead-bound (an applyInPandas variant
     with one pandas group per bucket ran SLOWER than the join-back it
-    replaced).
+    replaced). Inputs are dense (see dense_embeddings), so no cosine
+    is NaN.
 
     The same provable margin pre-filter as _cell_topk_cosine applies
     per DIRECTION (a pair survives if either endpoint still needs it):
@@ -732,7 +750,7 @@ def _hyperplane_scored_pairs(emb, stats: tuple[int, int, int] | None = None):
 
     margin = 2e-4
     cap = _ANN_BUCKET_CAP
-    pair_chunk = 1 << 18  # bounds the gathered (A, B) pair matrices
+    cell_budget = 1 << 18  # bounds each fold call's (bucket, member, rep) grid
 
     def fn(it):
         import pyarrow as pa
@@ -758,65 +776,43 @@ def _hyperplane_scored_pairs(emb, stats: tuple[int, int, int] | None = None):
         order = np.lexsort((ids, hs, bk))  # bucket-major, then hash rank
         bk_s = bk[order]
         run_starts = np.flatnonzero(np.r_[True, bk_s[1:] != bk_s[:-1]])
-        run_ends = np.r_[run_starts[1:], len(bk_s)]
-        mi_all, ri_all = [], []
-        for s, e_ in zip(run_starts, run_ends):
-            run = order[s:e_]
-            if len(run) < 2:
-                continue
-            reps = run[: min(cap, len(run))]  # rank order = rep priority
-            mi_all.append(np.repeat(run, len(reps)))
-            ri_all.append(np.tile(reps, len(run)))
-        if not mi_all:
-            return
+        sizes = np.diff(np.r_[run_starts, len(bk_s)])
         out_a, out_b, out_c = [], [], []
-        mi_runs = np.concatenate(mi_all)
-        ri_runs = np.concatenate(ri_all)
-        # flat exact cosine over all pairs, chunked
-        cos_flat = np.empty(len(mi_runs), dtype=np.float64)
-        for s in range(0, len(mi_runs), pair_chunk):
-            e2 = min(s + pair_chunk, len(mi_runs))
-            acc = _fold_dot(MT[:, mi_runs[s:e2]], MT[:, ri_runs[s:e2]])
-            ia = ids[mi_runs[s:e2]]
-            ib = ids[ri_runs[s:e2]]
-            n_first = np.where(ia < ib, norms[mi_runs[s:e2]], norms[ri_runs[s:e2]])
-            n_second = np.where(ia < ib, norms[ri_runs[s:e2]], norms[mi_runs[s:e2]])
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos_flat[s:e2] = acc / n_first / n_second
-        # per-bucket margin filter on grid views
-        pos = 0
-        for s, e_ in zip(run_starts, run_ends):
-            run = order[s:e_]
-            if len(run) < 2:
-                continue
-            n_m = len(run)
-            n_r = min(cap, n_m)
-            grid = cos_flat[pos : pos + n_m * n_r].reshape(n_m, n_r)
-            m_ids = ids[run]
-            r_ids = ids[run[:n_r]]
-            valid = m_ids[:, None] != r_ids[None, :]
-            cons = np.where(valid, grid, -np.inf)
-            cons = np.where(np.isnan(cons), np.inf, cons)
-            if n_r >= 3:
-                t3_row = np.partition(cons, n_r - 3, axis=1)[:, n_r - 3]
-            else:
-                t3_row = np.full(n_m, -np.inf)
-            if n_m >= 3:
-                t3_col = np.partition(cons, n_m - 3, axis=0)[n_m - 3, :]
-            else:
-                t3_col = np.full(n_r, -np.inf)
-            nanc = np.isnan(grid)
-            keep = valid & (
-                nanc
-                | (grid >= (t3_row - margin)[:, None])
-                | (grid >= (t3_col - margin)[None, :])
-            )
-            kmi, kri = np.nonzero(keep)
-            a, b = m_ids[kmi], r_ids[kri]
-            out_a.append(np.minimum(a, b))
-            out_b.append(np.maximum(a, b))
-            out_c.append(grid[kmi, kri])
-            pos += n_m * n_r
+        # buckets of one size m share one (bucket, member, rep) grid; the
+        # reps are each bucket's first min(cap, m) members in rank order
+        for m in np.unique(sizes[sizes >= 2]):
+            r = min(cap, int(m))
+            starts = run_starts[sizes == m]
+            g_step = max(1, cell_budget // (m * r))
+            m_step = max(1, cell_budget // r)  # splits one oversized bucket
+            for g0 in range(0, len(starts), g_step):
+                R = order[starts[g0 : g0 + g_step, None] + np.arange(m)]  # (g, m)
+                A = MT[:, R]  # (dim, g, m)
+                dots = np.empty(R.shape + (r,))
+                for s in range(0, m, m_step):
+                    dots[:, s : s + m_step] = _fold_dot(
+                        A[:, :, s : s + m_step, None], A[:, :, None, :r]
+                    )
+                m_ids = ids[R][:, :, None]
+                r_ids = ids[R[:, :r]][:, None, :]
+                m_n = norms[R][:, :, None]
+                r_n = norms[R[:, :r]][:, None, :]
+                first = m_ids < r_ids
+                grid = dots / np.where(first, m_n, r_n) / np.where(first, r_n, m_n)
+                valid = m_ids != r_ids
+                keep = valid
+                if m >= 3:
+                    cons = np.where(valid, grid, -np.inf)
+                    t3_row = np.partition(cons, r - 3, axis=2)[:, :, r - 3, None]
+                    t3_col = np.partition(cons, m - 3, axis=1)[:, None, m - 3]
+                    keep = valid & (
+                        (grid >= t3_row - margin) | (grid >= t3_col - margin)
+                    )
+                gi, kmi, kri = np.nonzero(keep)
+                a, b = m_ids[gi, kmi, 0], r_ids[gi, 0, kri]
+                out_a.append(np.minimum(a, b))
+                out_b.append(np.maximum(a, b))
+                out_c.append(grid[gi, kmi, kri])
         if out_a:
             yield pa.RecordBatch.from_arrays(
                 [
@@ -904,7 +900,7 @@ def _matrix_topk_arrow(emb, q_ids, k: int, cos_batch):
     )
 
 
-def _hyperplane_id_pairs(emb, stats: tuple[int, int, int] | None = None):
+def _hyperplane_id_pairs(emb, stats: tuple[int, int, dict] | None = None):
     """(vec_id, embedding) → distinct undirected candidate id pairs
     (ua < ub) from the multi-table hyperplane buckets. IDS ONLY ride the
     bucket shuffle (round-4 fix — VERDICT r3 #3: embeddings previously
@@ -964,7 +960,7 @@ def hyperplane_ann(emb):
     # per bucket membership instead of twice per candidate pair, and
     # both join-backs disappear; doubles are bit-identical.
     emb, n, dim = dense_embeddings(emb)
-    scored = _hyperplane_scored_pairs(emb, (n, dim, 0)).select(
+    scored = _hyperplane_scored_pairs(emb, (n, dim, {})).select(
         "ua", "ub", F.round(F.col("cosine"), 4).alias("cosine")
     )
     directed = scored.select(
@@ -1097,11 +1093,11 @@ def d15(spark, sf):
         # past the flat trainer's k cap the two-level coarse quantizer
         # takes over (round 6 — VERDICT r5 #3); every sf at or below
         # the measured decades stays on the flat path bit-for-bit
-        return ivf2_topk(e, stats=(n, dim, 0))
-    return ivf_topk(e, _ivf_centroids(e, sf, n), stats=(n, dim, 0))
+        return ivf2_topk(e, stats=(n, dim, {}))
+    return ivf_topk(e, _ivf_centroids(e, sf, n), stats=(n, dim, {}))
 
 
-def ivf_topk(e, C: np.ndarray, stats: tuple[int, int, int] | None = None):
+def ivf_topk(e, C: np.ndarray, stats: tuple[int, int, dict] | None = None):
     """d15's reusable core over any (vec_id, embedding) DataFrame given
     trained centroids: home-cell assignment, nprobe probing, exact
     cosine re-rank top-3. d29 runs this exact code over the planted
@@ -1261,7 +1257,7 @@ def _ivf2_assign(vecs_top, subc, nsub: int):
 
 def ivf2_topk(
     e,
-    stats: tuple[int, int, int] | None = None,
+    stats: tuple[int, int, dict] | None = None,
     target_cell: int = _IVF_TARGET_CELL,
     top_probe: int = _IVF2_TOP_PROBE,
     sub_probe: int = _IVF2_SUB_PROBE,
@@ -1311,7 +1307,7 @@ def ivf2_topk(
 def _exact_top3(spark, sf):
     """Exact brute-force top-3 over the _RECALL_QUERIES evaluation set
     (broadcasts only the query vectors — linear at any corpus size)."""
-    e = t(spark, sf, "embeddings")
+    e, _, _ = dense_embeddings(t(spark, sf, "embeddings"))
     qv = e.filter(F.col("vec_id") < _RECALL_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
     )
@@ -1612,7 +1608,7 @@ def d12(spark, sf):
     by cluster label (at 100 TB: by an IVF/LSH bucket — see d06), then
     exact double-precision cosine >= threshold, all JVM-side. The join
     is per-block, never corpus²."""
-    e = t_spread(spark, sf, "embeddings")
+    e, _, _ = dense_embeddings(t_spread(spark, sf, "embeddings"))
     norm = F.sqrt(
         F.aggregate(
             F.transform("embedding", lambda x: x.cast("double") * x.cast("double")),
@@ -2499,7 +2495,7 @@ def embedding_dedup_pipeline(emb, threshold: float):
     the pipeline; d38 does the same over a planted 100-member cluster,
     value-proving the degree cap preserves the keep-set."""
     emb, n, dim = dense_embeddings(emb)
-    pairs = _cap_pair_degree(_hyperplane_id_pairs(emb, (n, dim, 0)))
+    pairs = _cap_pair_degree(_hyperplane_id_pairs(emb, (n, dim, {})))
     ea = emb.select(F.col("vec_id").alias("ua"), F.col("embedding").alias("ea"))
     eb = emb.select(F.col("vec_id").alias("ub"), F.col("embedding").alias("eb"))
     # exact cosine verify batch-vectorized in Arrow/numpy — bit-identical
@@ -3597,11 +3593,13 @@ def d40(spark, sf):
     return _centroid_assign(t(spark, sf, "embeddings"))
 
 
-def _centroid_assign(e):
+def _centroid_assign(e, stats: tuple[int, int, dict] | None = None):
     """(vec_id, cluster_id, cosine) nearest-centroid assignment against
     the fixed vec_id < _D40_K centroid set, as a map-only projection —
     the shared core of d40 and d42 (see d40's docstring for the scale
-    argument)."""
+    argument). `e` enters through dense_embeddings, so every row and
+    every centroid is a finite nonzero vector of one dim."""
+    e, _, _ = dense_embeddings(e, stats)
     cents = (
         e.filter(F.col("vec_id") < _D40_K)
         .select("vec_id", "embedding")
@@ -3609,46 +3607,11 @@ def _centroid_assign(e):
         .collect()
     )
 
-    def dot_lit(vec):
-        arr = F.array(*[F.lit(float(x)) for x in vec])
-        return F.aggregate(
-            F.zip_with("embedding", arr, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     def norm_lit(vec):
         s = 0.0
         for x in vec:
             s += float(x) * float(x)
         return s ** 0.5
-
-    cent_dims = {len(r.embedding) for r in cents if r.embedding is not None}
-    if len(cent_dims) != 1 or any(r.embedding is None for r in cents):
-        # ragged/null centroid set — keep the interpreted-fold JVM path
-        # (the numpy matrix below needs one centroid dim)
-        enorm = F.sqrt(
-            F.aggregate(
-                F.transform("embedding", lambda x: x.cast("double") * x.cast("double")),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        )
-        scored = [
-            F.struct(
-                F.round(
-                    dot_lit(r.embedding) / enorm / F.lit(norm_lit(r.embedding)), 4
-                ).alias("cosine"),
-                F.lit(-int(r.vec_id)).alias("negcid"),
-            )
-            for r in cents
-        ]
-        best = F.greatest(*scored)
-        return e.select(
-            "vec_id",
-            (-best.negcid).cast("bigint").alias("cluster_id"),
-            best.cosine.alias("cosine"),
-        )
 
     # Round 7 (guide §4.2): the K interpreted 64-term dot folds per row
     # become ONE Arrow pass emitting the K RAW cosines per row — _fold_dot
@@ -3656,10 +3619,7 @@ def _centroid_assign(e):
     # division order is kept, so each raw double is bit-equal.
     # Rounding and the (cosine, negcid) greatest tie-break STAY JVM-side
     # on element_at of the array, so the selection semantics (Spark
-    # HALF_UP round, NaN/null ordering) are byte-for-byte the old ones.
-    # Wrong-dim / null rows return a NULL array: element_at(NULL, i) is
-    # null exactly like the old zip_with null-fold for those rows.
-    dimc = cent_dims.pop()
+    # HALF_UP round, cid tie-break) are byte-for-byte the old ones.
     CmT = np.array([[float(x) for x in r.embedding] for r in cents], dtype=np.float64).T
     cnorms = np.array([norm_lit(r.embedding) for r in cents], dtype=np.float64)
     from pyspark.sql.types import DoubleType
@@ -3667,22 +3627,10 @@ def _centroid_assign(e):
     @F.pandas_udf(ArrayType(DoubleType()))
     def cos_arr(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for embs in it:
-            out: list = []
-            ok_rows, mats = [], []
-            for i, v in enumerate(embs):
-                a = None if v is None else np.asarray(v, dtype=np.float64)
-                if a is not None and a.shape == (dimc,):
-                    ok_rows.append(i)
-                    mats.append(a)
-                out.append(None)
-            if mats:
-                XT = np.stack(mats, axis=1)  # (dim, rows)
-                dots = _fold_dot(XT[:, :, None], CmT[:, None, :])
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = (dots / np.sqrt(_fold_dot(XT, XT))[:, None]) / cnorms[None, :]
-                for row, i in enumerate(ok_rows):
-                    out[i] = cos[row]
-            yield pd.Series(out)
+            XT = np.stack(embs.to_list(), axis=1).astype(np.float64)  # (dim, rows)
+            dots = _fold_dot(XT[:, :, None], CmT[:, None, :])
+            cos = (dots / np.sqrt(_fold_dot(XT, XT))[:, None]) / cnorms[None, :]
+            yield pd.Series(list(cos))
 
     proj = e.select("vec_id", cos_arr("embedding").alias("ca"))
     scored = [
@@ -3757,8 +3705,8 @@ def d42(spark, sf):
     on cluster_id (never a cartesian); both cosine rounds happen
     BEFORE the tau compare / argmax so float ulps can't flip a drop
     decision across engines."""
-    asg = _centroid_assign(t(spark, sf, "embeddings"))
-    e = t(spark, sf, "embeddings")
+    e, n, dim = dense_embeddings(t(spark, sf, "embeddings"))
+    asg = _centroid_assign(e, (n, dim, {}))
     m = asg.select("vec_id", "cluster_id").join(e, "vec_id")
     # Round 7 (guide §8): the within-cluster pair stage was a self-join
     # on cluster_id scoring every pair with the interpreted fold — at
@@ -3766,13 +3714,10 @@ def d42(spark, sf):
     # One grouped numpy grid per cluster scores the same pairs with the
     # fold's exact float64 op order and emits only pairs whose RAW
     # cosine can still pass the rounded >= tau filter (margin 1e-3 ≫
-    # the 5e-5 max shift of F.round(·,4); NaN pairs are always emitted
-    # since Spark compares NaN above every number). The EXACT filter —
+    # the 5e-5 max shift of F.round(·,4)). The EXACT filter —
     # F.round(cosine, 4) >= tau on the emitted raw double — stays
     # JVM-side, so the drop-set is bit-identical (d42's value oracle
-    # stays green). Same-dim rows grid together per (cluster, dim);
-    # cross-dim pairs are omitted exactly like the old zip_with
-    # null-fold, whose null cosine never passed the filter.
+    # stays green).
     dropped = (
         _cluster_pair_candidates(m, _D42_TAU - 1e-3)
         .filter(F.round(F.col("cosine"), 4) >= _D42_TAU)
@@ -3788,12 +3733,12 @@ def d42(spark, sf):
 
 
 def _cluster_pair_candidates(m, floor: float):
-    """(cluster_id, vec_id, embedding) rows → (a_id, b_id, cosine) for
-    every within-cluster pair (a_id < b_id, same embedding dim) whose
-    RAW cosine is >= floor or NaN — the margin superset d42's exact
-    rounded-tau filter then prunes (see d42). Cosines keep the JVM
-    fold's float64 op order exactly (_fold_dot, division
-    dot / |a| / |b|)."""
+    """(cluster_id, vec_id, embedding) rows of a dense store (see
+    dense_embeddings) → (a_id, b_id, cosine) for every within-cluster
+    pair (a_id < b_id) whose RAW cosine is >= floor — the margin
+    superset d42's exact rounded-tau filter then prunes (see d42).
+    Cosines keep the JVM fold's float64 op order exactly (_fold_dot,
+    division dot / |a| / |b|)."""
 
     _empty = {
         "a_id": pd.Series([], dtype="int64"),
@@ -3804,42 +3749,24 @@ def _cluster_pair_candidates(m, floor: float):
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return pd.DataFrame(_empty)
-        ids_all = pdf["vec_id"].to_numpy()
-        embs = [
-            None if v is None else np.asarray(v, dtype=np.float64)
-            for v in pdf["embedding"]
-        ]
-        by_dim: dict[tuple, list[int]] = {}
-        for i, v in enumerate(embs):
-            if v is not None:  # a null embedding's zip_with fold was
-                # null → its pairs never passed the filter
-                by_dim.setdefault(v.shape, []).append(i)
+        ids = pdf["vec_id"].to_numpy()
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        MT = np.stack(pdf["embedding"].to_list(), axis=1).astype(np.float64)[:, order]
+        n = MT.shape[1]
+        norms = np.sqrt(_fold_dot(MT, MT))
         out_a, out_b, out_c = [], [], []
-        for shape, idxs in by_dim.items():
-            if len(idxs) < 2 or len(shape) != 1 or shape[0] == 0:
-                continue
-            ids = ids_all[idxs]
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            MT = np.stack([embs[idxs[o]] for o in order], axis=1)  # (dim, n)
-            n = MT.shape[1]
-            norms = np.sqrt(_fold_dot(MT, MT))
-            chunk = max(1, (1 << 22) // max(n, 1))  # ~32 MB grid chunks
-            for s in range(0, n - 1, chunk):
-                e_ = min(s + chunk, n - 1)
-                acc = _fold_dot(MT[:, s:e_, None], MT[:, None, :])
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = (acc / norms[s:e_, None]) / norms[None, :]
-                # upper triangle only (a_id < b_id after the id sort)
-                tri = np.arange(s, e_)[:, None] < np.arange(n)[None, :]
-                keep = tri & ((cos >= floor) | np.isnan(cos))
-                ai, bi = np.nonzero(keep)
-                if len(ai):
-                    out_a.append(ids[ai + s])
-                    out_b.append(ids[bi])
-                    out_c.append(cos[ai, bi])
-        if not out_a:
-            return pd.DataFrame(_empty)
+        chunk = max(1, (1 << 22) // n)  # ~32 MB grid chunks
+        for s in range(0, n - 1, chunk):
+            e_ = min(s + chunk, n - 1)
+            acc = _fold_dot(MT[:, s:e_, None], MT[:, None, :])
+            cos = (acc / norms[s:e_, None]) / norms[None, :]
+            # upper triangle only (a_id < b_id after the id sort)
+            tri = np.arange(s, e_)[:, None] < np.arange(n)[None, :]
+            ai, bi = np.nonzero(tri & (cos >= floor))
+            out_a.append(ids[ai + s])
+            out_b.append(ids[bi])
+            out_c.append(cos[ai, bi])
         return pd.DataFrame(
             {
                 "a_id": pd.Series(np.concatenate(out_a), dtype="int64"),
@@ -4701,9 +4628,8 @@ def d50(spark, sf):
     C = _spherical_kmeans(X)
     books = _pq_train(X, m=_PQG_M, ksub=_PQG_KSUB)
     # every vector is a query — the d29 oracle's own convention
-    return ivfpq_topk(
-        spark.read.parquet(p), C, books, X, list(range(len(X)))
-    )
+    e, _, _ = dense_embeddings(spark.read.parquet(p))
+    return ivfpq_topk(e, C, books, X, list(range(len(X))))
 
 
 # ------------------------------------------------ BPE tokenizer training (d48)
@@ -6303,54 +6229,39 @@ def sq8_minmax(e, dim: int) -> tuple[np.ndarray, np.ndarray]:
     partition via mapInArrow, combined driver-side — min/max are
     order-independent so the values are exactly the old 2·dim
     element_at agg's (which was measured ~1 s of interpreted-expression
-    overhead at sf1 for 128 agg columns). Spark NaN semantics are
-    reproduced explicitly: NaN ranks above every double, so a NaN
-    element wins max and never wins min. `e` is a dense store of
-    `dim`-d vectors (see dense_embeddings). At 100 TB this remains the
-    cheapest full-scan agg there is — map-side partials, 2·dim doubles
-    per partition."""
+    overhead at sf1 for 128 agg columns). `e` is a dense store of
+    finite `dim`-d vectors (see dense_embeddings), so no NaN ordering
+    applies. At 100 TB this remains the cheapest full-scan agg there
+    is — map-side partials, 2·dim doubles per partition."""
 
     def fn(it):
         import pyarrow as pa
 
         mn_p = np.full(dim, np.inf)
         mx_p = np.full(dim, -np.inf)
-        has_nan = np.zeros(dim, dtype=bool)
         n_seen = 0
         for batch in it:
             X = _arrow_list_to_2d(batch.column(0))
             n_seen += len(X)
-            with np.errstate(invalid="ignore"):
-                import warnings as _w
-
-                with _w.catch_warnings():
-                    _w.simplefilter("ignore", RuntimeWarning)
-                    mn_p = np.fmin(mn_p, np.nanmin(X, axis=0))
-                    mx_p = np.fmax(mx_p, np.nanmax(X, axis=0))
-            has_nan |= np.isnan(X).any(axis=0)
+            mn_p = np.minimum(mn_p, X.min(axis=0))
+            mx_p = np.maximum(mx_p, X.max(axis=0))
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array([[float(x) for x in mn_p]], type=pa.list_(pa.float64())),
                 pa.array([[float(x) for x in mx_p]], type=pa.list_(pa.float64())),
-                pa.array([[bool(x) for x in has_nan]], type=pa.list_(pa.bool_())),
                 pa.array([n_seen], type=pa.int64()),
             ],
-            names=["mn", "mx", "nan", "n"],
+            names=["mn", "mx", "n"],
         )
 
     parts = e.select("embedding").mapInArrow(
-        fn, "mn array<double>, mx array<double>, nan array<boolean>, n long"
+        fn, "mn array<double>, mx array<double>, n long"
     ).collect()
     live = [r for r in parts if r["n"]]
     if not live:
         return np.full(dim, np.nan), np.full(dim, np.nan)
-    mn = np.fmin.reduce(np.array([r["mn"] for r in live], dtype=np.float64), axis=0)
-    mx = np.fmax.reduce(np.array([r["mx"] for r in live], dtype=np.float64), axis=0)
-    has_nan = np.array([r["nan"] for r in live], dtype=bool).any(axis=0)
-    # Spark orders NaN above every double: a NaN element wins max
-    # always, and wins min only when a column holds NOTHING but NaN
-    mx = np.where(has_nan, np.nan, mx)
-    mn = np.where(np.isinf(mn) & (mn > 0) & has_nan, np.nan, mn)
+    mn = np.array([r["mn"] for r in live], dtype=np.float64).min(axis=0)
+    mx = np.array([r["mx"] for r in live], dtype=np.float64).max(axis=0)
     return mn, mx
 
 
@@ -6513,8 +6424,8 @@ def d73(spark, sf):
     import os
 
     p = os.path.join(sq8_store_dir(), "embeddings.parquet")
-    e = spark.read.parquet(p)
-    mn, mx = sq8_minmax(e, _SQ8G_DIM)
+    e, _, dim = dense_embeddings(spark.read.parquet(p))
+    mn, mx = sq8_minmax(e, dim)
     qrows = e.filter(F.col("vec_id") < _SQ8G_QUERIES).select("vec_id", "embedding").collect()
     qrows.sort(key=lambda r: r["vec_id"])
     Q = np.array([r["embedding"] for r in qrows], dtype=np.float64)

@@ -1,25 +1,43 @@
 #!/usr/bin/env python
-"""Round-6 scale evidence (BENCH/BASELINE.md):
+"""Round-6 scale evidence (BENCH/BASELINE.md), one op group per run.
 
-1. ivf2 (two-level IVF) on a 512k-vector derived store — past the
-   _IVF2_THRESHOLD (~344k) where the flat trainer's k cap would let
-   occupancy (and candidate volume) go quadratic again. Reports wall
-   time, linearity vs the measured sf1 flat-path point, and recall@3
-   of the 50-query evaluation set vs a distributed brute-force truth.
-2. d26 (embedding dedup) at sf1 + sf10 with the round-6 verify degree
-   cap — the VERDICT r5 #5 target is <= ~1.2x linear at the second
-   decade (round 5 measured 1.5x uncapped).
-3. d16 (PII scrub) at sf10 with the round-6 candidate prefilter —
-   the VERDICT r5 #7 target is meaningfully below the 54.1 s round-5
-   record.
+Groups (each replaces one of the round-6 scripts, same protocol and the
+same JSON lines):
 
-Usage: python tools/scale_run_r6.py [ivf2|d26|d16|all]
+  ivf2         ivf2 (two-level IVF) on a 512k-vector derived store —
+               past the _IVF2_THRESHOLD (~344k) where the flat trainer's
+               k cap would let occupancy (and candidate volume) go
+               quadratic again. Wall time, linearity vs the measured sf1
+               flat-path point, and recall@3 of the 50-query evaluation
+               set vs a distributed brute-force truth.
+               (was: scale_run_r6.py ivf2)
+  d26          d26 (embedding dedup) at sf1 + sf10 with the verify
+               degree cap — target <= ~1.2x linear at the second decade.
+               (was: scale_run_r6.py d26)
+  d16          d16 (PII scrub) at sf10 with the candidate prefilter —
+               target meaningfully below the 54.1 s round-5 record.
+               (was: scale_run_r6.py d16)
+  r6           ivf2, d26 and d16 in turn.
+               (was: scale_run_r6.py [all])
+  incremental  the incremental-curation ops d53–d66 (d56 is fixture-
+               based and excluded), cold single shots at sf0.1 → sf1 →
+               sf10 with per-decade linearity.
+               (was: scale_run_r6s3.py)
+  index-sq8    the corpus-index / statistics / SQ8 ops d67–d72 (d73 is
+               fixture-based and excluded), same decade protocol.
+               (was: scale_run_r6s4.py)
+  ivf2-1m      ivf2 on a 1,024k-vector derived store — one doubling past
+               the 512k run. (was: scale_run_r6s5.py)
+
+Usage: python tools/scale_run.py GROUP [op-prefix ...]
+The op prefixes filter the decade groups (incremental, index-sq8).
 Prints one JSON line per measurement. Run on a quiet host (no
 concurrent Spark jobs) — these numbers go into the scale record.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -27,7 +45,33 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF01 = "/root/testdata/sf0.1"
+from text_extraction_spark.scaledata import _BASE as SF01  # noqa: E402  (the sf0.1 test data)
+
+INCREMENTAL_OPS = (
+    "d53_chunk_sliding",
+    "d54_incremental_dedup",
+    "d55_quality_classifier_apply",
+    "d57_token_budget_sample",
+    "d58_snapshot_diff",
+    "d59_stream_ingest_dedup",
+    "d60_source_overlap",
+    # second batch (same session): ordered-selection primitives
+    "d61_stratified_split",
+    "d62_curriculum_length",
+    "d63_mixture_materialize",
+    # third batch (same session): audit/pruning/manifest
+    "d64_duplication_exposure",
+    "d65_source_quality_prune",
+    "d66_batch_manifest",
+)
+INDEX_SQ8_OPS = (
+    "d67_url_dedup",
+    "d68_cluster_representative",
+    "d69_inverted_index",
+    "d70_bigram_pmi",
+    "d71_vocab_entropy",
+    "d72_ann_sq8",
+)
 
 
 def big_embeddings(copies: int = 256) -> str:
@@ -90,13 +134,12 @@ def _spark(shuffle: int = 128):
     from text_extraction_spark.conf import get_spark, stop_active
 
     stop_active()
-    s = get_spark("local[32]", app_name="scale-r6", shuffle_partitions=shuffle)
+    s = get_spark("local[32]", app_name="scale-run", shuffle_partitions=shuffle)
     s.sparkContext.setLogLevel("ERROR")
     return s
 
 
 def run_ivf2(copies: int = 256, label: str = "d15/ivf2 two-level") -> None:
-    import numpy as np
     from pyspark.sql import functions as F
 
     from text_extraction_spark import dataops as D
@@ -181,11 +224,61 @@ def run_d16() -> None:
     }))
 
 
+def run_decades(ops: tuple[str, ...], only: list[str]) -> None:
+    """Each op as a cold single shot (no warm-up) at sf0.1 → sf1 → sf10,
+    with the wall ratio of each decade to 10x the previous one."""
+    from text_extraction_spark import dataops
+    from text_extraction_spark.scaledata import sf1_dir
+
+    spark = _spark(shuffle=64)
+    dirs = [("sf0.1", SF01), ("sf1", sf1_dir()), ("sf10", sf1_dir(copies=100))]
+
+    def run(name: str, sf: str) -> float:
+        t0 = time.monotonic()
+        df = dataops.QUERIES[name](spark, sf)
+        df.write.format("noop").mode("overwrite").save()
+        return time.monotonic() - t0
+
+    for name in ops:
+        if only and not any(name.startswith(p) for p in only):
+            continue
+        rec: dict = {"op": name}
+        prev = None
+        for tag, d in dirs:
+            w = run(name, d)
+            rec[tag] = round(w, 2)
+            if prev is not None:
+                rec[f"linearity_{tag}"] = round(w / (10 * prev), 2)
+            prev = w
+        print(json.dumps(rec), flush=True)
+
+
+GROUPS = {
+    "ivf2": lambda only: run_ivf2(),
+    "d26": lambda only: run_d26(),
+    "d16": lambda only: run_d16(),
+    "r6": lambda only: (run_ivf2(), run_d26(), run_d16()),
+    "incremental": lambda only: run_decades(INCREMENTAL_OPS, only),
+    "index-sq8": lambda only: run_decades(INDEX_SQ8_OPS, only),
+    "ivf2-1m": lambda only: run_ivf2(copies=512, label="d15/ivf2 two-level @1M"),
+}
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(
+        description=__doc__.split("\n\n", 1)[0],
+        epilog=__doc__.split("\n\n", 1)[1],
+        formatter_class=argparse.RawDescriptionHelpFormatter,
+    )
+    ap.add_argument("group", choices=GROUPS)
+    ap.add_argument("only", nargs="*", metavar="op-prefix")
+    args = ap.parse_args()
+    GROUPS[args.group](args.only)
+    from text_extraction_spark.conf import stop_active
+
+    stop_active()
+    return 0
+
+
 if __name__ == "__main__":
-    which = sys.argv[1] if len(sys.argv) > 1 else "all"
-    if which in ("ivf2", "all"):
-        run_ivf2()
-    if which in ("d26", "all"):
-        run_d26()
-    if which in ("d16", "all"):
-        run_d16()
+    raise SystemExit(main())
