@@ -426,3 +426,19 @@ def test_compaction_never_loses_concurrent_commits(spark, tmp_path_factory):
     assert pipeline.read_committed_buckets(spark, out) == set(range(n))
     names = [f for f in fs.listdir(pipeline._manifest_dir(out)) if f.endswith(".json")]
     assert len(names) == 1
+
+
+def test_entry_pipeline_resumes_a_crashed_commit(spark, tmp_path, monkeypatch):
+    """x03 over a cached output whose last run crashed mid-commit must
+    finish the missing buckets and serve every document, not the
+    committed subset."""
+    from text_extraction_spark import extraction_queries as xq
+
+    monkeypatch.setattr("text_extraction_spark.conf.cache_root", lambda: str(tmp_path))
+    out = str(tmp_path / f"out_{xq._CORPUS_VERSION}_{xq._CORPUS_DOCS}")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        pipeline.extract_corpus(
+            spark, xq.corpus_dir(), out, run_id="entryq", _fail_after_buckets=3
+        )
+    assert len(pipeline.read_committed_buckets(spark, out)) == 3
+    assert xq.x03(spark, None).count() == xq._CORPUS_DOCS == 250

@@ -85,3 +85,47 @@ def test_check_all_helper_matches_driver_gate(spark, con):
     assert set(out) == {"q01_scan_projection", "q10_tpch_q1_agg", "q43_salted_skew_join"}
     for name, r in out.items():
         assert r["schema_match"] and r["count_match"] and r["values_match"], (name, r)
+
+
+def test_q22_non_flat_props_take_the_json_plan(spark, tmp_path):
+    """q22's anchored flat-payload regexp falls back to get_json_object
+    on anything else. Under ANSI casts an unanchored extract raised
+    CAST_INVALID_INPUT on a payload without a numeric "k" and read a
+    nested "k" over the top-level one; one event_type per payload makes
+    each group's sum the row's k, compared with the get_json_object
+    plan row for row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    props = [
+        '{"k": 3}', '{"k":"12"}', '{"a": {"k": 7}, "k": 2}',
+        '{"s": "\\"k\\": 9", "k": 4}', '{"j": 1}', '{"k": -5}', None,
+    ]
+    n = len(props)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(n), pa.int64()),
+                "ts": pa.array([0] * n, pa.timestamp("us")),
+                "user_id": pa.array([1] * n, pa.int64()),
+                "event_type": pa.array([f"t{i}" for i in range(n)], pa.string()),
+                "value": pa.array([1.0] * n, pa.float64()),
+                "props": pa.array(props, pa.string()),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    got = {r.event_type: (r.cnt, r.sum_k, r.max_k)
+           for r in _QUERIES["q22_json_funcs"](spark, str(tmp_path)).collect()}
+    k = F.get_json_object("props", "$.k").cast(LongType())
+    plan = (
+        spark.read.parquet(str(tmp_path / "events.parquet"))
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("cnt"), F.sum(k).alias("s"), F.max(k).alias("m"))
+    )
+    want = {r.event_type: (r.cnt, r.s, r.m) for r in plan.collect()}
+    assert got == want
+    assert [got[f"t{i}"][1] for i in range(n)] == [3, 12, 2, 4, None, -5, None]

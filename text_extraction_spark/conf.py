@@ -105,6 +105,52 @@ def cache_root() -> str:
     return d
 
 
+def cached_dir(name: str, build) -> str:
+    """Return `cache_root()/name`, built once by `build(tmp)`.
+
+    The one publishing protocol for every generated cache directory; a
+    reader trusts a directory only through its `_COMPLETE` marker:
+
+    * marker present → return at once, `build` is not called;
+    * otherwise `build(tmp)` fills a fresh private
+      `mkdtemp(prefix=f".{name}_build_")` under the cache root, the
+      marker is written into tmp, and tmp is renamed onto `name` —
+      atomic, so no reader ever sees a half-written directory;
+    * a markerless `name` is a crashed build's leftover and is deleted
+      first, re-checking the marker right before the delete so a
+      concurrent builder's just-renamed directory is never clobbered;
+    * a rename lost to a concurrent builder deletes tmp and returns the
+      winner's directory — or raises if that holds no marker;
+    * a `build` that raises leaves no tmp behind; the error propagates.
+
+    `name` carries a content version: bump it whenever the builder's
+    output changes, or an old cache keeps being served."""
+    import shutil
+    import tempfile
+
+    root = cache_root()
+    d = os.path.join(root, name)
+    marker = os.path.join(d, "_COMPLETE")
+    if os.path.exists(marker):
+        return d
+    tmp = tempfile.mkdtemp(prefix=f".{name}_build_", dir=root)
+    try:
+        build(tmp)
+        with open(os.path.join(tmp, "_COMPLETE"), "w") as fh:
+            fh.write("ok")
+        if os.path.isdir(d) and not os.path.exists(marker):
+            shutil.rmtree(d, ignore_errors=True)
+        try:
+            os.rename(tmp, d)
+        except OSError:
+            if not os.path.exists(marker):
+                raise
+        return d
+    finally:
+        # gone already after a won rename
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def _reset_udf_judf_caches() -> None:
     """pyspark caches each UserDefinedFunction's JVM handle forever
     (`_judf_placeholder`), and that handle embeds the *creating*

@@ -2050,56 +2050,45 @@ def _gen_av_clip(i: int):
     )
 
 
-def av_store_dir() -> str:
-    """Deterministic audio/video parquet store under the per-user cache
-    (same pattern as the extraction corpus)."""
+def _planted_store(name: str, fname: str, table, row_group_size: int = 64) -> str:
+    """Publish `table()` as the parquet file `fname` of the cached
+    directory `name` (conf.cached_dir owns the protocol)."""
     import os
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from .conf import cache_root
+    from .conf import cached_dir
 
-    d = os.path.join(cache_root(), f"av_store_v1_{_AV_CLIPS}")
-    marker = os.path.join(d, "_COMPLETE")
-    if not os.path.exists(marker):
-        # Generate into a process-private temp dir and atomically rename
-        # into place (round-3 ADVICE fix): two concurrent generators can
-        # no longer interleave an in-place pq.write_table with a reader
-        # that saw the other writer's _COMPLETE marker.
-        import tempfile
+    return cached_dir(
+        name,
+        lambda tmp: pq.write_table(
+            table(), os.path.join(tmp, fname), row_group_size=row_group_size
+        ),
+    )
 
-        rows = [_gen_av_clip(i) for i in range(_AV_CLIPS)]
-        tbl = pa.table(
-            {
-                "clip_id": pa.array([r[0] for r in rows], pa.string()),
-                "audio_pcm_s16le": pa.array([r[1] for r in rows], pa.binary()),
-                "audio_rate_hz": pa.array([_AV_RATE] * len(rows), pa.int32()),
-                "audio_samples": pa.array([r[2] for r in rows], pa.int32()),
-                "video_rgb24": pa.array([r[4] for r in rows], pa.binary()),
-                "video_fps": pa.array([_AV_FPS] * len(rows), pa.int32()),
-                "video_frames": pa.array([r[5] for r in rows], pa.int32()),
-                "video_w": pa.array([_AV_W] * len(rows), pa.int32()),
-                "video_h": pa.array([_AV_H] * len(rows), pa.int32()),
-            }
-        )
-        import shutil
 
-        if os.path.isdir(d) and not os.path.exists(marker):
-            # stale partial store from a crashed build; re-check the
-            # marker right before deleting (round-4 ADVICE fix) so a
-            # concurrent generator's just-renamed COMPLETE store is
-            # never clobbered mid-scan
-            shutil.rmtree(d, ignore_errors=True)
-        tmp = tempfile.mkdtemp(prefix=".av_store_build_", dir=cache_root())
-        pq.write_table(tbl, os.path.join(tmp, "av.parquet"), row_group_size=32)
-        open(os.path.join(tmp, "_COMPLETE"), "w").write("ok")
-        try:
-            os.rename(tmp, d)  # atomic: readers see all-or-nothing
-        except OSError:
-            # a concurrent generator won the race; its store is complete
-            shutil.rmtree(tmp, ignore_errors=True)
-    return d
+def _av_table():
+    import pyarrow as pa
+
+    rows = [_gen_av_clip(i) for i in range(_AV_CLIPS)]
+    return pa.table(
+        {
+            "clip_id": pa.array([r[0] for r in rows], pa.string()),
+            "audio_pcm_s16le": pa.array([r[1] for r in rows], pa.binary()),
+            "audio_rate_hz": pa.array([_AV_RATE] * len(rows), pa.int32()),
+            "audio_samples": pa.array([r[2] for r in rows], pa.int32()),
+            "video_rgb24": pa.array([r[4] for r in rows], pa.binary()),
+            "video_fps": pa.array([_AV_FPS] * len(rows), pa.int32()),
+            "video_frames": pa.array([r[5] for r in rows], pa.int32()),
+            "video_w": pa.array([_AV_W] * len(rows), pa.int32()),
+            "video_h": pa.array([_AV_H] * len(rows), pa.int32()),
+        }
+    )
+
+
+def av_store_dir() -> str:
+    """Deterministic audio/video parquet store under the per-user cache."""
+    return _planted_store(f"av_store_v1_{_AV_CLIPS}", "av.parquet", _av_table, 32)
 
 
 @q("d21_audio_features")  # ⊘ rows-only (own AV store; features pinned in tests)
@@ -2530,76 +2519,70 @@ _NEARDUP_THRESHOLD = 0.90
 _NEARDUP_VERSION = "v2"  # v2: salt-rejection loop enforces the dead band
 
 
-def neardup_store_dir() -> str:
-    """Deterministic near-dup embedding store under the per-user cache
-    (same atomic-rename pattern as av_store_dir)."""
-    import os
-    import shutil
-    import tempfile
-
+def _embedding_table(vecs):
+    """The schema every planted embedding store shares: `vec_id` int64
+    in row order and `embedding` list<float64>."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    from .conf import cache_root
+    return pa.table(
+        {
+            "vec_id": pa.array(range(len(vecs)), pa.int64()),
+            "embedding": pa.array(np.asarray(vecs).tolist(), pa.list_(pa.float64())),
+        }
+    )
 
-    d = os.path.join(cache_root(), f"neardup_store_{_NEARDUP_VERSION}")
-    marker = os.path.join(d, "_COMPLETE")
-    if not os.path.exists(marker):
-        # Deterministic per-group salt-rejection: each dup chain takes
-        # the first salt whose INTERNAL pairwise cosines all sit >=
-        # 0.005 away from the verify threshold (the k-th-neighbor
-        # cosines ~0.96^k straddle 0.90, so a chain occasionally lands a
-        # pair inside the band — regenerate just that chain). Cross-
-        # group / singleton pairs are random dim-64 unit vectors (< ~0.6
-        # cosine); the final global assert pins the whole store. The
-        # dead band is thus a structural property of the shipped
-        # fixture, not a lucky draw.
-        vecs: list[np.ndarray] = []
-        for g, size in enumerate(_NEARDUP_GROUP_SIZES):
-            for salt in range(256):
-                rng = np.random.Generator(np.random.PCG64(1000 * g + salt))
-                chain = [rng.standard_normal(_NEARDUP_DIM)]
-                chain[0] /= np.linalg.norm(chain[0])
-                for _ in range(size - 1):
-                    v = chain[-1] + 0.036 * rng.standard_normal(_NEARDUP_DIM)
-                    chain.append(v / np.linalg.norm(v))
-                G = np.stack(chain)
-                gc = (G @ G.T)[np.triu_indices(size, k=1)]
-                if size < 2 or np.abs(gc - _NEARDUP_THRESHOLD).min() > 0.005:
-                    vecs.extend(chain)
-                    break
-            else:  # pragma: no cover — 256 straight rejections
-                raise RuntimeError(f"neardup store: group {g} never cleared the band")
-        srng = np.random.Generator(np.random.PCG64(999))
-        for _ in range(_NEARDUP_SINGLETONS):
-            v = srng.standard_normal(_NEARDUP_DIM)
-            vecs.append(v / np.linalg.norm(v))
-        X = np.stack(vecs)
-        allc = (X @ X.T)[np.triu_indices(len(X), k=1)]
-        if np.abs(allc - _NEARDUP_THRESHOLD).min() <= 0.005:  # pragma: no cover
-            raise RuntimeError("neardup store: cross-pair landed in the dead band")
-        tbl = pa.table(
-            {
-                "vec_id": pa.array(range(len(vecs)), pa.int64()),
-                "embedding": pa.array(
-                    [[float(x) for x in v] for v in vecs],
-                    pa.list_(pa.float64()),
-                ),
-            }
-        )
-        if os.path.isdir(d) and not os.path.exists(marker):
-            # stale partial store from a crashed build; re-check the
-            # marker right before deleting so a concurrent generator's
-            # just-renamed COMPLETE store is never clobbered
-            shutil.rmtree(d, ignore_errors=True)
-        tmp = tempfile.mkdtemp(prefix=".neardup_store_build_", dir=cache_root())
-        pq.write_table(tbl, os.path.join(tmp, "embeddings.parquet"), row_group_size=64)
-        open(os.path.join(tmp, "_COMPLETE"), "w").write("ok")
-        try:
-            os.rename(tmp, d)  # atomic: readers see all-or-nothing
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return d
+
+def _dead_band_chains(sizes, dim: int, seed_base: int) -> list[np.ndarray]:
+    """Near-dup chains by deterministic per-chain salt rejection: chain
+    g takes the first salt whose INTERNAL pairwise cosines all sit >
+    0.005 away from the verify threshold (the k-th-neighbor cosines
+    ~0.96^k straddle 0.90, so a chain occasionally lands a pair inside
+    the band — regenerate just that chain)."""
+    vecs: list[np.ndarray] = []
+    for g, size in enumerate(sizes):
+        for salt in range(256):
+            rng = np.random.Generator(np.random.PCG64(seed_base + 1000 * g + salt))
+            chain = [rng.standard_normal(dim)]
+            chain[0] /= np.linalg.norm(chain[0])
+            for _ in range(size - 1):
+                v = chain[-1] + 0.036 * rng.standard_normal(dim)
+                chain.append(v / np.linalg.norm(v))
+            G = np.stack(chain)
+            gc = (G @ G.T)[np.triu_indices(size, k=1)]
+            if np.abs(gc - _NEARDUP_THRESHOLD).min() > 0.005:
+                vecs.extend(chain)
+                break
+        else:  # pragma: no cover — 256 straight rejections
+            raise RuntimeError(f"dead-band chain {g} never cleared the band")
+    return vecs
+
+
+def _dead_band_table(vecs: list[np.ndarray], singletons: int, seed: int):
+    """Append `singletons` seeded random unit vectors (cosine < ~0.6 to
+    everything at dim 64), then assert no pair of the WHOLE store sits
+    within 0.005 of the threshold — the dead band is a structural
+    property of the shipped fixture, not a lucky draw."""
+    srng = np.random.Generator(np.random.PCG64(seed))
+    for _ in range(singletons):
+        v = srng.standard_normal(len(vecs[0]))
+        vecs.append(v / np.linalg.norm(v))
+    X = np.stack(vecs)
+    allc = (X @ X.T)[np.triu_indices(len(X), k=1)]
+    if np.abs(allc - _NEARDUP_THRESHOLD).min() <= 0.005:  # pragma: no cover
+        raise RuntimeError("planted store: a pair landed in the dead band")
+    return _embedding_table(vecs)
+
+
+def _neardup_table():
+    vecs = _dead_band_chains(_NEARDUP_GROUP_SIZES, _NEARDUP_DIM, 0)
+    return _dead_band_table(vecs, _NEARDUP_SINGLETONS, 999)
+
+
+def neardup_store_dir() -> str:
+    """Deterministic near-dup embedding store under the per-user cache."""
+    return _planted_store(
+        f"neardup_store_{_NEARDUP_VERSION}", "embeddings.parquet", _neardup_table
+    )
 
 
 def d28_oracle_sql() -> str:
@@ -2643,72 +2626,27 @@ _BIGC_DIM = 64
 _BIGC_VERSION = "v1"
 
 
+def _bigcluster_table():
+    crng = np.random.Generator(np.random.PCG64(4242))
+    center = crng.standard_normal(_BIGC_DIM)
+    center /= np.linalg.norm(center)
+    vecs: list[np.ndarray] = []
+    for _ in range(_BIGC_MEMBERS):
+        v = center + 0.008 * crng.standard_normal(_BIGC_DIM)
+        vecs.append(v / np.linalg.norm(v))
+    G = np.stack(vecs)
+    if (G @ G.T)[np.triu_indices(len(G), k=1)].min() < 0.99:  # pragma: no cover
+        raise RuntimeError("bigcluster store: cluster not tight enough")
+    vecs += _dead_band_chains(_BIGC_CHAINS, _BIGC_DIM, 50_000)
+    return _dead_band_table(vecs, _BIGC_SINGLETONS, 777)
+
+
 def bigcluster_store_dir() -> str:
     """Deterministic 100-member-cluster embedding store under the
-    per-user cache (same atomic-rename pattern as neardup_store_dir)."""
-    import os
-    import shutil
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from .conf import cache_root
-
-    d = os.path.join(cache_root(), f"bigcluster_store_{_BIGC_VERSION}")
-    marker = os.path.join(d, "_COMPLETE")
-    if not os.path.exists(marker):
-        vecs: list[np.ndarray] = []
-        crng = np.random.Generator(np.random.PCG64(4242))
-        center = crng.standard_normal(_BIGC_DIM)
-        center /= np.linalg.norm(center)
-        for _ in range(_BIGC_MEMBERS):
-            v = center + 0.008 * crng.standard_normal(_BIGC_DIM)
-            vecs.append(v / np.linalg.norm(v))
-        G = np.stack(vecs)
-        if (G @ G.T)[np.triu_indices(len(G), k=1)].min() < 0.99:  # pragma: no cover
-            raise RuntimeError("bigcluster store: cluster not tight enough")
-        for g, size in enumerate(_BIGC_CHAINS):
-            for salt in range(256):
-                rng = np.random.Generator(np.random.PCG64(50_000 + 1000 * g + salt))
-                chain = [rng.standard_normal(_BIGC_DIM)]
-                chain[0] /= np.linalg.norm(chain[0])
-                for _ in range(size - 1):
-                    v = chain[-1] + 0.036 * rng.standard_normal(_BIGC_DIM)
-                    chain.append(v / np.linalg.norm(v))
-                C_ = np.stack(chain)
-                gc = (C_ @ C_.T)[np.triu_indices(size, k=1)]
-                if np.abs(gc - _NEARDUP_THRESHOLD).min() > 0.005:
-                    vecs.extend(chain)
-                    break
-            else:  # pragma: no cover
-                raise RuntimeError(f"bigcluster store: chain {g} never cleared the band")
-        srng = np.random.Generator(np.random.PCG64(777))
-        for _ in range(_BIGC_SINGLETONS):
-            v = srng.standard_normal(_BIGC_DIM)
-            vecs.append(v / np.linalg.norm(v))
-        X = np.stack(vecs)
-        allc = (X @ X.T)[np.triu_indices(len(X), k=1)]
-        if np.abs(allc - _NEARDUP_THRESHOLD).min() <= 0.005:  # pragma: no cover
-            raise RuntimeError("bigcluster store: a pair landed in the dead band")
-        tbl = pa.table(
-            {
-                "vec_id": pa.array(range(len(vecs)), pa.int64()),
-                "embedding": pa.array(
-                    [[float(x) for x in v] for v in vecs], pa.list_(pa.float64())
-                ),
-            }
-        )
-        if os.path.isdir(d) and not os.path.exists(marker):
-            shutil.rmtree(d, ignore_errors=True)
-        tmp = tempfile.mkdtemp(prefix=".bigcluster_store_build_", dir=cache_root())
-        pq.write_table(tbl, os.path.join(tmp, "embeddings.parquet"), row_group_size=64)
-        open(os.path.join(tmp, "_COMPLETE"), "w").write("ok")
-        try:
-            os.rename(tmp, d)  # atomic: readers see all-or-nothing
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return d
+    per-user cache."""
+    return _planted_store(
+        f"bigcluster_store_{_BIGC_VERSION}", "embeddings.parquet", _bigcluster_table
+    )
 
 
 def _bruteforce_components_sql(store_dir: str, threshold: float) -> str:
@@ -2777,47 +2715,21 @@ _IVFG_DIM = 32
 _IVFG_VERSION = "v1"
 
 
+def _ivf_table():
+    rng = np.random.Generator(np.random.PCG64(23))
+    vecs: list[np.ndarray] = []
+    for _c in range(_IVFG_CLUSTERS):
+        center = rng.standard_normal(_IVFG_DIM)
+        center /= np.linalg.norm(center)
+        for _m in range(_IVFG_MEMBERS):
+            v = center + 0.018 * rng.standard_normal(_IVFG_DIM)
+            vecs.append(v / np.linalg.norm(v))
+    return _embedding_table(vecs)
+
+
 def ivf_store_dir() -> str:
-    """Deterministic clustered embedding store under the per-user cache
-    (same atomic-rename pattern as av_store_dir)."""
-    import os
-    import shutil
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from .conf import cache_root
-
-    d = os.path.join(cache_root(), f"ivf_store_{_IVFG_VERSION}")
-    marker = os.path.join(d, "_COMPLETE")
-    if not os.path.exists(marker):
-        rng = np.random.Generator(np.random.PCG64(23))
-        vecs: list[np.ndarray] = []
-        for _c in range(_IVFG_CLUSTERS):
-            center = rng.standard_normal(_IVFG_DIM)
-            center /= np.linalg.norm(center)
-            for _m in range(_IVFG_MEMBERS):
-                v = center + 0.018 * rng.standard_normal(_IVFG_DIM)
-                vecs.append(v / np.linalg.norm(v))
-        tbl = pa.table(
-            {
-                "vec_id": pa.array(range(len(vecs)), pa.int64()),
-                "embedding": pa.array(
-                    [[float(x) for x in v] for v in vecs], pa.list_(pa.float64())
-                ),
-            }
-        )
-        if os.path.isdir(d) and not os.path.exists(marker):
-            shutil.rmtree(d, ignore_errors=True)
-        tmp = tempfile.mkdtemp(prefix=".ivf_store_build_", dir=cache_root())
-        pq.write_table(tbl, os.path.join(tmp, "embeddings.parquet"), row_group_size=64)
-        open(os.path.join(tmp, "_COMPLETE"), "w").write("ok")
-        try:
-            os.rename(tmp, d)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return d
+    """Deterministic clustered embedding store under the per-user cache."""
+    return _planted_store(f"ivf_store_{_IVFG_VERSION}", "embeddings.parquet", _ivf_table)
 
 
 def d29_oracle_sql() -> str:
@@ -2894,52 +2806,37 @@ _DDG_VOCAB = 500
 _DDG_VERSION = "v1"
 
 
-def dedup_corpus_store_dir() -> str:
-    """Deterministic near-dup document store under the per-user cache
-    (same atomic-rename pattern as av_store_dir)."""
-    import os
-    import shutil
-    import tempfile
-
+def _dedup_corpus_table():
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    from .conf import cache_root
+    rng = np.random.Generator(np.random.PCG64(31))
+    vocab = [f"w{i:03d}" for i in range(_DDG_VOCAB)]
+    texts: list[str] = []
 
-    d = os.path.join(cache_root(), f"dedup_corpus_store_{_DDG_VERSION}")
-    marker = os.path.join(d, "_COMPLETE")
-    if not os.path.exists(marker):
-        rng = np.random.Generator(np.random.PCG64(31))
-        vocab = [f"w{i:03d}" for i in range(_DDG_VOCAB)]
-        texts: list[str] = []
+    def sample_words(k: int) -> list[str]:
+        return [vocab[int(i)] for i in rng.choice(_DDG_VOCAB, k, replace=False)]
 
-        def sample_words(k: int) -> list[str]:
-            return [vocab[int(i)] for i in rng.choice(_DDG_VOCAB, k, replace=False)]
+    for size in _DDG_GROUP_SIZES:
+        base = sample_words(_DDG_WORDS_PER_DOC)
+        texts.append(" ".join(base))
+        for _v in range(size - 1):
+            variant = base[:-2] + sample_words(2)
+            texts.append(" ".join(variant))
+    for _s in range(_DDG_SINGLETONS):
+        texts.append(" ".join(sample_words(_DDG_WORDS_PER_DOC)))
+    return pa.table(
+        {
+            "doc_id": pa.array(range(len(texts)), pa.int64()),
+            "text": pa.array(texts, pa.string()),
+        }
+    )
 
-        for size in _DDG_GROUP_SIZES:
-            base = sample_words(_DDG_WORDS_PER_DOC)
-            texts.append(" ".join(base))
-            for _v in range(size - 1):
-                variant = base[:-2] + sample_words(2)
-                texts.append(" ".join(variant))
-        for _s in range(_DDG_SINGLETONS):
-            texts.append(" ".join(sample_words(_DDG_WORDS_PER_DOC)))
-        tbl = pa.table(
-            {
-                "doc_id": pa.array(range(len(texts)), pa.int64()),
-                "text": pa.array(texts, pa.string()),
-            }
-        )
-        if os.path.isdir(d) and not os.path.exists(marker):
-            shutil.rmtree(d, ignore_errors=True)
-        tmp = tempfile.mkdtemp(prefix=".dedup_corpus_build_", dir=cache_root())
-        pq.write_table(tbl, os.path.join(tmp, "documents.parquet"), row_group_size=64)
-        open(os.path.join(tmp, "_COMPLETE"), "w").write("ok")
-        try:
-            os.rename(tmp, d)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return d
+
+def dedup_corpus_store_dir() -> str:
+    """Deterministic near-dup document store under the per-user cache."""
+    return _planted_store(
+        f"dedup_corpus_store_{_DDG_VERSION}", "documents.parquet", _dedup_corpus_table
+    )
 
 
 def d30_oracle_sql() -> str:
@@ -3095,63 +2992,47 @@ _SIMG_TWINS = 30
 _SIMG_VERSION = "v1"
 
 
-def simhash_store_dir() -> str:
-    """Deterministic SimHash twin store under the per-user cache (same
-    atomic-rename pattern as av_store_dir)."""
-    import os
-    import shutil
-    import tempfile
-
+def _simhash_table():
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    from .conf import cache_root
+    rng = np.random.Generator(np.random.PCG64(57))
+    vocab = [f"s{i:03d}" for i in range(800)]
 
-    d = os.path.join(cache_root(), f"simhash_store_{_SIMG_VERSION}")
-    marker = os.path.join(d, "_COMPLETE")
-    if not os.path.exists(marker):
-        rng = np.random.Generator(np.random.PCG64(57))
-        vocab = [f"s{i:03d}" for i in range(800)]
+    def sample_doc() -> list[str]:
+        return [vocab[int(i)] for i in rng.choice(800, 40, replace=False)]
 
-        def sample_doc() -> list[str]:
-            return [vocab[int(i)] for i in rng.choice(800, 40, replace=False)]
+    def sig_of(texts: list[str]) -> list[int]:
+        return simhash_udf.func(pd.Series(texts)).tolist()
 
-        def sig_of(texts: list[str]) -> list[int]:
-            return simhash_udf.func(pd.Series(texts)).tolist()
+    texts = [" ".join(sample_doc()) for _ in range(_SIMG_BASES)]
+    base_sigs = sig_of(texts)
+    ham = lambda a, b: int(bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1"))
+    for i in range(_SIMG_TWINS):
+        lo, hi = (1, 3) if i % 2 == 0 else (4, 6)
+        words = texts[i].split()
+        for attempt in range(200):
+            cand = list(words)
+            cand[int(rng.integers(0, len(cand)))] = vocab[int(rng.integers(0, 800))]
+            s = sig_of([" ".join(cand)])[0]
+            if lo <= ham(s, base_sigs[i]) <= hi:
+                texts.append(" ".join(cand))
+                break
+        else:  # pragma: no cover — 200 straight rejections
+            raise RuntimeError(f"simhash store: twin {i} never hit [{lo},{hi}]")
+    return pa.table(
+        {
+            "doc_id": pa.array(range(len(texts)), pa.int64()),
+            "text": pa.array(texts, pa.string()),
+            "sig": pa.array(sig_of(texts), pa.int64()),
+        }
+    )
 
-        texts = [" ".join(sample_doc()) for _ in range(_SIMG_BASES)]
-        base_sigs = sig_of(texts)
-        ham = lambda a, b: int(bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1"))
-        for i in range(_SIMG_TWINS):
-            lo, hi = (1, 3) if i % 2 == 0 else (4, 6)
-            words = texts[i].split()
-            for attempt in range(200):
-                cand = list(words)
-                cand[int(rng.integers(0, len(cand)))] = vocab[int(rng.integers(0, 800))]
-                s = sig_of([" ".join(cand)])[0]
-                if lo <= ham(s, base_sigs[i]) <= hi:
-                    texts.append(" ".join(cand))
-                    break
-            else:  # pragma: no cover — 200 straight rejections
-                raise RuntimeError(f"simhash store: twin {i} never hit [{lo},{hi}]")
-        sigs = sig_of(texts)
-        tbl = pa.table(
-            {
-                "doc_id": pa.array(range(len(texts)), pa.int64()),
-                "text": pa.array(texts, pa.string()),
-                "sig": pa.array(sigs, pa.int64()),
-            }
-        )
-        if os.path.isdir(d) and not os.path.exists(marker):
-            shutil.rmtree(d, ignore_errors=True)
-        tmp = tempfile.mkdtemp(prefix=".simhash_store_build_", dir=cache_root())
-        pq.write_table(tbl, os.path.join(tmp, "documents.parquet"), row_group_size=64)
-        open(os.path.join(tmp, "_COMPLETE"), "w").write("ok")
-        try:
-            os.rename(tmp, d)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return d
+
+def simhash_store_dir() -> str:
+    """Deterministic SimHash twin store under the per-user cache."""
+    return _planted_store(
+        f"simhash_store_{_SIMG_VERSION}", "documents.parquet", _simhash_table
+    )
 
 
 def d33_oracle_sql() -> str:
@@ -4364,7 +4245,7 @@ _PQG_QUERIES = 30
 _PQG_VERSION = "v1"
 
 
-def pq_store_dir() -> str:
+def _pq_table():
     """Deterministic PQ-exact embedding store: every vector is EXACTLY
     the concatenation of one codeword per subspace, so (a) farthest-
     point k-means recovers the codebooks exactly (coincident clusters:
@@ -4372,47 +4253,21 @@ def pq_store_dir() -> str:
     in one step), and (b) ADC cosine == exact cosine — brute-force SQL
     is a full value oracle for the whole PQ path. First ksub vectors
     use code j in every block so all codewords are represented."""
-    import os
-    import shutil
-    import tempfile
+    rng = np.random.Generator(np.random.PCG64(29))
+    books = rng.standard_normal((_PQG_M, _PQG_KSUB, _PQG_DSUB))
+    codes = np.vstack(
+        [
+            np.tile(np.arange(_PQG_KSUB)[:, None], (1, _PQG_M)),
+            rng.integers(0, _PQG_KSUB, (_PQG_N - _PQG_KSUB, _PQG_M)),
+        ]
+    )
+    return _embedding_table(
+        np.concatenate([books[b][codes[:, b]] for b in range(_PQG_M)], axis=1)
+    )
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    from .conf import cache_root
-
-    d = os.path.join(cache_root(), f"pq_store_{_PQG_VERSION}")
-    marker = os.path.join(d, "_COMPLETE")
-    if not os.path.exists(marker):
-        rng = np.random.Generator(np.random.PCG64(29))
-        books = rng.standard_normal((_PQG_M, _PQG_KSUB, _PQG_DSUB))
-        codes = np.vstack(
-            [
-                np.tile(np.arange(_PQG_KSUB)[:, None], (1, _PQG_M)),
-                rng.integers(0, _PQG_KSUB, (_PQG_N - _PQG_KSUB, _PQG_M)),
-            ]
-        )
-        vecs = np.concatenate(
-            [books[b][codes[:, b]] for b in range(_PQG_M)], axis=1
-        )
-        tbl = pa.table(
-            {
-                "vec_id": pa.array(range(_PQG_N), pa.int64()),
-                "embedding": pa.array(
-                    [[float(x) for x in v] for v in vecs], pa.list_(pa.float64())
-                ),
-            }
-        )
-        if os.path.isdir(d) and not os.path.exists(marker):
-            shutil.rmtree(d, ignore_errors=True)
-        tmp = tempfile.mkdtemp(prefix=".pq_store_build_", dir=cache_root())
-        pq.write_table(tbl, os.path.join(tmp, "embeddings.parquet"), row_group_size=64)
-        open(os.path.join(tmp, "_COMPLETE"), "w").write("ok")
-        try:
-            os.rename(tmp, d)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return d
+def pq_store_dir() -> str:
+    return _planted_store(f"pq_store_{_PQG_VERSION}", "embeddings.parquet", _pq_table)
 
 
 def d47_oracle_sql() -> str:
@@ -5264,22 +5119,14 @@ def d59(spark, sf):
     import os
 
     from . import streaming
-    from .conf import cache_root
+    from .conf import cached_dir
 
-    src = os.path.join(sf, "documents.parquet")
-    st = os.stat(src)
+    st = os.stat(os.path.join(sf, "documents.parquet"))
     tag = os.path.basename(sf.rstrip("/")).replace(".", "_")
-    replay = os.path.join(
-        cache_root(), f"docs_replay_{tag}_{st.st_size}_{st.st_mtime_ns}"
+    replay = cached_dir(
+        f"docs_replay_{tag}_{st.st_size}_{st.st_mtime_ns}",
+        lambda tmp: streaming.make_docs_replay_dir(sf, tmp),
     )
-    marker = os.path.join(replay, "_COMPLETE")
-    if not os.path.exists(marker):
-        import shutil
-
-        shutil.rmtree(replay, ignore_errors=True)
-        streaming.make_docs_replay_dir(sf, replay)
-        with open(marker, "w") as fh:
-            fh.write("ok")
     return streaming.run_available_now(
         streaming.streaming_ingest_dedup(streaming.read_docs_stream(spark, replay)),
         spark,
@@ -6342,7 +6189,7 @@ _SQ8G_QUERIES = 30
 _SQ8G_VERSION = "v1"
 
 
-def sq8_store_dir() -> str:
+def _sq8_table():
     """Deterministic SQ8-exact embedding store: every coordinate sits
     EXACTLY on the 256-level grid x = -1 + (c·2)/255 (same IEEE op
     order as sq8_topk's dequant), and rows 0/1 pin codes 0/255 in every
@@ -6350,45 +6197,19 @@ def sq8_store_dir() -> str:
     dequantize therefore reproduces the stored float64 bits, ADC cosine
     == exact cosine, and DuckDB brute force is a full value oracle for
     the whole SQ8 path (the d47 pattern)."""
-    import os
-    import shutil
-    import tempfile
+    rng = np.random.Generator(np.random.PCG64(31))
+    codes = np.vstack(
+        [
+            np.zeros((1, _SQ8G_DIM), dtype=np.int64),
+            np.full((1, _SQ8G_DIM), 255, dtype=np.int64),
+            rng.integers(0, 256, (_SQ8G_N - 2, _SQ8G_DIM)),
+        ]
+    )
+    return _embedding_table(-1.0 + (codes.astype(np.float64) * 2.0) / 255.0)
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    from .conf import cache_root
-
-    d = os.path.join(cache_root(), f"sq8_store_{_SQ8G_VERSION}")
-    marker = os.path.join(d, "_COMPLETE")
-    if not os.path.exists(marker):
-        rng = np.random.Generator(np.random.PCG64(31))
-        codes = np.vstack(
-            [
-                np.zeros((1, _SQ8G_DIM), dtype=np.int64),
-                np.full((1, _SQ8G_DIM), 255, dtype=np.int64),
-                rng.integers(0, 256, (_SQ8G_N - 2, _SQ8G_DIM)),
-            ]
-        )
-        vecs = -1.0 + (codes.astype(np.float64) * 2.0) / 255.0
-        tbl = pa.table(
-            {
-                "vec_id": pa.array(range(_SQ8G_N), pa.int64()),
-                "embedding": pa.array(
-                    [[float(x) for x in v] for v in vecs], pa.list_(pa.float64())
-                ),
-            }
-        )
-        if os.path.isdir(d) and not os.path.exists(marker):
-            shutil.rmtree(d, ignore_errors=True)
-        tmp = tempfile.mkdtemp(prefix=".sq8_store_build_", dir=cache_root())
-        pq.write_table(tbl, os.path.join(tmp, "embeddings.parquet"), row_group_size=64)
-        open(os.path.join(tmp, "_COMPLETE"), "w").write("ok")
-        try:
-            os.rename(tmp, d)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return d
+def sq8_store_dir() -> str:
+    return _planted_store(f"sq8_store_{_SQ8G_VERSION}", "embeddings.parquet", _sq8_table)
 
 
 def d73_oracle_sql() -> str:

@@ -103,26 +103,24 @@ def x02(spark, sf):
 def corpus_dir() -> str:
     """Deterministic fixture corpus, generated once per content version
     (under the ownership-verified per-user cache dir — conf.cache_root)."""
-    from .conf import cache_root
+    from .conf import cached_dir
+    from .corpus import write_corpus_parquet
 
-    d = os.path.join(cache_root(), f"corpus_{_CORPUS_VERSION}_{_CORPUS_DOCS}")
-    marker = os.path.join(d, "_COMPLETE")
-    if not os.path.exists(marker):
-        from .corpus import write_corpus_parquet
-
-        write_corpus_parquet(d, _CORPUS_DOCS)
-        open(marker, "w").write("ok")
-    return d
+    return cached_dir(
+        f"corpus_{_CORPUS_VERSION}_{_CORPUS_DOCS}",
+        lambda tmp: write_corpus_parquet(tmp, _CORPUS_DOCS),
+    )
 
 
 def _run_pipeline(spark: SparkSession) -> str:
+    """Extract the fixture corpus into its cached output dir. Always
+    calls extract_corpus: its manifest resume finishes a crashed run's
+    missing buckets, and returns after one count once all are committed."""
     from .conf import cache_root
+    from .pipeline import extract_corpus
 
     out = os.path.join(cache_root(), f"out_{_CORPUS_VERSION}_{_CORPUS_DOCS}")
-    if not os.path.exists(os.path.join(out, "extracted")):
-        from .pipeline import extract_corpus
-
-        extract_corpus(spark, corpus_dir(), out, run_id="entryq")
+    extract_corpus(spark, corpus_dir(), out, run_id="entryq")
     return out
 
 

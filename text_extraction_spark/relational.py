@@ -525,8 +525,16 @@ def q22(spark, sf):
     # sf1, value-identical on every row of both scale factors (verified
     # by a full-result diff against the get_json_object plan). The bare
     # scan also beats the round-robin spread here: the regexp map work
-    # on 1M rows is cheaper than the spread's full-string shuffle.
-    k = F.regexp_extract("props", '"k"\\s*:\\s*(-?\\d+)', 1).cast(LongType())
+    # on 1M rows is cheaper than the spread's full-string shuffle. The
+    # regexp is anchored to the whole flat payload; anything else
+    # (nested, quoted, other keys — an unanchored match would return
+    # '' and fail the ANSI cast, or read a nested "k") takes the
+    # get_json_object plan. nullif+coalesce, not when(flat != ''),
+    # evaluates the regexp once per row (when: +21 % at sf0.1).
+    flat = F.regexp_extract("props", '^\\{"k"\\s*:\\s*(-?\\d+)\\}$', 1)
+    k = F.coalesce(
+        F.nullif(flat, F.lit("")), F.get_json_object("props", "$.k")
+    ).cast(LongType())
     return (
         e.select("event_type", k.alias("k"))
         .groupBy("event_type")

@@ -22,8 +22,8 @@ corpus rather than a corpus with 10 exact copies of every row:
 * embeddings.embedding — copy k>0 adds seeded N(0, 0.02) noise: cluster
   structure survives, exact duplication doesn't, for the same reason.
 
-Output is cached under conf.cache_root() (atomic-rename build, same
-pattern as the fixture stores); generation is pure pyarrow/numpy — no
+Output is cached under conf.cache_root() (conf.cached_dir, like every
+generated fixture); generation is pure pyarrow/numpy — no
 Spark session needed.
 """
 
@@ -100,23 +100,22 @@ def _perturb_embeddings(col, k: int):
 
 def sf1_dir(base: str = _BASE, copies: int = 10) -> str:
     """Build (once, cached) and return the sf1 directory."""
+    from .conf import cached_dir
+
+    base_tag = os.path.basename(base.rstrip("/"))
+    return cached_dir(
+        f"testdata_sf1_{_SF1_VERSION}_{base_tag}_{copies}x",
+        lambda tmp: _build_sf1(base, copies, tmp),
+    )
+
+
+def _build_sf1(base: str, copies: int, tmp: str) -> None:
     import shutil
-    import tempfile
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from .conf import cache_root
-
-    base_tag = os.path.basename(base.rstrip("/"))
-    d = os.path.join(cache_root(), f"testdata_sf1_{_SF1_VERSION}_{base_tag}_{copies}x")
-    marker = os.path.join(d, "_COMPLETE")
-    if os.path.exists(marker):
-        return d
-    if os.path.isdir(d):
-        shutil.rmtree(d, ignore_errors=True)
     offs = _offsets(base)
-    tmp = tempfile.mkdtemp(prefix=".sf1_build_", dir=cache_root())
     for tbl in _DIMENSIONS:
         shutil.copy(
             os.path.join(base, f"{tbl}.parquet"), os.path.join(tmp, f"{tbl}.parquet")
@@ -152,9 +151,3 @@ def sf1_dir(base: str = _BASE, copies: int = 10) -> str:
             pa.concat_tables(pieces), os.path.join(tmp, f"{tbl}.parquet"),
             row_group_size=1 << 20,
         )
-    open(os.path.join(tmp, "_COMPLETE"), "w").write("ok")
-    try:
-        os.rename(tmp, d)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return d

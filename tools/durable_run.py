@@ -22,18 +22,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def scale_corpus(n_docs: int) -> str:
-    from text_extraction_spark.conf import cache_root
+    from text_extraction_spark.conf import cached_dir
     from text_extraction_spark.corpus import write_corpus_parquet
     from text_extraction_spark.extraction_queries import _CORPUS_VERSION
 
-    d = os.path.join(cache_root(), f"scale_corpus_{_CORPUS_VERSION}_{n_docs}")
-    marker = os.path.join(d, "_COMPLETE")
-    if not os.path.exists(marker):
+    def build(tmp: str) -> None:
         t0 = time.monotonic()
-        write_corpus_parquet(d, n_docs, with_golden=False)
-        open(marker, "w").write("ok")
+        write_corpus_parquet(tmp, n_docs, with_golden=False)
         print(f"corpus generated in {time.monotonic() - t0:.1f}s", file=sys.stderr)
-    return d
+
+    return cached_dir(f"scale_corpus_{_CORPUS_VERSION}_{n_docs}", build)
 
 
 def main() -> None:

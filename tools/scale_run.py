@@ -84,14 +84,9 @@ def big_embeddings(copies: int = 256) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from text_extraction_spark.conf import cache_root
+    from text_extraction_spark.conf import cached_dir
 
-    d = os.path.join(cache_root(), f"emb_store_{copies}x_v1")
-    marker = os.path.join(d, "_COMPLETE")
-    if not os.path.exists(marker):
-        import shutil
-        import tempfile
-
+    def build(tmp: str) -> None:
         src = pq.read_table(os.path.join(SF01, "embeddings.parquet"))
         n0 = len(src)
         stride = int(pa.compute.max(src.column("vec_id")).as_py()) + 1
@@ -115,19 +110,14 @@ def big_embeddings(copies: int = 256) -> str:
                     }
                 )
             )
-        tmp = tempfile.mkdtemp(prefix=".emb_store_build_", dir=cache_root())
         pq.write_table(
             pa.concat_tables(pieces),
             os.path.join(tmp, "embeddings.parquet"),
             row_group_size=1 << 18,
         )
-        open(os.path.join(tmp, "_COMPLETE"), "w").write("ok")
-        try:
-            os.rename(tmp, d)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
         print(f"built {copies}x store ({n0 * copies} vecs)", file=sys.stderr)
-    return d
+
+    return cached_dir(f"emb_store_{copies}x_v1", build)
 
 
 def _spark(shuffle: int = 128):
