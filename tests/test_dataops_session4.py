@@ -220,3 +220,24 @@ def test_x09_cells_round_trip_to_ocr_text(spark):
         F.col("cell_int").isNotNull() != F.col("cell").rlike("^-?[0-9]{1,18}$")
     ).count()
     assert typed == 0
+
+
+def test_store_without_query_rows_gives_empty_ann_results(spark, tmp_path):
+    """A store with no vec_id < _RECALL_QUERIES has an empty query set:
+    the quantized ANN queries return no rows, with their usual schema,
+    instead of failing on a 1-d empty query matrix."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(os.path.join(SF01, "embeddings.parquet"))
+    i = tbl.schema.get_field_index("vec_id")
+    tbl = tbl.set_column(i, "vec_id", pc.add(tbl.column("vec_id"), 1000))
+    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
+    for name in ("d46_ann_pq", "d49_ann_ivfpq", "d72_ann_sq8"):
+        df = dataops.QUERIES[name](spark, str(tmp_path))
+        assert df.dtypes == [
+            ("q_id", "bigint"), ("vec_id", "bigint"), ("cosine", "double")
+        ], name
+        assert df.collect() == [], name

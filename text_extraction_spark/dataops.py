@@ -33,20 +33,11 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StringType
 
-from .relational import t, t_spread
+from .relational import query_registry, t, t_spread
 
 QUERIES: dict = {}
 ORACLES: dict[str, str] = {}
-
-
-def q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+q = query_registry(QUERIES, ORACLES)
 
 
 # ------------------------------------------------------------------- dedup
@@ -353,6 +344,18 @@ SELECT q_id, vec_id, cosine FROM ranked WHERE rn <= 5
 """
 
 
+def _per_query_topk(scored, k: int, score: str = "cosine"):
+    """The one per-query top-k policy of every ANN path: rank each
+    q_id's (q_id, vec_id, score) rows by score desc, then vec_id, and
+    keep the first `k` — one row_number window, shuffled by q_id."""
+    w = Window.partitionBy("q_id").orderBy(F.col(score).desc(), F.col("vec_id"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("q_id", "vec_id", score)
+    )
+
+
 @q("d05_ann_cosine_bruteforce", _COS_SQL)
 def d05(spark, sf):
     """Brute-force cosine top-k (the exact baseline): broadcast the query
@@ -369,10 +372,7 @@ def d05(spark, sf):
         "vec_id",
         F.round(_cosine(F.col("embedding"), F.col("qe")), 4).alias("cosine"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return sims.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5).select(
-        "q_id", "vec_id", "cosine"
-    )
+    return _per_query_topk(sims, 5)
 
 
 # OR-amplification config, chosen by MEASUREMENT (round 2): the testdata
@@ -422,6 +422,28 @@ def _collect_id_emb(df) -> tuple[list[int], list[np.ndarray]]:
         [int(x) for x in pdf["vec_id"]],
         [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]],
     )
+
+
+def _query_set(e, n_queries: int, dim: int) -> tuple[list[int], np.ndarray]:
+    """The driver-side query set of the dense store `e` of `dim`-d
+    vectors: (q_ids, (q, dim) matrix) of its rows with vec_id <
+    n_queries. A store without such rows gives ([], a (0, dim) matrix),
+    so every ANN path over it returns an empty result."""
+    q_ids, vecs = _collect_id_emb(
+        e.filter(F.col("vec_id") < n_queries).select("vec_id", "embedding")
+    )
+    return q_ids, np.array(vecs, dtype=np.float64).reshape(len(vecs), dim)
+
+
+def _hash_sample(e, cap: int) -> np.ndarray:
+    """The one trainer sample of the dense store `e`: its `cap`
+    lowest-xxhash64(vec_id) rows (a TakeOrdered over a uniform hash, so
+    training is uncorrelated with ingestion-time id assignment; vec_id
+    breaks hash ties), vec_id-sorted so whatever trains on it is
+    deterministic at any parallelism."""
+    sample = e.orderBy(F.xxhash64("vec_id"), "vec_id").limit(cap)
+    _, vecs = _collect_id_emb(sample.select("vec_id", "embedding"))
+    return np.array(vecs, dtype=np.float64)
 
 
 def _bad_element(x):
@@ -519,6 +541,18 @@ def _hyperplane_buckets_udf(dim: int, n_planes: int = _LSH_PLANES):
         return pd.Series(ids.tolist())
 
     return buckets
+
+
+def _hyperplane_bucket_rows(emb, stats, *cols: str):
+    """The one LSH bucket-assignment stage of d06 and d26: the dense
+    store (see dense_embeddings) → one row per (vector, table) holding
+    `cols` and its `bucket`, with the plane count sized by the store
+    (_adaptive_planes: constant mean occupancy at any n, so candidate
+    volume stays O(n·occupancy·tables) instead of saturating at
+    n·cap·tables)."""
+    emb, n_rows, dim = dense_embeddings(emb, stats)
+    buckets = _hyperplane_buckets_udf(dim, _adaptive_planes(n_rows))
+    return emb.select(*cols, F.explode(buckets("embedding")).alias("bucket"))
 
 
 @q("d06_ann_lsh_bucketed")  # ⊘ rows-only (approximate; recall gated by d14)
@@ -734,16 +768,8 @@ def _hyperplane_scored_pairs(emb, stats: tuple[int, int, dict] | None = None):
     dropped rows are strictly beaten by ≥3 kept same-bucket rows even
     after F.round(·,4), so the global rounded top-3 per query is
     bit-identical while the dedup+window input shrinks ~3×."""
-    emb, n_rows, dim = dense_embeddings(emb, stats)
-    n_planes = _adaptive_planes(n_rows)
     e = (
-        emb.select(
-            "vec_id",
-            "embedding",
-            F.explode(_hyperplane_buckets_udf(dim, n_planes)("embedding")).alias(
-                "bucket"
-            ),
-        )
+        _hyperplane_bucket_rows(emb, stats, "vec_id", "embedding")
         .select("bucket", "vec_id", F.xxhash64("vec_id").alias("h"), "embedding")
         .repartition(F.col("bucket"))
     )
@@ -916,15 +942,7 @@ def _hyperplane_id_pairs(emb, stats: tuple[int, int, dict] | None = None):
     out by ingestion time would systematically under-serve newer docs
     in hot buckets — while a hash rank spreads representation uniformly
     over members; vec_id stays as the deterministic tie-break."""
-    # n sizes the per-table bucket space (round 5): constant mean
-    # occupancy at any n, so candidate volume stays
-    # O(n·occupancy·tables) instead of saturating at n·cap·tables
-    emb, n_rows, dim = dense_embeddings(emb, stats)
-    n_planes = _adaptive_planes(n_rows)
-    e = emb.select(
-        "vec_id",
-        F.explode(_hyperplane_buckets_udf(dim, n_planes)("embedding")).alias("bucket"),
-    )
+    e = _hyperplane_bucket_rows(emb, stats, "vec_id")
     wb = Window.partitionBy("bucket").orderBy(F.xxhash64("vec_id"), "vec_id")
     reps = (
         e.withColumn("rn", F.row_number().over(wb))
@@ -975,10 +993,7 @@ def hyperplane_ann(emb):
             )
         ).alias("p")
     ).select("p.q_id", "p.vec_id", "p.cosine")
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return directed.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 3).select(
-        "q_id", "vec_id", "cosine"
-    )
+    return _per_query_topk(directed, 3)
 
 
 _RECALL_QUERIES = 50  # d14 evaluation set: vec_id < 50
@@ -1062,17 +1077,26 @@ def _ivf_centroids(e, sf, n: int) -> np.ndarray:
     return _ivf_cache[key]
 
 
+def _nearest_cells(X: np.ndarray, C: np.ndarray, n: int) -> np.ndarray:
+    """The one nearest-centroid kernel of every IVF path: for each row of
+    X (dense vectors), the indices of its `n` most cosine-similar rows of
+    the unit-norm centroid matrix C, best first. One batch matmul; a
+    stable sort, so equal similarities (duplicate centroids) rank the
+    lowest centroid index first everywhere."""
+    norms = np.array([np.linalg.norm(v) for v in X])
+    sims = (X / np.maximum(norms, 1e-30)[:, None]) @ C.T
+    return np.argsort(-sims, axis=1, kind="stable")[:, :n]
+
+
 def _ivf_cells_udf(C: np.ndarray, nprobe: int):
     """Pandas UDF: dense embedding → its `nprobe` nearest centroid cells
-    (one batch matmul; centroids ride the closure → shipped once per
+    (_nearest_cells; centroids ride the closure → shipped once per
     task)."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def cells(embs: pd.Series) -> pd.Series:
         X = np.stack(embs.to_list()).astype(np.float64)
-        norms = np.array([np.linalg.norm(v) for v in X])
-        sims = (X / np.maximum(norms, 1e-30)[:, None]) @ C.T
-        return pd.Series(np.argsort(-sims, axis=1)[:, :nprobe].tolist())
+        return pd.Series(_nearest_cells(X, C, nprobe).tolist())
 
     return cells
 
@@ -1125,10 +1149,7 @@ def ivf_topk(e, C: np.ndarray, stats: tuple[int, int, dict] | None = None):
     sims = _cell_topk_cosine(qs, data, "cell").select(
         "q_id", "vec_id", F.round(F.col("cosine"), 4).alias("cosine")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return sims.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 3).select(
-        "q_id", "vec_id", "cosine"
-    )
+    return _per_query_topk(sims, 3)
 
 
 # ---------------------------------------------------------------- ivf2
@@ -1168,16 +1189,9 @@ _IVF2_LEAF_STRIDE = 1 << 20  # leaf id = tcell * STRIDE + sub (k2 << STRIDE)
 
 def _train_centroids_df(e, k: int) -> np.ndarray:
     """The IVF trainer over any dense (vec_id, embedding) DataFrame:
-    seeded spherical k-means over the max(_IVF_TRAIN_CAP, 8k)
-    lowest-xxhash64 rows, vec_id-sorted so the centroids are
-    deterministic at any parallelism."""
-    cap = max(_IVF_TRAIN_CAP, 8 * k)
-    _, vecs = _collect_id_emb(
-        e.orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(cap)
-        .select("vec_id", "embedding")
-    )
-    X = np.stack(vecs)
+    seeded spherical k-means over its max(_IVF_TRAIN_CAP, 8k)-row
+    _hash_sample."""
+    X = _hash_sample(e, max(_IVF_TRAIN_CAP, 8 * k))
     return _spherical_kmeans(X, k=min(k, len(X)))
 
 
@@ -1217,8 +1231,7 @@ def _ivf2_sub_centroids(data_top, k2: int):
 def _ivf2_assign(vecs_top, subc, nsub: int):
     """Cogroup (vectors by top cell) × (that cell's sub-centroids) →
     (vec_id, embedding, leaf) with each vector's `nsub` nearest leaves
-    in its top cell — one batched matmul per cell, stable argsort so
-    dense ties break by centroid index identically everywhere. The
+    in its top cell — one _nearest_cells call per cell. The
     embedding rides through (it is already in the cogroup stream;
     re-attaching it later would cost a second full-width shuffle)."""
 
@@ -1237,10 +1250,8 @@ def _ivf2_assign(vecs_top, subc, nsub: int):
         C = np.asarray(cdf["cents"].iloc[0], dtype=np.float64).reshape(k, dim)
         tcell = int(key[0])
         X = np.stack(vdf["embedding"].to_list()).astype(np.float64)
-        norms = np.array([np.linalg.norm(v) for v in X])
-        sims = (X / np.maximum(norms, 1e-30)[:, None]) @ C.T
         m = min(nsub, k)
-        top = np.argsort(-sims, axis=1, kind="stable")[:, :m]
+        top = _nearest_cells(X, C, m)
         rows = np.repeat(np.arange(len(X)), m)
         return pd.DataFrame(
             {
@@ -1298,10 +1309,7 @@ def ivf2_topk(
     sims = _cell_topk_cosine(qs, dd, "leaf").select(
         "q_id", "vec_id", F.round(F.col("cosine"), 4).alias("cosine")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return sims.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 3).select(
-        "q_id", "vec_id", "cosine"
-    )
+    return _per_query_topk(sims, 3)
 
 
 def _exact_top3(spark, sf):
@@ -1315,10 +1323,7 @@ def _exact_top3(spark, sf):
     sims = j.select(
         "q_id", "vec_id", _cosine(F.col("embedding"), F.col("qe")).alias("cosine")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return sims.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= 3
-    ).select("q_id", "vec_id")
+    return _per_query_topk(sims, 3).select("q_id", "vec_id")
 
 
 @q("d14_ann_recall")  # ⊘ rows-only (meta-metric over approximate ops)
@@ -4073,6 +4078,44 @@ def _pq_ksub(n_vecs: int) -> int:
     return int(min(_PQ_KSUB_MAX, max(4, 2 ** round(math.log2(n_vecs / 16)))))
 
 
+def _pq_assign(Xb: np.ndarray, Cb: np.ndarray) -> np.ndarray:
+    """The one PQ block assignment: each row of the subvector block Xb →
+    index of its L2-nearest codeword in Cb. ||x-c||² = ||x||² - 2x·c +
+    ||c||² and ||x||² is rank-constant, so argmin(-2x·c + ||c||²) — one
+    BLAS matmul, never the (n, k, dsub) difference tensor (which made
+    training at ksub=256 the whole d46 wall clock)."""
+    return (-2.0 * (Xb @ Cb.T) + (Cb**2).sum(1)[None, :]).argmin(1)
+
+
+def _pq_codes(X: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """PQ codes (n, m) of the rows of X under codebooks (m, ksub, dsub):
+    _pq_assign per dsub-wide block."""
+    m, _, dsub = books.shape
+    codes = np.empty((X.shape[0], m), dtype=np.int64)
+    for b in range(m):
+        codes[:, b] = _pq_assign(X[:, b * dsub : (b + 1) * dsub], books[b])
+    return codes
+
+
+def _adc_tables(Q: np.ndarray, books: np.ndarray):
+    """Per-query ADC lookup tables for the query rows Q: T[q, b, c] =
+    dot(query q's block b, codeword c) and norms2[b, c] = ||c||²."""
+    m, _, dsub = books.shape
+    T = np.einsum("qbd,bcd->qbc", Q.reshape(len(Q), m, dsub), books)
+    return T, (books**2).sum(2)
+
+
+def _adc(T: np.ndarray, norms2: np.ndarray, codes: np.ndarray, qi=slice(None)):
+    """The one ADC scorer over PQ codes (B, m) and _adc_tables:
+    (dots, vnorm). vnorm (B,) is each row's reconstruction norm
+    sqrt(Σ_b norms2[b, code_b]); dots is the table gather-sum
+    Σ_b T[q, b, code_b] — a (q, B) grid against every query, or (B,)
+    with row i scored against query qi[i, 0] when qi is a (B, 1) index
+    column. Callers divide by the query norms in their own order."""
+    blocks = np.arange(codes.shape[1])[None, :]
+    return T[qi, blocks, codes].sum(-1), np.sqrt(norms2[blocks, codes].sum(1))
+
+
 def _pq_train(X: np.ndarray, m: int = _PQ_M, ksub: int | None = None) -> np.ndarray:
     """Per-subspace k-means codebooks (m, ksub, dsub): deterministic
     farthest-point init (seeded at the point with the lowest sha-free
@@ -4088,7 +4131,6 @@ def _pq_train(X: np.ndarray, m: int = _PQ_M, ksub: int | None = None) -> np.ndar
     books = np.empty((m, k, dsub))
     for b in range(m):
         Xb = np.ascontiguousarray(X[:, b * dsub : (b + 1) * dsub])
-        xb_sq = (Xb**2).sum(1)
         # farthest-point init, deterministic
         cent = [Xb[0]]
         d2 = ((Xb - cent[0]) ** 2).sum(1)
@@ -4097,10 +4139,7 @@ def _pq_train(X: np.ndarray, m: int = _PQ_M, ksub: int | None = None) -> np.ndar
             d2 = np.minimum(d2, ((Xb - cent[-1]) ** 2).sum(1))
         C = np.array(cent)
         for _ in range(25):
-            # argmin ||x-c||^2 = argmin(-2 x.c + ||c||^2): one BLAS
-            # matmul, never the (n, k, dsub) difference tensor (which
-            # made training at ksub=256 the whole d46 wall clock)
-            a = (-2.0 * (Xb @ C.T) + (C**2).sum(1)[None, :]).argmin(1)
+            a = _pq_assign(Xb, C)
             counts = np.bincount(a, minlength=k).astype(np.float64)
             sums = np.column_stack(
                 [np.bincount(a, weights=Xb[:, j], minlength=k) for j in range(dsub)]
@@ -4117,24 +4156,15 @@ def _pq_train(X: np.ndarray, m: int = _PQ_M, ksub: int | None = None) -> np.ndar
 
 
 def _pq_encode_udf(books: np.ndarray):
-    """codes = per-block argmin-L2 codeword index, fully vectorized per
-    Arrow batch: ||x-c||^2 = ||x||^2 - 2x.c + ||c||^2 and ||x||^2 is
-    rank-constant, so argmin(-2 x.c + ||c||^2) — one (B, ksub) matmul
-    per block, no pairwise distance tensor."""
-    m, k, dsub = books.shape
+    """Pandas UDF: embedding → its PQ codes (_pq_codes), one (B, ksub)
+    matmul per block per Arrow batch."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def enc(embs: pd.Series) -> pd.Series:
         X = np.array(embs.to_list(), dtype=np.float64)
         if X.size == 0:
             return pd.Series([], dtype=object)
-        codes = np.empty((X.shape[0], m), dtype=np.int64)
-        for b in range(m):
-            Xb = X[:, b * dsub : (b + 1) * dsub]
-            Cb = books[b]
-            scores = -2.0 * (Xb @ Cb.T) + (Cb**2).sum(1)[None, :]
-            codes[:, b] = scores.argmin(1)
-        return pd.Series(list(codes))
+        return pd.Series(list(_pq_codes(X, books)))
 
     return enc
 
@@ -4149,12 +4179,9 @@ def pq_topk(emb, queries: np.ndarray, q_ids: list, books: np.ndarray, k: int = 3
     comes from the codeword norms (exact when reconstruction is exact,
     i.e. on the d47 planted store). One shuffle total: the per-query
     top-k window on (rounded cosine desc, vec_id)."""
-    m, ksub, dsub = books.shape
     Q = np.asarray(queries, dtype=np.float64)  # (q, dim)
     qn = np.sqrt((Q**2).sum(1))
-    # T[q, b, c] = dot(query_q block b, codeword c); norms2[b, c] = ||c||^2
-    T = np.einsum("qbd,bcd->qbc", Q.reshape(len(Q), m, dsub), books)
-    norms2 = (books**2).sum(2)
+    T, norms2 = _adc_tables(Q, books)
     spark = emb.sparkSession
     bT, bN = spark.sparkContext.broadcast(T), spark.sparkContext.broadcast(norms2)
     b_books = spark.sparkContext.broadcast(books)
@@ -4165,27 +4192,12 @@ def pq_topk(emb, queries: np.ndarray, q_ids: list, books: np.ndarray, k: int = 3
     # gather/sum/normalize expressions are verbatim, so every emitted
     # double is unchanged (see _matrix_topk_arrow).
     def cos_batch(X: np.ndarray) -> np.ndarray:
-        bk = b_books.value
-        C = np.empty((X.shape[0], m), dtype=np.int64)
-        for b in range(m):
-            Xb = X[:, b * dsub : (b + 1) * dsub]
-            Cb = bk[b]
-            scores = -2.0 * (Xb @ Cb.T) + (Cb**2).sum(1)[None, :]
-            C[:, b] = scores.argmin(1)
-        t, n2 = bT.value, bN.value
-        dots = t[:, np.arange(m)[None, :], C].sum(2)  # (q, B)
-        vnorm = np.sqrt(n2[np.arange(m)[None, :], C].sum(1))  # (B,)
+        dots, vnorm = _adc(bT.value, bN.value, _pq_codes(X, b_books.value))
         with np.errstate(divide="ignore", invalid="ignore"):
             cos = dots / (qn[:, None] * vnorm[None, :])
         return np.round(cos.T, 4)
 
-    scored = _matrix_topk_arrow(emb, q_ids, k, cos_batch)
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine")
-    )
+    return _per_query_topk(_matrix_topk_arrow(emb, q_ids, k, cos_batch), k)
 
 
 _PQ_TRAIN_CAP = 2048  # bounded driver-side training sample (faiss shape)
@@ -4194,21 +4206,14 @@ _pq_cache: dict = {}
 
 def _pq_books(e, sf, n: int, dim: int) -> np.ndarray:
     """Codebooks for the dense store `e` of `n` `dim`-d vectors, cached
-    per sf, from its max(_PQ_TRAIN_CAP, 32·ksub) lowest-xxhash64(vec_id)
-    rows — the _ivf_centroids sampling rule verbatim (uniform-hash
-    TakeOrdered, uncorrelated with id assignment)."""
+    per sf, from its max(_PQ_TRAIN_CAP, 32·ksub)-row _hash_sample (the
+    IVF trainer's sample rule)."""
     ksub = _pq_ksub(n)
     cap = max(_PQ_TRAIN_CAP, 32 * ksub)
     key = (sf, dim, ksub, cap)
     if key in _pq_cache:
         return _pq_cache[key]
-    _, vecs = _collect_id_emb(
-        e.orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(cap)
-        .select("vec_id", "embedding")
-    )
-    X = np.array(vecs, dtype=np.float64)
-    _pq_cache[key] = _pq_train(X, m=_PQ_M, ksub=ksub)
+    _pq_cache[key] = _pq_train(_hash_sample(e, cap), m=_PQ_M, ksub=ksub)
     return _pq_cache[key]
 
 
@@ -4228,10 +4233,7 @@ def d46(spark, sf):
     scan so its recall is measured in isolation."""
     e, n, dim = dense_embeddings(t_spread(spark, sf, "embeddings"))
     books = _pq_books(e, sf, n, dim)
-    q_ids, qvecs = _collect_id_emb(
-        e.filter(F.col("vec_id") < _RECALL_QUERIES).select("vec_id", "embedding")
-    )
-    Q = np.array(qvecs, dtype=np.float64)
+    q_ids, Q = _query_set(e, _RECALL_QUERIES, dim)
     return pq_refined_topk(e, Q, q_ids, books)
 
 
@@ -4351,12 +4353,7 @@ def _exact_refine(e, short, queries: np.ndarray, q_ids: list, k: int):
         "q_id", "vec_id",
         F.round(_cosine(F.col("embedding"), F.col("qe")), 4).alias("cosine"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine")
-    )
+    return _per_query_topk(sims, k)
 
 
 # ------------------------------------------ IVF-PQ composition (d49 / d50)
@@ -4388,14 +4385,11 @@ def ivfpq_topk(
     covers every true neighbor's home cell (the planted store) and the
     true top-k ADC-rank inside the shortlist, the refined output is
     bit-equal to brute force."""
-    m, ksub, dsub = books.shape
     Q = np.asarray(queries, dtype=np.float64)
     qn = np.sqrt((Q**2).sum(1))
-    Qn = Q / np.maximum(qn, 1e-30)[:, None]
     # driver-side probe assignment (queries are already a bounded
     # driver-side set — the d46/_pq_books shape)
-    Cn = C / np.maximum(np.sqrt((C**2).sum(1)), 1e-30)[:, None]
-    probe = np.argsort(-(Qn @ Cn.T), axis=1)[:, : min(nprobe, C.shape[0])]
+    probe = _nearest_cells(Q, C, nprobe)
     spark = e.sparkSession
     probe_rows = [
         (int(q_ids[qi]), int(qi), int(c))
@@ -4404,8 +4398,7 @@ def ivfpq_topk(
     ]
     probe_df = spark.createDataFrame(probe_rows, "q_id long, qi int, cell long")
 
-    T = np.einsum("qbd,bcd->qbc", Q.reshape(len(Q), m, dsub), books)
-    norms2 = (books**2).sum(2)
+    T, norms2 = _adc_tables(Q, books)
     bT = spark.sparkContext.broadcast(T)
     bN = spark.sparkContext.broadcast(norms2)
 
@@ -4424,10 +4417,7 @@ def ivfpq_topk(
             return pd.Series([], dtype=float)
         Cd = np.array(codes.to_list(), dtype=np.int64)  # (B, m)
         qv = qis.to_numpy(dtype=np.int64)
-        t_, n2 = bT.value, bN.value
-        blocks = np.arange(m)[None, :]
-        dots = t_[qv[:, None], blocks, Cd].sum(1)
-        vnorm = np.sqrt(n2[blocks, Cd].sum(1))
+        dots, vnorm = _adc(bT.value, bN.value, Cd, qv[:, None])
         return pd.Series(dots / (qn[qv] * np.maximum(vnorm, 1e-30)))
 
     j = (
@@ -4436,12 +4426,7 @@ def ivfpq_topk(
         .select("q_id", "qi", "vec_id", "codes")
     )
     scored = j.select("q_id", "vec_id", adc("qi", "codes").alias("adc"))
-    w = Window.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("vec_id"))
-    short = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= shortlist)
-        .select("q_id", "vec_id")
-    )
+    short = _per_query_topk(scored, shortlist, "adc").select("q_id", "vec_id")
     # exact refine: only shortlist rows' raw vectors are read back
     return _exact_refine(e, short, Q, q_ids, k)
 
@@ -4458,10 +4443,7 @@ def d49(spark, sf):
     e, n, dim = dense_embeddings(t_spread(spark, sf, "embeddings"))
     C = _ivf_centroids(e, sf, n)
     books = _pq_books(e, sf, n, dim)
-    q_ids, qvecs = _collect_id_emb(
-        e.filter(F.col("vec_id") < _RECALL_QUERIES).select("vec_id", "embedding")
-    )
-    Q = np.array(qvecs, dtype=np.float64)
+    q_ids, Q = _query_set(e, _RECALL_QUERIES, dim)
     return ivfpq_topk(e, C, books, Q, q_ids)
 
 
@@ -6147,13 +6129,7 @@ def sq8_topk(emb, queries: np.ndarray, q_ids: list, mn: np.ndarray,
             cos = dots / (vnorm[:, None] * qn[None, :])
         return np.round(cos, 4)
 
-    scored = _matrix_topk_arrow(emb, q_ids, k, cos_batch)
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine")
-    )
+    return _per_query_topk(_matrix_topk_arrow(emb, q_ids, k, cos_batch), k)
 
 
 def sq8_refined_topk(e, queries: np.ndarray, q_ids: list, mn: np.ndarray,
@@ -6174,10 +6150,7 @@ def d72(spark, sf):
     tests/test_dataops_session4.py."""
     e, _, dim = dense_embeddings(t_spread(spark, sf, "embeddings"))
     mn, mx = sq8_minmax(e, dim)
-    q_ids, qvecs = _collect_id_emb(
-        e.filter(F.col("vec_id") < _RECALL_QUERIES).select("vec_id", "embedding")
-    )
-    Q = np.array(qvecs, dtype=np.float64)
+    q_ids, Q = _query_set(e, _RECALL_QUERIES, dim)
     return sq8_refined_topk(e, Q, q_ids, mn, mx)
 
 
@@ -6247,10 +6220,8 @@ def d73(spark, sf):
     p = os.path.join(sq8_store_dir(), "embeddings.parquet")
     e, _, dim = dense_embeddings(spark.read.parquet(p))
     mn, mx = sq8_minmax(e, dim)
-    qrows = e.filter(F.col("vec_id") < _SQ8G_QUERIES).select("vec_id", "embedding").collect()
-    qrows.sort(key=lambda r: r["vec_id"])
-    Q = np.array([r["embedding"] for r in qrows], dtype=np.float64)
-    return sq8_topk(e, Q, [r["vec_id"] for r in qrows], mn, mx)
+    q_ids, Q = _query_set(e, _SQ8G_QUERIES, dim)
+    return sq8_topk(e, Q, q_ids, mn, mx)
 
 
 # ------------------------------------------------------ session-5 ops

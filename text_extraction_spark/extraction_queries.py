@@ -22,24 +22,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .relational import t, t_spread
+from .relational import query_registry, t, t_spread
 
 QUERIES: dict = {}
 ORACLES: dict[str, str] = {}
+q = query_registry(QUERIES, ORACLES)
 
 _CORPUS_VERSION = "v6"  # v6: 5-angle skew refinement changed skewed-media
 # golden text (v5: + media_golden.parquet for the x03/x06 value oracles)
 _CORPUS_DOCS = 250
-
-
-def q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
 
 
 # ------------------------------------------------ oracle-checked (testdata)

@@ -95,18 +95,26 @@ def t_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def query_registry(queries: dict, oracles: dict):
+    """The `q(name, sql=None)` decorator each query module registers its
+    builders with: `queries[name] = fn`, plus `oracles[name] = sql` when
+    an oracle SQL is given."""
+
+    def q(name: str, sql: str | None = None):
+        def deco(fn):
+            queries[name] = fn
+            if sql is not None:
+                oracles[name] = sql
+            return fn
+
+        return deco
+
+    return q
+
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
-
-
-def q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+q = query_registry(QUERIES, ORACLES)
 
 
 # --------------------------------------------------------------- Q1 scan/prune

@@ -155,14 +155,7 @@ def run_ivf2(copies: int = 256, label: str = "d15/ivf2 two-level") -> None:
         "q_id", "vec_id",
         F.round(D._cosine(F.col("embedding"), F.col("qe")), 4).alias("cosine"),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    truth = (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("q_id", "vec_id")
-    )
+    truth = D._per_query_topk(sims, 3).select("q_id", "vec_id")
     n_hit = truth.join(hits.select("q_id", "vec_id"), ["q_id", "vec_id"]).count()
     recall = n_hit / (3 * D._RECALL_QUERIES)
     # linearity vs the round-5 sf1 flat-path measurement (22.3 s @ 20k)
