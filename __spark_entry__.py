@@ -292,8 +292,8 @@ def oracle_sql() -> dict[str, str]:
     # d36 — d13's MinHash→verify stage vs DuckDB brute-force all-pairs
     # Jaccard on d30's planted substitution-group corpus
     out["d36_neardup_verified_golden"] = dataops.d36_oracle_sql()
-    # d38 — the degree-capped d26 verify stage vs DuckDB brute force on
-    # the planted 100-member-cluster store (round 6)
+    # d38 — d26's bucket-grid verify vs DuckDB brute force on the
+    # planted 100-member-cluster store (round 6)
     out["d38_bigcluster_dedup_golden"] = dataops.d38_oracle_sql()
     # d47 — the PQ encode→ADC pipeline vs DuckDB brute force on the
     # planted PQ-exact store (round 6)

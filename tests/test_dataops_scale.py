@@ -46,17 +46,17 @@ def test_lsh_bucket_small_keeps_all_pairs(spark):
 def test_ann_bucket_cap_degenerate_store(spark):
     """10 000 identical embeddings collapse into ONE bucket per
     hyperplane table — exactly the degenerate store a dedup-bound corpus
-    contains. The capped generator must emit O(n·cap) candidate pairs
-    (every member paired with the _ANN_BUCKET_CAP lowest-id
-    representatives, reps all-pairs among themselves), never the
-    ~50M O(n²) pairs the uncapped self-join would emit in one task."""
+    contains. The capped grid's threshold path must emit O(n·cap)
+    distinct pairs (every member paired with the _ANN_BUCKET_CAP
+    lowest-(xxhash64, vec_id) representatives, reps all-pairs among
+    themselves), never the ~50M O(n²) pairs of an uncapped bucket."""
     n = 10_000
     cap = dataops._ANN_BUCKET_CAP
     emb = spark.createDataFrame(
         [(i, [1.0, -0.5] * 8) for i in range(n)],
         "vec_id long, embedding array<double>",
     )
-    n_pairs = dataops._hyperplane_id_pairs(emb).count()
+    n_pairs = dataops._hyperplane_scored_pairs(emb, threshold=0.30).count()
     assert n_pairs == cap * (cap - 1) // 2 + cap * (n - cap)
 
 
@@ -87,7 +87,7 @@ def test_ann_bucket_cap_connectivity(spark):
         [(i, [0.25, 1.0] * 8) for i in range(n)],
         "vec_id long, embedding array<double>",
     )
-    pairs = dataops._hyperplane_id_pairs(emb).selectExpr(
+    pairs = dataops._hyperplane_scored_pairs(emb, threshold=0.30).selectExpr(
         "ua as a", "ub as b"
     )
     cc = dataops._connected_components(pairs).collect()
@@ -97,7 +97,8 @@ def test_ann_bucket_cap_connectivity(spark):
 
 def test_ann_small_buckets_keep_all_pairs(spark):
     """Buckets at or under the cap keep exact all-pairs candidates —
-    the cap only degrades hot buckets."""
+    the cap only degrades hot buckets. With a -inf threshold the grid
+    emits every candidate it scores."""
     rng = np.random.Generator(np.random.PCG64(3))
     vecs = rng.standard_normal((40, 16))
     emb = spark.createDataFrame(
@@ -105,7 +106,8 @@ def test_ann_small_buckets_keep_all_pairs(spark):
         "vec_id long, embedding array<double>",
     )
     got = {
-        (r["ua"], r["ub"]) for r in dataops._hyperplane_id_pairs(emb).collect()
+        (r["ua"], r["ub"])
+        for r in dataops._hyperplane_scored_pairs(emb, threshold=float("-inf")).collect()
     }
     # reference: uncapped bucket co-membership over the same seeded UDF
     # at the SAME adaptive plane count the pair generator picks for n=40
@@ -697,12 +699,14 @@ def test_embedding_contract_drops_zero_and_non_finite_rows(spark, tmp_path):
 
 
 def test_fold_kernel_matches_jvm_cosine_bitwise(spark):
-    """The numpy kernel in its pair shape (_pair_cosine_arrow) and grid
-    shape (_cell_topk_cosine with the margin filter disabled) returns
-    exactly the doubles of the JVM _cosine fold — no rounding. In the
-    pair shape a zero vector divides by a zero norm: numpy yields NaN,
-    and the JVM, which raises under ANSI mode, yields null with ANSI
-    off, in the same places."""
+    """The numpy kernel in its LSH bucket-grid shape
+    (_hyperplane_scored_pairs on its threshold path, every pair kept)
+    and its cell-grid shape (_cell_topk_cosine with the margin filter
+    disabled) returns exactly the doubles of the JVM _cosine fold — no
+    rounding. Both grids run behind the store boundary, which drops the
+    zero row 7 (test_embedding_contract_drops_zero_and_non_finite_rows);
+    the JVM fold over it, which raises under ANSI mode, yields null with
+    ANSI off."""
     import math
 
     rng = np.random.default_rng(5)
@@ -731,18 +735,16 @@ def test_fold_kernel_matches_jvm_cosine_bitwise(spark):
         # the cogroup's pandas→Arrow return turns NaN into null
         return (x is None or math.isnan(x)) if y is None else x == y
 
-    pair = {
-        (r.a, r.b): r.cosine
-        for r in dataops._pair_cosine_arrow(pairs, "a", "b", "ea", "eb").collect()
-    }
-    assert pair.keys() == jvm.keys()
-    assert all(same(pair[k], jvm[k]) for k in jvm)
-    assert sum(math.isnan(c) for c in pair.values()) == 2 * (len(X) - 1)
-
-    # the grid shape runs behind the store boundary, which drops the
-    # zero row 7 (test_embedding_contract_drops_zero_and_non_finite_rows)
-    cell = F.col("vec_id") % 2
     dense = emb.filter(F.col("vec_id") != 7)
+    # pairs come out as (min id, max id), divided by |min| then |max|
+    bucket = {
+        (r.ua, r.ub): r.cosine
+        for r in dataops._hyperplane_scored_pairs(dense, threshold=float("-inf")).collect()
+    }
+    assert bucket and all(a < b and 7 not in (a, b) for a, b in bucket)
+    assert all(bucket[k] == jvm[k] for k in bucket)
+
+    cell = F.col("vec_id") % 2
     qs = dense.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe"), cell.alias("c"))
     data = dense.select("vec_id", "embedding", cell.alias("c"))
     grid = {
@@ -799,6 +801,40 @@ def test_embedding_dedup_pipeline_keep_semantics(spark):
         keepers = [m for m in members if m.keep]
         assert len(keepers) == 1
         assert keepers[0].vec_id == min(m.vec_id for m in members)
+
+
+def test_embedding_dedup_pipeline_equals_exact_partition(spark):
+    """d26 at sf0.001 is the EXACT answer: the components of the graph
+    of every pair with cosine >= 0.30 (the same _fold_dot doubles and
+    division order dot / |min id| / |max id|), each labelled by its min
+    vec_id, over the vectors that have an edge. The bucket grid keeps
+    only true edges, so d26 can only fall short of this partition by a
+    missed connection."""
+    got = {
+        r.vec_id: r.component
+        for r in dataops.QUERIES["d26_embedding_dedup_pipeline"](spark, SF).collect()
+    }
+    e, _, _ = dataops.dense_embeddings(spark.read.parquet(f"{SF}/embeddings.parquet"))
+    pdf = e.select("vec_id", "embedding").toPandas().sort_values("vec_id")
+    ids = pdf["vec_id"].to_numpy()
+    X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]).T
+    norms = np.sqrt(dataops._fold_dot(X, X))
+    cos = dataops._fold_dot(X[:, :, None], X[:, None, :]) / norms[:, None] / norms[None, :]
+    ia, ib = np.nonzero(np.triu(cos >= 0.30, k=1))
+    parent = np.arange(len(ids))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in zip(ia, ib):
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = {int(ids[v]): int(ids[find(v)]) for v in set(ia) | set(ib)}
+    assert len(set(want.values())) > 1
+    assert got == want
 
 
 def test_connected_components_hypothesis_random_graphs(spark):
@@ -904,6 +940,26 @@ def test_connected_components_reliable_checkpoint(tmp_path):
     assert "CC-CKPT-OK" in proc.stdout
 
 
+def test_connected_components_evaluates_input_once(spark):
+    """The edge lineage runs ONCE: every input row passes the counting
+    UDF exactly once, however many rounds follow. The vertex set still
+    holds vertex 100, which appears only on a self-loop."""
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def bump(a):
+        acc.add(1)
+        return a
+
+    rows = [(i, i + 1) for i in range(30)] + [(100, 100), (3, 4)]
+    e = spark.createDataFrame(rows, "a: long, b: long").select(
+        bump.asNondeterministic()("a").alias("a"), "b"
+    )
+    got = {r.id: r.component for r in dataops._connected_components(e).collect()}
+    assert got == {**{i: 0 for i in range(31)}, 100: 100}
+    assert acc.value == len(rows)
+
+
 def test_per_source_cap_exact_under_skew(spark):
     """d37's two-stage salted top-K must equal the single-window
     reference EXACTLY on a deliberately skewed store (one source holds
@@ -1000,10 +1056,9 @@ def test_hyperplane_buckets_param_planes_deterministic():
 
 
 def test_d38_bigcluster_golden_matches_duckdb_oracle(spark):
-    """d38 (round 6): the degree-capped verify stage must reproduce
-    DuckDB's brute-force + recursive-CTE answer on the planted
-    100-member-cluster store — the keep-set-unchanged proof VERDICT r5
-    asked for when capping d26's intra-cluster verify fan-in."""
+    """d38 (round 6): d26's bucket-grid verify must reproduce DuckDB's
+    brute-force + recursive-CTE answer on the planted 100-member-cluster
+    store, whose buckets overflow the representative cap."""
     import duckdb
 
     from text_extraction_spark.oracle_check import compare
@@ -1037,57 +1092,6 @@ def test_bigcluster_store_margins():
     iu = np.triu_indices(len(X), k=1)
     assert np.abs(cos[iu] - dataops._NEARDUP_THRESHOLD).min() > 0.005
     assert dataops.bigcluster_store_dir() == d  # cached, no rebuild
-
-
-def test_cap_pair_degree_small_degrees_untouched(spark):
-    """A candidate graph whose every vertex has <= cap neighbors must
-    pass through _cap_pair_degree exactly — sparse stores (and the d28
-    chain golden) are bit-identical under the cap."""
-    pairs = [(i, i + 1, 32) for i in range(0, 40, 2)]  # disjoint edges
-    df = spark.createDataFrame(pairs, "ua long, ub long, collisions long")
-    out = sorted(
-        (r.ua, r.ub) for r in dataops._cap_pair_degree(df, cap=4).collect()
-    )
-    assert out == [(a, b) for a, b, _ in pairs]
-
-
-def test_cap_pair_degree_clique_stays_connected_linear_edges(spark):
-    """A K-member clique of max-collision candidates (the viral-
-    boilerplate shape) must come out of the cap (a) connected and
-    (b) with O(K·cap) edges, not O(K²)."""
-    K, cap = 80, 8
-    pairs = [
-        (a, b, 64) for a in range(K) for b in range(a + 1, K)
-    ]
-    df = spark.createDataFrame(pairs, "ua long, ub long, collisions long")
-    kept = [(r.ua, r.ub) for r in dataops._cap_pair_degree(df, cap=cap).collect()]
-    assert len(kept) <= K * cap, len(kept)
-    assert len(kept) < K * (K - 1) // 2
-    # union-find connectivity over the kept edges
-    parent = list(range(K))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in kept:
-        parent[find(a)] = find(b)
-    assert len({find(x) for x in range(K)}) == 1
-
-
-def test_cap_pair_degree_prefers_high_collision_edges(spark):
-    """Collision-weight ranking: a vertex swamped by single-collision
-    noise candidates must still keep its max-collision true neighbor
-    (pure hash ranking measurably broke the chain golden here)."""
-    noise = [(0, v, 1) for v in range(10, 200)]
-    true_edge = [(0, 1, 32)]
-    df = spark.createDataFrame(
-        noise + true_edge, "ua long, ub long, collisions long"
-    )
-    kept = {(r.ua, r.ub) for r in dataops._cap_pair_degree(df, cap=4).collect()}
-    assert (0, 1) in kept
 
 
 def test_ivf2_recall_and_determinism(spark):

@@ -199,43 +199,46 @@ def _exchange_blocks(df):
     return re.findall(r"\(\d+\) Exchange[\s\S]*?(?=\n\(\d+\)|\Z)", buf.getvalue())
 
 
-def test_ann_bucket_exchange_carries_ids_only(spark):
-    """d26 (round 4): the hyperplane bucket shuffle must move
-    (vec_id, bucket) rows only — embeddings are re-attached by slim
-    join-back AFTER pair dedup and degree capping. An embedding column
-    in a bucket-partitioned Exchange is the _LSH_TABLES× heavy-column
-    amplification round 4 removed.
-
-    d06 (round 7) intentionally INVERTS this: pairs are scored inside
-    the bucket stage (guide §8), so the bucket exchange carries each
-    embedding once per membership (n·tables rows) and NO later exchange
-    carries embeddings at all — per-pair volume (n·tables·occupancy)
-    never moves. Pinned by test_ann_scored_pairs_exchange_is_slim."""
+def _d26_edges(spark, monkeypatch):
+    """d26's edge frame, exactly as embedding_dedup_pipeline hands it to
+    _connected_components (whose eager checkpoint would cut the plan)."""
     from text_extraction_spark import dataops
 
-    blocks = _exchange_blocks(dataops.QUERIES["d26_embedding_dedup_pipeline"](spark, SF))
-    assert blocks  # the bucket shuffle must exist
-    for b in blocks:
-        if "hashpartitioning(bucket" in b:
-            assert "embedding" not in b.lower(), b
+    seen = []
+
+    def spy(edges, max_iter=25):
+        seen.append(edges)
+        return edges.select(F.col("a").alias("id"), F.col("b").alias("component"))
+
+    monkeypatch.setattr(dataops, "_connected_components", spy)
+    dataops.QUERIES["d26_embedding_dedup_pipeline"](spark, SF)
+    (edges,) = seen
+    return edges
 
 
-def test_ann_scored_pairs_exchange_is_slim(spark):
-    """d06 (round 7): embeddings ride EXACTLY ONE exchange — the bucket
-    cogroup that feeds the in-bucket scorer. Every downstream exchange
-    (pair dedup on (ua, ub), the top-3 window on q_id) must carry ids +
-    cosine only; an embedding column there means the per-pair join-back
-    shape (2 heavy joins + 4 GB of pair traffic at sf1) crept back."""
+def test_ann_scored_pairs_exchange_is_slim(spark, monkeypatch):
+    """d06 (round 7) and d26's edges: embeddings ride EXACTLY ONE
+    exchange — the bucket cogroup that feeds the in-bucket scorer. Every
+    downstream exchange (pair dedup on (ua, ub), d06's top-3 window on
+    q_id) must carry ids + cosine only; an embedding column there means
+    the per-pair join-back shape (2 heavy joins + 4 GB of pair traffic
+    at sf1) crept back."""
     from text_extraction_spark import dataops
 
-    blocks = _exchange_blocks(dataops.QUERIES["d06_ann_lsh_bucketed"](spark, SF))
-    assert blocks
-    heavy = [b for b in blocks if "embedding" in b.lower()]
-    assert len(heavy) == 1, heavy
-    assert "hashpartitioning(bucket" in heavy[0], heavy[0]
-    for b in blocks:
-        if "hashpartitioning(ua" in b or "hashpartitioning(q_id" in b:
-            assert "embedding" not in b.lower(), b
+    frames = {
+        "d06": dataops.QUERIES["d06_ann_lsh_bucketed"](spark, SF),
+        "d26 edges": _d26_edges(spark, monkeypatch),
+    }
+    for name, df in frames.items():
+        blocks = _exchange_blocks(df)
+        assert blocks, name
+        heavy = [b for b in blocks if "embedding" in b.lower()]
+        assert len(heavy) == 1, (name, heavy)
+        assert "hashpartitioning(bucket" in heavy[0], (name, heavy[0])
+        slim = [b for b in blocks if "hashpartitioning(ua" in b or "hashpartitioning(q_id" in b]
+        assert slim, name
+        for b in slim:
+            assert "embedding" not in b.lower(), (name, b)
 
 
 def test_vocab_topk_never_full_sort(spark):

@@ -543,18 +543,6 @@ def _hyperplane_buckets_udf(dim: int, n_planes: int = _LSH_PLANES):
     return buckets
 
 
-def _hyperplane_bucket_rows(emb, stats, *cols: str):
-    """The one LSH bucket-assignment stage of d06 and d26: the dense
-    store (see dense_embeddings) → one row per (vector, table) holding
-    `cols` and its `bucket`, with the plane count sized by the store
-    (_adaptive_planes: constant mean occupancy at any n, so candidate
-    volume stays O(n·occupancy·tables) instead of saturating at
-    n·cap·tables)."""
-    emb, n_rows, dim = dense_embeddings(emb, stats)
-    buckets = _hyperplane_buckets_udf(dim, _adaptive_planes(n_rows))
-    return emb.select(*cols, F.explode(buckets("embedding")).alias("bucket"))
-
-
 @q("d06_ann_lsh_bucketed")  # ⊘ rows-only (approximate; recall gated by d14)
 def d06(spark, sf):
     """LSH-bucketed ANN (the scale path): _LSH_TABLES OR-amplified
@@ -562,25 +550,27 @@ def d06(spark, sf):
     one 12-plane table under-recalled; round-5 fix: a FIXED plane count
     saturates — bucket occupancy grows linearly with the store, see
     _LSH_TARGET_BUCKET). A pair is a candidate iff ANY table buckets
-    it together; candidates come from an ids-only bucket join with hot
-    buckets capped at _ANN_BUCKET_CAP representatives (round 4), so
-    work scales with target occupancy × cap × n, never corpus² — even
-    on a store of millions of identical embeddings. Recall vs the exact
+    it together; candidates are scored inside each bucket (see
+    _hyperplane_scored_pairs) with hot buckets capped at
+    _ANN_BUCKET_CAP representatives (round 4), so work scales with
+    target occupancy × cap × n, never corpus² — even on a store of
+    millions of identical embeddings. Recall vs the exact
     d05 twin is measured by d14_ann_recall and pinned in tests."""
     return hyperplane_ann(t_spread(spark, sf, "embeddings"))
 
 
 # Above this bucket size the candidate side of every hyperplane bucket is
-# truncated to its _ANN_BUCKET_CAP lowest-vec_id representatives (round-4
-# fix — VERDICT r3 #2, the d02 _LSH_BUCKET_CAP lesson applied to the
-# embedding path): a degenerate store — millions of identical or
-# near-identical embeddings, exactly what a dedup-bound corpus contains —
-# collapses into ONE bucket per table, and the uncapped self-join emitted
-# O(n²) pairs in a single task. Every bucket member still pairs with
-# every representative, so (a) ANN queries keep >= cap candidates in a
-# degenerate bucket (identical vectors are interchangeable neighbors) and
-# (b) dedup keeps the whole bucket connected through the representative
-# set — at O(n·cap) output instead of O(n²).
+# truncated to its _ANN_BUCKET_CAP lowest-(xxhash64(vec_id), vec_id)
+# representatives (round-4 fix — VERDICT r3 #2, the d02 _LSH_BUCKET_CAP
+# lesson applied to the embedding path): a degenerate store — millions
+# of identical or near-identical embeddings, exactly what a dedup-bound
+# corpus contains — collapses into ONE bucket per table, and an uncapped
+# bucket grid scores O(n²) pairs in a single task. Every bucket member
+# still pairs with every representative, so (a) ANN queries keep >= cap
+# candidates in a degenerate bucket (identical vectors are
+# interchangeable neighbors) and (b) dedup keeps the whole bucket
+# connected through the representative set — at O(n·cap·tables)
+# candidates instead of O(n²), which also bounds the dedup edge count.
 _ANN_BUCKET_CAP = 64
 
 
@@ -627,36 +617,6 @@ def _arrow_list_to_2d(col):
     materialization happens."""
     vals = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
     return vals.reshape(len(col), len(vals) // max(len(col), 1))
-
-
-def _pair_cosine_arrow(df, id1: str, id2: str, a_col: str, b_col: str):
-    """(id1, id2, a_col, b_col) rows → (id1, id2, cosine) where cosine
-    is EXACTLY _cosine(a_col, b_col) (raw, unrounded — callers keep
-    F.round JVM-side), computed batch-vectorized via mapInArrow.
-
-    Round 7 (guide §4.2): the per-pair zip_with/aggregate dot fold is
-    interpreted Catalyst — ~64 boxed lambda evaluations per pair, and
-    the ANN candidate joins score millions of pairs (sf1: ~12M for
-    d15). One Arrow crossing of (two ids + two 64-float vectors) per
-    pair feeds _fold_dot over the dim axis instead, with the fold's
-    division order dot / |a| / |b|, so results are bit-identical —
-    this is a pure execution-engine swap, not an algorithm change."""
-    sel = df.select(id1, id2, a_col, b_col)
-
-    def fn(it):
-        import pyarrow as pa
-
-        for batch in it:
-            A = _arrow_list_to_2d(batch.column(2)).T
-            B = _arrow_list_to_2d(batch.column(3)).T
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = _fold_dot(A, B) / np.sqrt(_fold_dot(A, A)) / np.sqrt(_fold_dot(B, B))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0), batch.column(1), pa.array(cos, type=pa.float64())],
-                names=[id1, id2, "cosine"],
-            )
-
-    return sel.mapInArrow(fn, f"{id1} long, {id2} long, cosine double")
 
 
 def _cell_topk_cosine(qs, data, key: str, margin: float = 2e-4):
@@ -727,10 +687,17 @@ def _cell_topk_cosine(qs, data, key: str, margin: float = 2e-4):
     )
 
 
-def _hyperplane_scored_pairs(emb, stats: tuple[int, int, dict] | None = None):
+def _hyperplane_scored_pairs(emb, threshold: float | None = None):
     """(vec_id, embedding) → distinct undirected candidate pairs
     (ua < ub, cosine) from the multi-table hyperplane buckets, scored
-    per BUCKET instead of per pair (round 7, guide §8).
+    per BUCKET instead of per pair (round 7, guide §8). The candidates
+    are every bucket member × its bucket's _ANN_BUCKET_CAP
+    representatives; `threshold` picks which scored pairs leave the
+    grid:
+
+    - None (d06/d14/d35): the top-3 margin pre-filter below;
+    - a float (d26/d28/d38): every pair whose exact cosine is ≥
+      threshold — the verified dedup edges, with no second pass.
 
     The round-4 shape shipped ids-only bucket rows, deduped pairs, then
     re-attached embeddings with two equi-joins — so every candidate
@@ -760,19 +727,27 @@ def _hyperplane_scored_pairs(emb, stats: tuple[int, int, dict] | None = None):
     call bounded to cell_budget cells — per-bucket numpy calls on
     20-row grids were measured overhead-bound (an applyInPandas variant
     with one pandas group per bucket ran SLOWER than the join-back it
-    replaced). Inputs are dense (see dense_embeddings), so no cosine
+    replaced). The store enters through dense_embeddings, so no cosine
     is NaN.
 
-    The same provable margin pre-filter as _cell_topk_cosine applies
-    per DIRECTION (a pair survives if either endpoint still needs it):
-    dropped rows are strictly beaten by ≥3 kept same-bucket rows even
-    after F.round(·,4), so the global rounded top-3 per query is
-    bit-identical while the dedup+window input shrinks ~3×."""
-    e = (
-        _hyperplane_bucket_rows(emb, stats, "vec_id", "embedding")
-        .select("bucket", "vec_id", F.xxhash64("vec_id").alias("h"), "embedding")
-        .repartition(F.col("bucket"))
-    )
+    With no threshold, the same provable margin pre-filter as
+    _cell_topk_cosine applies per DIRECTION (a pair survives if either
+    endpoint still needs it): dropped rows are strictly beaten by ≥3
+    kept same-bucket rows even after F.round(·,4), so the global
+    rounded top-3 per query is bit-identical while the dedup+window
+    input shrinks ~3×."""
+    # the one LSH bucket-assignment stage: one row per (vector, table),
+    # with the plane count sized by the store (_adaptive_planes: constant
+    # mean occupancy at any n, so candidate volume stays
+    # O(n·occupancy·tables) instead of saturating at n·cap·tables)
+    emb, n_rows, dim = dense_embeddings(emb)
+    buckets = _hyperplane_buckets_udf(dim, _adaptive_planes(n_rows))
+    e = emb.select(
+        F.explode(buckets("embedding")).alias("bucket"),
+        "vec_id",
+        F.xxhash64("vec_id").alias("h"),
+        "embedding",
+    ).repartition(F.col("bucket"))
 
     margin = 2e-4
     cap = _ANN_BUCKET_CAP
@@ -827,7 +802,9 @@ def _hyperplane_scored_pairs(emb, stats: tuple[int, int, dict] | None = None):
                 grid = dots / np.where(first, m_n, r_n) / np.where(first, r_n, m_n)
                 valid = m_ids != r_ids
                 keep = valid
-                if m >= 3:
+                if threshold is not None:
+                    keep = valid & (grid >= threshold)
+                elif m >= 3:
                     cons = np.where(valid, grid, -np.inf)
                     t3_row = np.partition(cons, r - 3, axis=2)[:, :, r - 3, None]
                     t3_col = np.partition(cons, m - 3, axis=1)[:, None, m - 3]
@@ -926,45 +903,6 @@ def _matrix_topk_arrow(emb, q_ids, k: int, cos_batch):
     )
 
 
-def _hyperplane_id_pairs(emb, stats: tuple[int, int, dict] | None = None):
-    """(vec_id, embedding) → distinct undirected candidate id pairs
-    (ua < ub) from the multi-table hyperplane buckets. IDS ONLY ride the
-    bucket shuffle (round-4 fix — VERDICT r3 #3: embeddings previously
-    rode every exploded bucket row, a _LSH_TABLES× amplification of the
-    heaviest column at scale); callers re-attach embeddings with two
-    slim equi-joins (the d12 join-back shape). The candidate side of
-    each bucket is capped at _ANN_BUCKET_CAP representatives via a
-    per-bucket row_number — streaming, never a whole-bucket collect, so
-    even a 10M-member degenerate bucket sorts ids in one task without
-    materializing a giant array row. Representatives are ranked by
-    xxhash64(vec_id), not raw vec_id (round-5 ADVICE fix): raw-id
-    ranking made truncation CORRELATED with id assignment — ids handed
-    out by ingestion time would systematically under-serve newer docs
-    in hot buckets — while a hash rank spreads representation uniformly
-    over members; vec_id stays as the deterministic tie-break."""
-    e = _hyperplane_bucket_rows(emb, stats, "vec_id")
-    wb = Window.partitionBy("bucket").orderBy(F.xxhash64("vec_id"), "vec_id")
-    reps = (
-        e.withColumn("rn", F.row_number().over(wb))
-        .filter(F.col("rn") <= _ANN_BUCKET_CAP)
-        .drop("rn")
-    )
-    return (
-        e.select(F.col("vec_id").alias("qv"), "bucket")
-        .join(reps.select(F.col("vec_id").alias("rv"), "bucket"), "bucket")
-        .filter(F.col("qv") != F.col("rv"))
-        .select(F.least("qv", "rv").alias("ua"), F.greatest("qv", "rv").alias("ub"))
-        # collisions = number of (table, direction) co-bucketings — the
-        # pair-dedup groupBy the old dropDuplicates already paid, now
-        # also yielding the OR-amplification evidence: a true near-dup
-        # co-buckets in ~all tables, a random false positive in ~2^-planes
-        # of them. _cap_pair_degree ranks candidate neighbors by this
-        # weight (round 6), so degree capping evicts noise pairs first.
-        .groupBy("ua", "ub")
-        .agg(F.count(F.lit(1)).alias("collisions"))
-    )
-
-
 def hyperplane_ann(emb):
     """d06's reusable core over any (vec_id, embedding) DataFrame: dim
     is derived from the data (not hardcoded 64) and rows the store
@@ -973,12 +911,7 @@ def hyperplane_ann(emb):
     ONCE per undirected pair, then both query directions are emitted
     for the per-query top-3 — half the cosine work of a per-direction
     join and no duplicate-hit groupBy."""
-    # Round 7: pairs are generated AND scored per bucket in one grouped
-    # numpy pass (see _hyperplane_scored_pairs) — embeddings cross once
-    # per bucket membership instead of twice per candidate pair, and
-    # both join-backs disappear; doubles are bit-identical.
-    emb, n, dim = dense_embeddings(emb)
-    scored = _hyperplane_scored_pairs(emb, (n, dim, {})).select(
+    scored = _hyperplane_scored_pairs(emb).select(
         "ua", "ub", F.round(F.col("cosine"), 4).alias("cosine")
     )
     directed = scored.select(
@@ -1876,11 +1809,14 @@ def _connected_components(edges, max_iter: int = 25):
     below ~2^25 vertices per component and exhaustion RAISES instead of
     returning wrong components. _ckpt() per round truncates the lineage
     so planning time stays flat (reliable checkpoint when a dir is
-    configured)."""
-    clean = _ckpt(edges.filter(F.col("a") != F.col("b")).distinct())
-    verts = _ckpt(
-        edges.select(F.col("a").alias("id"))
-        .unionByName(edges.select(F.col("b").alias("id")))
+    configured). The input is evaluated ONCE: its distinct edges are
+    checkpointed, and the clean edge set and the vertex set (which keeps
+    vertices seen only on self-loops) both read that checkpoint."""
+    dist = _ckpt(edges.distinct())
+    clean = dist.filter(F.col("a") != F.col("b"))
+    verts = (
+        dist.select(F.col("a").alias("id"))
+        .unionByName(dist.select(F.col("b").alias("id")))
         .distinct()
     )
     e, n_e = clean, clean.count()
@@ -2413,8 +2349,8 @@ def d25(spark, sf):
 # guarded by _connected_components' convergence raise + keep-semantics test)
 def d26(spark, sf):
     """The EMBEDDING twin of d20's corpus dedup: hyperplane-LSH
-    candidate pairs (d06's bucketing, never corpus²) → exact
-    double-precision cosine verify ≥ 0.30 → large-star/small-star
+    candidate pairs scored inside d06's bucket grid (never corpus²),
+    kept at exact double-precision cosine ≥ 0.30 → large-star/small-star
     connected components → per-component keep decision (min vec_id
     survives). Returns (vec_id, component, keep) — the drop-list a user
     applies before training on an embedding-deduped corpus. Every stage
@@ -2422,84 +2358,19 @@ def d26(spark, sf):
     return embedding_dedup_pipeline(t_spread(spark, sf, "embeddings"), threshold=0.30)
 
 
-# Round 6 (VERDICT r5 #5): per-vertex candidate-degree cap ahead of the
-# exact-cosine verify. The sf10 decade measured d26 at ~1.5× linear, and
-# the residual is the verify stage inside K-member near-dup clusters: the
-# bucket-level cap already bounds pairs at O(K·_ANN_BUCKET_CAP), but a
-# viral-boilerplate crawl has K in the thousands and every one of those
-# K·64 pairs bought a full-dim cosine + two embedding join-backs.
-# Connectivity for components needs O(K) edges, not O(K·64): keep, per
-# vertex, only its _VERIFY_NEIGHBOR_CAP lowest-xxhash64 candidate
-# neighbors (an edge survives if EITHER endpoint keeps it). In a
-# near-identical K-cluster every member's candidate set contains the
-# bucket representatives — ranked by the SAME xxhash64(vec_id) — so the
-# globally smallest-hash representative is rank-1 in every member's
-# list: the kept edge set contains a star over the whole cluster, every
-# star edge verifies (near-identical ⇒ cosine ≥ threshold), and the
-# component + keep answer is unchanged (d38's planted 100-member-cluster
-# golden value-proves exactly this). Sparse stores are untouched: a
-# vertex with ≤ cap candidates keeps them all, so d28's chain golden is
-# bit-identical. Cap 16 = 2.7× the verify work headroom over the
-# bucket cap while staying ≥ 3× the largest planted chain degree.
-_VERIFY_NEIGHBOR_CAP = 16
-
-
-def _cap_pair_degree(pairs, cap: int = _VERIFY_NEIGHBOR_CAP):
-    """Undirected (ua, ub, collisions) candidate pairs → (ua, ub) with
-    per-vertex degree bounded: each vertex ranks its candidate
-    neighbors by (collisions DESC, xxhash64(neighbor), neighbor) and
-    keeps the first `cap`; the union of both directions is
-    re-canonicalized (an edge survives if EITHER endpoint keeps it).
-    Ranking by co-bucket multiplicity is what makes the cap
-    recall-safe: OR-amplified LSH co-buckets a true near-dup pair in
-    ~every table but a random false positive in ~2^-planes of them, so
-    on a small/noisy store (few planes, many accidental candidates) the
-    cap evicts noise pairs, never the near-dup edges — pure hash
-    ranking measurably broke the d28 chain golden here. Inside a
-    near-identical K-cluster all pairs tie at max collisions and the
-    hash tie-break takes over: every member's candidate set contains
-    the bucket representatives, ranked by the same xxhash64, so the
-    smallest-hash representative is kept by every member — a star over
-    the cluster at O(K·cap) total edges. Total surviving edges are
-    O(n·cap); one vertex may still RECEIVE many edges (the star hub),
-    which is exactly what keeps giant clusters connected."""
-    directed = pairs.select(
-        F.col("ua").alias("u"), F.col("ub").alias("v"), "collisions"
-    ).unionAll(pairs.select(F.col("ub").alias("u"), F.col("ua").alias("v"), "collisions"))
-    w = Window.partitionBy("u").orderBy(
-        F.col("collisions").desc(), F.xxhash64("v"), "v"
-    )
-    return (
-        directed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= cap)
-        .select(F.least("u", "v").alias("ua"), F.greatest("u", "v").alias("ub"))
-        .dropDuplicates(["ua", "ub"])
-    )
-
-
 def embedding_dedup_pipeline(emb, threshold: float):
-    """d26's reusable core over any (vec_id, embedding) DataFrame: LSH
-    candidate id pairs (capped, ids-only shuffle) → per-vertex degree
-    cap (round 6 — O(K) verified edges per K-cluster, see
-    _VERIFY_NEIGHBOR_CAP) → slim join-back → exact double cosine >=
-    threshold → components → keep. d28 runs this exact code over a
+    """d26's reusable core over any (vec_id, embedding) DataFrame: d06's
+    LSH bucket grid scores every member × representative candidate and
+    keeps the pairs with exact double cosine >= threshold (see
+    _hyperplane_scored_pairs) → components → keep. Every kept edge is a
+    true edge, so components only merge vectors that are joined by a
+    chain of cosine >= threshold pairs. d28 runs this exact code over a
     planted near-dup fixture where LSH candidate recall at the
     threshold is 1.0 by construction, so DuckDB can brute-force the
     same (vec_id, component, keep) answer — the full value oracle for
-    the pipeline; d38 does the same over a planted 100-member cluster,
-    value-proving the degree cap preserves the keep-set."""
-    emb, n, dim = dense_embeddings(emb)
-    pairs = _cap_pair_degree(_hyperplane_id_pairs(emb, (n, dim, {})))
-    ea = emb.select(F.col("vec_id").alias("ua"), F.col("embedding").alias("ea"))
-    eb = emb.select(F.col("vec_id").alias("ub"), F.col("embedding").alias("eb"))
-    # exact cosine verify batch-vectorized in Arrow/numpy — bit-identical
-    # doubles to the interpreted _cosine fold (see _pair_cosine_arrow)
-    verified = (
-        _pair_cosine_arrow(pairs.join(ea, "ua").join(eb, "ub"), "ua", "ub", "ea", "eb")
-        .filter(F.col("cosine") >= threshold)
-        .select(F.col("ua").alias("a"), F.col("ub").alias("b"))
-    )
-    cc = _connected_components(verified)
+    the pipeline; d38 does the same over a planted 100-member cluster."""
+    pairs = _hyperplane_scored_pairs(emb, threshold=threshold)
+    cc = _connected_components(pairs.select(F.col("ua").alias("a"), F.col("ub").alias("b")))
     return cc.select(
         F.col("id").alias("vec_id"),
         "component",
@@ -2602,9 +2473,9 @@ def d28_oracle_sql() -> str:
 @q("d28_embedding_dedup_golden")  # oracle registered lazily (embeds store path)
 def d28(spark, sf):
     """d26's pipeline under a FULL value oracle (VERDICT r3 #4): the
-    exact embedding_dedup_pipeline code — capped LSH candidates,
-    ids-only shuffle, slim join-back, exact cosine verify, star-
-    contraction components, keep decision — over the deterministic
+    exact embedding_dedup_pipeline code — capped LSH candidates scored
+    and verified in the bucket grid, star-contraction components, keep
+    decision — over the deterministic
     planted near-dup store, where DuckDB can brute-force the same
     (vec_id, component, keep) drop-list. sf_dir is ignored (own fixture,
     the x03/x06/x08 precedent)."""
@@ -2616,12 +2487,12 @@ def d28(spark, sf):
 
 # d38 golden fixture (round 6, VERDICT r5 #5): ONE 100-member
 # near-identical cluster — the viral-boilerplate shape whose O(K²)
-# verify cost motivated _VERIFY_NEIGHBOR_CAP — plus chains and
-# singletons. Every intra-cluster cosine sits ≥ 0.99 (noise 0.008
-# around a unit center), far above the 0.90 threshold, so EVERY edge the
-# degree-capped verify keeps inside the cluster passes, and the star
-# over the smallest-hash bucket representative connects all 100 members:
-# brute-force DuckDB components must agree exactly. Chains re-use the
+# all-pairs verify the bucket representative cap bounds — plus chains
+# and singletons. Every intra-cluster cosine sits ≥ 0.99 (noise 0.008
+# around a unit center), far above the 0.90 threshold, so EVERY
+# member × representative candidate inside the cluster passes, and the
+# representatives connect all 100 members: brute-force DuckDB
+# components must agree exactly. Chains re-use the
 # d28 dead-band construction so truncation-sensitive mid-band pairs
 # cannot exist.
 _BIGC_MEMBERS = 100
@@ -2692,13 +2563,13 @@ def d38_oracle_sql() -> str:
 
 @q("d38_bigcluster_dedup_golden")  # oracle registered lazily (embeds store path)
 def d38(spark, sf):
-    """The degree-capped verify stage under a FULL value oracle on the
+    """The capped bucket grid under a FULL value oracle on the
     worst-case cluster shape (round 6): the exact
-    embedding_dedup_pipeline code — including _cap_pair_degree — over a
-    planted store whose 100-member near-identical cluster would have
-    cost O(K·bucket_cap) exact cosines uncapped. DuckDB brute-forces
-    the same (vec_id, component, keep) drop-list; equality proves the
-    cap preserves connectivity and the keep decision. sf_dir is ignored
+    embedding_dedup_pipeline code over a planted store whose 100-member
+    near-identical cluster fills its buckets past the representative
+    cap. DuckDB brute-forces the same (vec_id,
+    component, keep) drop-list; equality proves the representative set
+    preserves connectivity and the keep decision. sf_dir is ignored
     (own fixture, the x03/x06/x08 precedent)."""
     import os
 
@@ -2782,8 +2653,8 @@ def d29(spark, sf):
 @q("d35_ann_lsh_golden")  # oracle registered lazily (shares d29's store + SQL)
 def d35(spark, sf):
     """d06's hyperplane-LSH top-3 under a FULL value oracle: the exact
-    hyperplane_ann code (capped ids-only bucket join, slim join-back,
-    one cosine per undirected pair, per-query top-3) over the same
+    hyperplane_ann code (capped bucket grid, one cosine per undirected
+    pair, per-query top-3) over the same
     planted cluster store as d29 — near-identical cluster-mates
     co-bucket in at least one of the 32 tables with probability
     1−(miss)³² ≈ 1−4e-20, so LSH recall@3 is 1.0 by construction and

@@ -11,8 +11,9 @@ same JSON lines):
                flat-path point, and recall@3 of the 50-query evaluation
                set vs a distributed brute-force truth.
                (was: scale_run_r6.py ivf2)
-  d26          d26 (embedding dedup) at sf1 + sf10 with the verify
-               degree cap — target <= ~1.2x linear at the second decade.
+  d26          d26 (embedding dedup) at sf1 + sf10, verified inside the
+               LSH bucket grid — target <= ~1.2x linear at the second
+               decade.
                (was: scale_run_r6.py d26)
   d16          d16 (PII scrub) at sf10 with the candidate prefilter —
                target meaningfully below the 54.1 s round-5 record.
@@ -183,7 +184,7 @@ def run_d26() -> None:
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         out[tag] = round(time.monotonic() - t0, 1)
     print(json.dumps({
-        "op": "d26 embedding dedup (degree-capped verify)",
+        "op": "d26 embedding dedup (bucket-grid verify)",
         "sf1_wall_s": out["sf1"],
         "sf10_wall_s": out["sf10"],
         "decade_linearity": round(out["sf10"] / (10 * out["sf1"]), 2),
