@@ -216,29 +216,44 @@ def _d26_edges(spark, monkeypatch):
     return edges
 
 
-def test_ann_scored_pairs_exchange_is_slim(spark, monkeypatch):
-    """d06 (round 7) and d26's edges: embeddings ride EXACTLY ONE
-    exchange — the bucket cogroup that feeds the in-bucket scorer. Every
-    downstream exchange (pair dedup on (ua, ub), d06's top-3 window on
-    q_id) must carry ids + cosine only; an embedding column there means
-    the per-pair join-back shape (2 heavy joins + 4 GB of pair traffic
-    at sf1) crept back."""
+def _assert_one_heavy_bucket_exchange(df, name):
+    """Embeddings ride EXACTLY ONE exchange — the bucket cogroup that
+    feeds the in-bucket scorer — and every downstream exchange (pair
+    dedup on (ua, ub), d06's top-3 window on q_id) carries ids + cosine
+    only."""
+    blocks = _exchange_blocks(df)
+    assert blocks, name
+    heavy = [b for b in blocks if "embedding" in b.lower()]
+    assert len(heavy) == 1, (name, heavy)
+    assert "hashpartitioning(bucket" in heavy[0], (name, heavy[0])
+    slim = [b for b in blocks if "hashpartitioning(ua" in b or "hashpartitioning(q_id" in b]
+    assert slim, name
+    for b in slim:
+        assert "embedding" not in b.lower(), (name, b)
+
+
+def test_ann_bucket_exchange_carries_ids_only(spark, monkeypatch):
+    """d26: once the bucket stage has scored its pairs, only ids move.
+    d26 verifies its edges inside the same per-bucket cosine grid as d06,
+    so the bucket cogroup is the one exchange that carries embeddings
+    (once per table membership); the pair dedup on (ua, ub) that leaves
+    it must carry ids + cosine only. An embedding column there means the
+    per-pair join-back (or a heavy bucket shuffle repeated after
+    scoring) crept back. Checked on the edge frame handed to
+    _connected_components, because that function's eager checkpoint
+    cuts the finished query's plan above the bucket stage."""
+    _assert_one_heavy_bucket_exchange(_d26_edges(spark, monkeypatch), "d26 edges")
+
+
+def test_ann_scored_pairs_exchange_is_slim(spark):
+    """d06 (round 7): embeddings ride EXACTLY ONE exchange — the bucket
+    cogroup that feeds the in-bucket scorer. Every downstream exchange
+    (pair dedup on (ua, ub), the top-3 window on q_id) must carry ids +
+    cosine only; an embedding column there means the per-pair join-back
+    shape (2 heavy joins + 4 GB of pair traffic at sf1) crept back."""
     from text_extraction_spark import dataops
 
-    frames = {
-        "d06": dataops.QUERIES["d06_ann_lsh_bucketed"](spark, SF),
-        "d26 edges": _d26_edges(spark, monkeypatch),
-    }
-    for name, df in frames.items():
-        blocks = _exchange_blocks(df)
-        assert blocks, name
-        heavy = [b for b in blocks if "embedding" in b.lower()]
-        assert len(heavy) == 1, (name, heavy)
-        assert "hashpartitioning(bucket" in heavy[0], (name, heavy[0])
-        slim = [b for b in blocks if "hashpartitioning(ua" in b or "hashpartitioning(q_id" in b]
-        assert slim, name
-        for b in slim:
-            assert "embedding" not in b.lower(), (name, b)
+    _assert_one_heavy_bucket_exchange(dataops.QUERIES["d06_ann_lsh_bucketed"](spark, SF), "d06")
 
 
 def test_vocab_topk_never_full_sort(spark):
