@@ -241,3 +241,44 @@ def test_store_without_query_rows_gives_empty_ann_results(spark, tmp_path):
             ("q_id", "bigint"), ("vec_id", "bigint"), ("cosine", "double")
         ], name
         assert df.collect() == [], name
+
+
+def test_ann_trainers_follow_a_store_rewritten_in_place(spark, tmp_path):
+    """d15 (IVF) and d46 (PQ) train on the store they read: after the
+    parquet is rewritten in place under the same path, each query
+    returns exactly what it returns over an identical copy of the new
+    data at a fresh path — no centroids or codebooks from the old
+    store survive the call that trained them."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    names = ("d15_ann_ivf", "d46_ann_pq")
+
+    def rows(d):
+        return {
+            n: sorted(tuple(r) for r in dataops.QUERIES[n](spark, str(d)).collect())
+            for n in names
+        }
+
+    tbl = pq.read_table(os.path.join(SF, "embeddings.parquet"))
+    same, fresh = tmp_path / "same", tmp_path / "fresh"
+    same.mkdir()
+    fresh.mkdir()
+    pq.write_table(tbl, str(same / "embeddings.parquet"))
+    before = rows(same)
+
+    X = np.array(tbl.column("embedding").to_pylist(), dtype=np.float32)
+    noise = np.random.Generator(np.random.PCG64(7)).normal(0.0, 0.5, X.shape)
+    emb = pa.array((X + noise.astype(np.float32)).tolist(), pa.list_(pa.float32()))
+    new = tbl.set_column(tbl.schema.get_field_index("embedding"), "embedding", emb)
+    pq.write_table(new, str(same / "embeddings.parquet"))
+    pq.write_table(new, str(fresh / "embeddings.parquet"))
+
+    after, want = rows(same), rows(fresh)
+    for n in names:
+        assert after[n] != before[n], n  # the rewrite changes the answer
+        stale = len(set(after[n]) - set(want[n]))
+        assert after[n] == want[n], f"{n}: {stale} rows from the old model"

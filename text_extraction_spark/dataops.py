@@ -944,7 +944,6 @@ _IVF_K = 48
 _IVF_NPROBE = 14
 _IVF_TRAIN_CAP = 2048
 _IVF_ITERS = 5
-_ivf_cache: dict = {}
 
 # Round 5 — the sf1 decade caught the same saturation class in IVF as
 # in the hyperplane tables: with FIXED k, cell occupancy grows linearly
@@ -992,22 +991,15 @@ def _spherical_kmeans(X: np.ndarray, k: int = None, iters: int = None) -> np.nda
     return C
 
 
-def _ivf_centroids(e, sf, n: int) -> np.ndarray:
-    """Flat-IVF centroids for the dense store `e` of `n` vectors,
-    cached per (sf, k): seeded spherical k-means on a bounded sample —
-    deterministic, bounded driver memory at any corpus size. k adapts
-    to the store (_adaptive_ivf_k) and the sample is the
-    max(_IVF_TRAIN_CAP, 8·k) lowest-xxhash64(vec_id) rows (see
-    _train_centroids_df) — a TakeOrdered over a uniform hash, so
-    training is uncorrelated with ingestion-time id assignment (the
-    d06 bucket-cap rule applied to the trainer; below 2048 vectors
-    every row is sampled either way, so the measured sf0.001/sf0.01
-    floors keep their exact centroids)."""
-    k = _adaptive_ivf_k(n)
-    key = (sf, k)
-    if key not in _ivf_cache:
-        _ivf_cache[key] = _train_centroids_df(e, k)
-    return _ivf_cache[key]
+def _train_centroids_df(e, k: int) -> np.ndarray:
+    """The IVF trainer over any dense (vec_id, embedding) DataFrame:
+    seeded spherical k-means over its max(_IVF_TRAIN_CAP, 8k)-row
+    _hash_sample — deterministic, bounded driver memory at any store
+    size, trained afresh on every call. Below 2048 vectors every row is
+    sampled, so the measured sf0.001/sf0.01 floors train on the whole
+    store."""
+    X = _hash_sample(e, max(_IVF_TRAIN_CAP, 8 * k))
+    return _spherical_kmeans(X, k=min(k, len(X)))
 
 
 def _nearest_cells(X: np.ndarray, C: np.ndarray, n: int) -> np.ndarray:
@@ -1051,7 +1043,8 @@ def d15(spark, sf):
         # takes over (round 6 — VERDICT r5 #3); every sf at or below
         # the measured decades stays on the flat path bit-for-bit
         return ivf2_topk(e, stats=(n, dim, {}))
-    return ivf_topk(e, _ivf_centroids(e, sf, n), stats=(n, dim, {}))
+    C = _train_centroids_df(e, _adaptive_ivf_k(n))
+    return ivf_topk(e, C, stats=(n, dim, {}))
 
 
 def ivf_topk(e, C: np.ndarray, stats: tuple[int, int, dict] | None = None):
@@ -1093,13 +1086,13 @@ def ivf_topk(e, C: np.ndarray, stats: tuple[int, int, dict] | None = None):
 # constraint (k-means cost and the k·dim closure both grow with k).
 # The two-level scheme removes the driver from the scaling path:
 #
-#   top level   K1 ≈ √(n/42) centroids — trained driver-side exactly
-#               like _ivf_centroids (K1 stays ≤ _IVF_MAX_K until
-#               n ≈ 42·8192² ≈ 2.8e9 vectors; closure ≤ K1·dim doubles,
-#               ~4 MB at the cap)
+#   top level   K1 ≈ √(n/42) centroids — trained driver-side by
+#               _train_centroids_df, as on the flat path (K1 stays
+#               ≤ _IVF_MAX_K until n ≈ 42·8192² ≈ 2.8e9 vectors;
+#               closure ≤ K1·dim doubles, ~4 MB at the cap)
 #   sub level   k2 ≈ K1 centroids PER top cell — trained DISTRIBUTED,
 #               one applyInPandas task per top cell over a hash-ranked
-#               8·k2-row sample (the _ivf_centroids sample rule, pushed
+#               8·k2-row sample (the flat trainer's sample rule, pushed
 #               into the cluster), so total leaf count K1·k2 ≈ n/42
 #               at any n with no driver bottleneck
 #   assignment  cogroup(vectors-by-top-cell, sub-centroids-by-top-cell)
@@ -1118,14 +1111,6 @@ _IVF2_THRESHOLD = _IVF_MAX_K * _IVF_TARGET_CELL  # ≈ 344k vectors
 _IVF2_TOP_PROBE = 4
 _IVF2_SUB_PROBE = 4
 _IVF2_LEAF_STRIDE = 1 << 20  # leaf id = tcell * STRIDE + sub (k2 << STRIDE)
-
-
-def _train_centroids_df(e, k: int) -> np.ndarray:
-    """The IVF trainer over any dense (vec_id, embedding) DataFrame:
-    seeded spherical k-means over its max(_IVF_TRAIN_CAP, 8k)-row
-    _hash_sample."""
-    X = _hash_sample(e, max(_IVF_TRAIN_CAP, 8 * k))
-    return _spherical_kmeans(X, k=min(k, len(X)))
 
 
 def _ivf2_sub_centroids(data_top, k2: int):
@@ -1811,7 +1796,12 @@ def _connected_components(edges, max_iter: int = 25):
     so planning time stays flat (reliable checkpoint when a dir is
     configured). The input is evaluated ONCE: its distinct edges are
     checkpointed, and the clean edge set and the vertex set (which keeps
-    vertices seen only on self-loops) both read that checkpoint."""
+    vertices seen only on self-loops) both read that checkpoint.
+
+    The rounds run when this function is CALLED (each one checkpoints
+    and counts): building the caller's frame already pays for all of
+    them, and the returned frame is only the final vertex × star-label
+    join."""
     dist = _ckpt(edges.distinct())
     clean = dist.filter(F.col("a") != F.col("b"))
     verts = (
@@ -2643,8 +2633,8 @@ def d29(spark, sf):
     import pyarrow.parquet as pq
 
     p = os.path.join(ivf_store_dir(), "embeddings.parquet")
-    # centroid training mirrors _ivf_centroids' faiss shape: a bounded
-    # driver-side sample (here the whole 300-vector store)
+    # centroid training mirrors _train_centroids_df's faiss shape: a
+    # bounded driver-side sample (here the whole 300-vector store)
     X = np.array(pq.read_table(p).column("embedding").to_pylist())
     C = _spherical_kmeans(X)
     return ivf_topk(spark.read.parquet(p), C)
@@ -4072,20 +4062,15 @@ def pq_topk(emb, queries: np.ndarray, q_ids: list, books: np.ndarray, k: int = 3
 
 
 _PQ_TRAIN_CAP = 2048  # bounded driver-side training sample (faiss shape)
-_pq_cache: dict = {}
 
 
-def _pq_books(e, sf, n: int, dim: int) -> np.ndarray:
-    """Codebooks for the dense store `e` of `n` `dim`-d vectors, cached
-    per sf, from its max(_PQ_TRAIN_CAP, 32·ksub)-row _hash_sample (the
-    IVF trainer's sample rule)."""
+def _pq_books(e, n: int) -> np.ndarray:
+    """Codebooks for the dense store `e` of `n` vectors, trained afresh
+    on every call over its max(_PQ_TRAIN_CAP, 32·ksub)-row _hash_sample
+    (the IVF trainer's sample rule, with its own cap)."""
     ksub = _pq_ksub(n)
     cap = max(_PQ_TRAIN_CAP, 32 * ksub)
-    key = (sf, dim, ksub, cap)
-    if key in _pq_cache:
-        return _pq_cache[key]
-    _pq_cache[key] = _pq_train(_hash_sample(e, cap), m=_PQ_M, ksub=ksub)
-    return _pq_cache[key]
+    return _pq_train(_hash_sample(e, cap), m=_PQ_M, ksub=ksub)
 
 
 @q("d46_ann_pq")  # ⊘ rows-only BY DESIGN (approximate — quantization
@@ -4103,7 +4088,7 @@ def d46(spark, sf):
     production system composes them; here PQ runs as a full compressed
     scan so its recall is measured in isolation."""
     e, n, dim = dense_embeddings(t_spread(spark, sf, "embeddings"))
-    books = _pq_books(e, sf, n, dim)
+    books = _pq_books(e, n)
     q_ids, Q = _query_set(e, _RECALL_QUERIES, dim)
     return pq_refined_topk(e, Q, q_ids, books)
 
@@ -4307,13 +4292,16 @@ def ivfpq_topk(
 # d50 value-verifies the identical code path on the planted store)
 def d49(spark, sf):
     """IVFPQ over the testdata store: IVF centroids and PQ codebooks
-    both train on the shared bounded hash-ranked sample; candidates =
-    probed-cell equi join over 8-byte codes; shortlist 32 → exact
-    refine. The composition a 10^11-vector deployment actually runs:
-    d06/d15 prune candidates OR d46 compresses — this op does both."""
+    train on every call, each on its own bounded hash-ranked sample —
+    the same _hash_sample rule with different caps, max(2048, 8·k) rows
+    for IVF and max(2048, 32·ksub) for PQ (2 048 and 4 096 at sf0.1);
+    candidates = probed-cell equi join over 8-byte codes; shortlist 32
+    → exact refine. The composition a 10^11-vector deployment actually
+    runs: d06/d15 prune candidates OR d46 compresses — this op does
+    both."""
     e, n, dim = dense_embeddings(t_spread(spark, sf, "embeddings"))
-    C = _ivf_centroids(e, sf, n)
-    books = _pq_books(e, sf, n, dim)
+    C = _train_centroids_df(e, _adaptive_ivf_k(n))
+    books = _pq_books(e, n)
     q_ids, Q = _query_set(e, _RECALL_QUERIES, dim)
     return ivfpq_topk(e, C, books, Q, q_ids)
 

@@ -39,11 +39,8 @@ _SCAN_META: dict[str, tuple[int, int]] = {}
 # Below this uncompressed size the round-robin spread's own shuffle +
 # stage latency outweighs the parallelism it buys (measured at sf0.1,
 # 1.6–2.6 MB tables: spread cost ~+0.3 s vs ~0.3 s of serial map work
-# saved; at sf1.0, 6–22 MB tables: 3–16× query speedups). Env-tunable
-# for clusters whose fixed stage latency differs.
-_SPREAD_MIN_BYTES = int(
-    float(os.environ.get("SPARK_GRAFT_SPREAD_MIN_MB", "4")) * 1024 * 1024
-)
+# saved; at sf1.0, 6–22 MB tables: 3–16× query speedups).
+_SPREAD_MIN_BYTES = 4 * 1024 * 1024
 
 
 def _scan_meta(path: str) -> tuple[int, int]:

@@ -13,7 +13,7 @@ same JSON lines):
                (was: scale_run_r6.py ivf2)
   d26          d26 (embedding dedup) at sf1 + sf10, verified inside the
                LSH bucket grid — target <= ~1.2x linear at the second
-               decade.
+               decade. One warm-up run at sf0.1 precedes both decades.
                (was: scale_run_r6.py d26)
   d16          d16 (PII scrub) at sf10 with the candidate prefilter —
                target meaningfully below the 54.1 s round-5 record.
@@ -176,10 +176,12 @@ def run_d26() -> None:
     from text_extraction_spark.scaledata import sf1_dir
 
     spark = _spark()
+    fn = D.QUERIES["d26_embedding_dedup_pipeline"]
+    # one warm-up at sf0.1: d26's connected-components rounds run when the
+    # frame is built, so a per-decade warm-up would be a full hidden run
+    fn(spark, SF01).write.format("noop").mode("overwrite").save()
     out = {}
     for tag, sf_dir in (("sf1", sf1_dir()), ("sf10", sf1_dir(copies=100))):
-        fn = D.QUERIES["d26_embedding_dedup_pipeline"]
-        fn(spark, sf_dir).limit(1).collect()  # warm-up, discarded
         t0 = time.monotonic()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         out[tag] = round(time.monotonic() - t0, 1)
