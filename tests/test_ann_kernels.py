@@ -29,8 +29,8 @@ def test_nearest_cell_ties_go_to_the_lowest_centroid_index(spark, monkeypatch):
     assert udf.func(pd.Series(list(Q))).tolist() == want
 
     vecs = spark.createDataFrame(
-        [(i, [float(x) for x in v], 0) for i, v in enumerate(Q)],
-        "vec_id long, embedding array<double>, tcell long",
+        [(i, [float(x) for x in v], 0, 0) for i, v in enumerate(Q)],
+        "vec_id long, embedding array<double>, tcell long, rank int",
     )
     subc = spark.createDataFrame(
         [(0, [float(x) for x in C.ravel()], len(C), dim)],

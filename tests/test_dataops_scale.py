@@ -745,11 +745,10 @@ def test_fold_kernel_matches_jvm_cosine_bitwise(spark):
     assert all(bucket[k] == jvm[k] for k in bucket)
 
     cell = F.col("vec_id") % 2
-    qs = dense.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe"), cell.alias("c"))
-    data = dense.select("vec_id", "embedding", cell.alias("c"))
+    rows = dense.select("vec_id", "embedding", cell.alias("c"), F.lit(0).alias("rank"))
     grid = {
         (r.vec_id, r.q_id): r.cosine
-        for r in dataops._cell_topk_cosine(qs, data, "c", margin=float("inf")).collect()
+        for r in dataops._cell_topk_cosine(rows, "c", margin=float("inf")).collect()
     }
     want = {k: v for k, v in jvm.items() if k[0] % 2 == k[1] % 2 and 7 not in k}
     assert grid.keys() == want.keys()
@@ -1144,7 +1143,7 @@ def test_ivf2_leaf_structure_bounded(spark):
     C1 = dataops._train_centroids_df(df, 8)
     home = dataops._ivf_cells_udf(C1, 1)
     data_top = df.select(
-        "vec_id", "embedding", F.explode(home("embedding")).alias("tcell")
+        "vec_id", "embedding", F.posexplode(home("embedding")).alias("rank", "tcell")
     ).filter(F.col("tcell") >= 0)
     subc = dataops._ivf2_sub_centroids(data_top, 8)
     leaves = (

@@ -282,3 +282,26 @@ def test_ann_trainers_follow_a_store_rewritten_in_place(spark, tmp_path):
         assert after[n] != before[n], n  # the rewrite changes the answer
         stale = len(set(after[n]) - set(want[n]))
         assert after[n] == want[n], f"{n}: {stale} rows from the old model"
+
+
+def test_scan_meta_follows_a_table_rewritten_in_place(tmp_path):
+    """t_spread sizes a table by its parquet footers as they are now: a
+    file rewritten in place under the same path reports its new row
+    groups and bytes, not the footer of its first read."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from text_extraction_spark import relational
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"x": np.arange(1000)}), path)
+    first = relational._scan_meta(path)
+    assert first[0] == 1
+
+    pq.write_table(pa.table({"x": np.arange(20_000)}), path, row_group_size=2_000)
+    md = pq.ParquetFile(path).metadata
+    want = (10, sum(md.row_group(i).total_byte_size for i in range(10)))
+    assert md.num_row_groups == 10
+    assert want != first
+    assert relational._scan_meta(path) == want

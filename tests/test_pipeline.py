@@ -307,22 +307,6 @@ def test_input_row_order_invariance(spark, tiny_corpus, run_out, tmp_path_factor
     assert mm.count() == 0
 
 
-def test_broadcast_media_path_equivalent(spark, tiny_corpus, run_out):
-    """broadcast_media=True short-circuit: BroadcastHashJoin in the plan,
-    identical extraction output."""
-    from pyspark.sql import functions as F
-
-    out, _ = run_out
-    c = pipeline.load_corpus(spark, tiny_corpus)
-    m = pipeline.load_media(spark, tiny_corpus)
-    spans = pipeline.extract_spans(c, m, broadcast_media=True)
-    plan = spans._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    bc = pipeline.reassemble(spans, c)
-    mm = pipeline.compare_golden(_extracted(spark, out), bc)
-    assert mm.count() == 0
-
-
 def test_sql_catalog_facade(spark, tiny_corpus, run_out):
     """catalog.py: logical table names over corpus + outputs, usable from
     pure SQL (the Iceberg seam)."""

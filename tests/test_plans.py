@@ -354,6 +354,37 @@ def test_ivf2_leaf_join_is_equi_never_nested_loop(spark):
     assert "leaf" in plan  # the equi-join key is the leaf cell
 
 
+def test_ivf_assigns_each_vector_once(spark):
+    """d15 and ivf2: a vector's home cell is its first probe cell, so
+    one probe UDF pass assigns the store and the rank-0 probe rows are
+    the data. d15 runs one Python assignment pass and moves its vectors
+    through one exchange by cell into one grouped scorer, with no
+    cogroup. ivf2's top-level probe UDF appears once per use of its
+    probe rows (sub-centroid training and leaf assignment: 2, not 4),
+    and the leaf assignment is its only cogroup."""
+    import re
+
+    import numpy as np
+
+    from text_extraction_spark import dataops
+
+    plan = _plan(dataops.QUERIES["d15_ann_ivf"](spark, SF))
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
+    by_cell = re.findall(r"Exchange hashpartitioning\(cell#", plan)
+    assert len(by_cell) == 1, plan
+
+    rng = np.random.Generator(np.random.PCG64(3))
+    vecs = [v / np.linalg.norm(v) for v in rng.standard_normal((200, 16))]
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    plan = _plan(dataops.ivf2_topk(df, target_cell=8))
+    assert plan.count("ArrowEvalPython") == 2, plan
+    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+
+
 def test_boilerplate_removal_broadcast_anti_join(spark):
     """d39 (round 6): the boilerplate set is the head of the chunk-
     frequency Zipf curve — tiny at any corpus size — so the removal

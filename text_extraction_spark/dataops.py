@@ -619,19 +619,22 @@ def _arrow_list_to_2d(col):
     return vals.reshape(len(col), len(vals) // max(len(col), 1))
 
 
-def _cell_topk_cosine(qs, data, key: str, margin: float = 2e-4):
-    """Per-cell cogrouped exact-cosine scorer for the IVF paths
-    (guide §8: move heavy payloads once, decide with small rows).
+def _cell_topk_cosine(rows, key: str, margin: float = 2e-4):
+    """Per-cell exact-cosine scorer for the IVF paths (guide §8: move
+    heavy payloads once, decide with small rows).
 
+    `rows` is one frame of (key, vec_id, embedding, rank) probe rows:
+    every row is a query of its cell, and the rank-0 rows (each
+    vector's home cell is its first probe cell) are the cell's data.
     The old shape joined (queries × data) on `key` and computed the
     cosine per PAIR — both 64-float vectors crossed the exchange and
     the Arrow boundary once per candidate pair (sf1: ~12M pairs ≈ 6 GB
-    of vector traffic for d15). Here both sides cogroup by `key`, so
-    every vector crosses ONCE per cell it belongs to (data: once,
-    queries: nprobe times — ~77 MB at sf1), and one numpy pass per
-    cell computes the whole (queries × data) cosine grid with _fold_dot,
-    the JVM fold's float64 op order, and division order
-    dot / |data| / |query| — bit-identical doubles.
+    of vector traffic for d15). Here one groupBy(key) brings each cell's
+    rows together, so every vector crosses ONCE per cell it probes
+    (nprobe times — ~77 MB at sf1), and one numpy pass per cell computes
+    the whole (queries × data) cosine grid with _fold_dot, the JVM
+    fold's float64 op order, and division order dot / |data| / |query|
+    — bit-identical doubles.
 
     Output pre-filter (also exact): only rows that can still reach the
     global rounded top-3 are emitted. Per query per cell, a row is
@@ -653,17 +656,18 @@ def _cell_topk_cosine(qs, data, key: str, margin: float = 2e-4):
         "cosine": pd.Series([], dtype="float64"),
     }
 
-    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if not len(left) or not len(right):
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        home = (pdf["rank"] == 0).to_numpy()
+        if not home.any():
             return pd.DataFrame(_empty)
-        Q = np.stack(left["qe"].to_list(), axis=1).astype(np.float64)  # (dim, q)
-        Dm = np.stack(right["embedding"].to_list(), axis=1).astype(np.float64)
+        Q = np.stack(pdf["embedding"].to_list(), axis=1).astype(np.float64)  # (dim, q)
+        Dm = Q[:, home]
         n_d = Dm.shape[1]
         dn = np.sqrt(_fold_dot(Dm, Dm))
         qn = np.sqrt(_fold_dot(Q, Q))
         cos = (_fold_dot(Q[:, :, None], Dm[:, None, :]) / dn[None, :]) / qn[:, None]
-        q_ids = left["q_id"].to_numpy()
-        v_ids = right["vec_id"].to_numpy()
+        q_ids = pdf["vec_id"].to_numpy()
+        v_ids = q_ids[home]
         valid = q_ids[:, None] != v_ids[None, :]
         cons = np.where(valid, cos, -np.inf)
         if n_d >= 3:
@@ -680,11 +684,7 @@ def _cell_topk_cosine(qs, data, key: str, margin: float = 2e-4):
             }
         )
 
-    return (
-        qs.groupBy(key)
-        .cogroup(data.groupBy(key))
-        .applyInPandas(fn, "q_id long, vec_id long, cosine double")
-    )
+    return rows.groupBy(key).applyInPandas(fn, "q_id long, vec_id long, cosine double")
 
 
 def _hyperplane_scored_pairs(emb, threshold: float | None = None):
@@ -1028,12 +1028,12 @@ def _ivf_cells_udf(C: np.ndarray, nprobe: int):
 
 @q("d15_ann_ivf")  # ⊘ rows-only (approximate; recall gated by d14)
 def d15(spark, sf):
-    """IVF ANN: every vector lives in its home cell; each query probes
-    its _IVF_NPROBE nearest cells; candidates = per-cell equi join →
-    exact cosine re-rank top-3. Data side carries ONE cell per row and
-    probe cells are distinct, so each (q, v) pair matches at most once —
-    no dedup aggregate needed. Work scales with cell occupancy × nprobe,
-    never corpus²."""
+    """IVF ANN: each vector probes its _IVF_NPROBE nearest cells and
+    lives in the first of them, its home cell; candidates = per-cell
+    grid → exact cosine re-rank top-3. Data side is ONE cell per vector
+    and probe cells are distinct, so each (q, v) pair matches at most
+    once — no dedup aggregate needed. Work scales with cell occupancy ×
+    nprobe, never corpus²."""
     # ONE sizing scan shared by trainer and query path (round 6 —
     # VERDICT r5 #4: this used to be a count() in the trainer plus an
     # agg + filter-count inside ivf_topk, three store scans)
@@ -1049,30 +1049,26 @@ def d15(spark, sf):
 
 def ivf_topk(e, C: np.ndarray, stats: tuple[int, int, dict] | None = None):
     """d15's reusable core over any (vec_id, embedding) DataFrame given
-    trained centroids: home-cell assignment, nprobe probing, exact
-    cosine re-rank top-3. d29 runs this exact code over the planted
-    cluster store where probe coverage makes recall 1.0 by construction,
-    licensing a brute-force DuckDB value oracle."""
+    trained centroids: one nprobe probe assignment (the rank-0 cell is
+    the home cell), exact cosine re-rank top-3. d29 runs this exact
+    code over the planted cluster store where probe coverage makes
+    recall 1.0 by construction, licensing a brute-force DuckDB value
+    oracle."""
     e, _, _ = dense_embeddings(e, stats)
-    home = _ivf_cells_udf(C, 1)
     probe = _ivf_cells_udf(C, _IVF_NPROBE)
-    data = e.select(
+    # one assignment pass: a vector's rank-0 probe cell is its home cell
+    rows = e.select(
         "vec_id",
         "embedding",
-        F.explode(home("embedding")).alias("cell"),
+        F.posexplode(probe("embedding")).alias("rank", "cell"),
     )
-    qs = e.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qe"),
-        F.explode(probe("embedding")).alias("cell"),
-    )
-    # Round 7 (guide §8): cogroup by cell instead of joining and scoring
-    # per pair — vectors cross the exchange once per cell instead of
-    # once per candidate pair (sf1: 77 MB instead of 6 GB), the cosine
+    # Round 7 (guide §8): group by cell instead of joining and scoring
+    # per pair — vectors cross the exchange once per probed cell instead
+    # of once per candidate pair (sf1: 77 MB instead of 6 GB), the cosine
     # grid is one numpy pass per cell (bit-identical fold order), and
     # the provable top-3 margin pre-filter shrinks the window input
     # ~10× (see _cell_topk_cosine).
-    sims = _cell_topk_cosine(qs, data, "cell").select(
+    sims = _cell_topk_cosine(rows, "cell").select(
         "q_id", "vec_id", F.round(F.col("cosine"), 4).alias("cosine")
     )
     return _per_query_topk(sims, 3)
@@ -1095,18 +1091,20 @@ def ivf_topk(e, C: np.ndarray, stats: tuple[int, int, dict] | None = None):
 #               8·k2-row sample (the flat trainer's sample rule, pushed
 #               into the cluster), so total leaf count K1·k2 ≈ n/42
 #               at any n with no driver bottleneck
-#   assignment  cogroup(vectors-by-top-cell, sub-centroids-by-top-cell)
-#               → one batched matmul per cell; leaf = tcell·STRIDE+sub
+#   assignment  ONE cogroup(probe rows by top cell, sub-centroids by top
+#               cell) → one batched matmul per cell; leaf =
+#               tcell·STRIDE+sub, and a vector's rank-0 row (home top
+#               cell, nearest sub-centroid) is its home leaf
 #   probing     queries probe _IVF2_TOP_PROBE top cells × _IVF2_SUB_PROBE
 #               leaves each (16 leaves ≈ the flat path's nprobe=14), so
 #               per-query candidate work stays ~16·42 cosines at any n
 #
-# The final leaf-equi-join + exact-cosine re-rank is byte-identical in
-# shape to the flat ivf_topk (ids+embedding co-partitioned by leaf, one
-# match per (q, v) pair since a vector holds ONE leaf and probe leaves
-# are distinct). d15 switches to this path automatically past
-# _IVF2_THRESHOLD; every measured floor/golden below the threshold
-# keeps the flat path bit-for-bit.
+# The final per-leaf exact-cosine re-rank is the flat ivf_topk's
+# (_cell_topk_cosine grouped by leaf; one match per (q, v) pair since a
+# vector holds ONE home leaf and probe leaves are distinct). d15
+# switches to this path automatically past _IVF2_THRESHOLD; every
+# measured floor/golden below the threshold keeps the flat path
+# bit-for-bit.
 _IVF2_THRESHOLD = _IVF_MAX_K * _IVF_TARGET_CELL  # ≈ 344k vectors
 _IVF2_TOP_PROBE = 4
 _IVF2_SUB_PROBE = 4
@@ -1147,9 +1145,11 @@ def _ivf2_sub_centroids(data_top, k2: int):
 
 
 def _ivf2_assign(vecs_top, subc, nsub: int):
-    """Cogroup (vectors by top cell) × (that cell's sub-centroids) →
-    (vec_id, embedding, leaf) with each vector's `nsub` nearest leaves
-    in its top cell — one _nearest_cells call per cell. The
+    """Cogroup (vec_id, embedding, tcell, rank) top-cell probe rows ×
+    that cell's sub-centroids → (vec_id, embedding, leaf, rank) with
+    each row's `nsub` nearest leaves in its top cell — one
+    _nearest_cells call per cell. The output rank is top rank · nsub +
+    sub rank, so it is 0 exactly on the vector's home leaf. The
     embedding rides through (it is already in the cogroup stream;
     re-attaching it later would cost a second full-width shuffle)."""
 
@@ -1159,6 +1159,7 @@ def _ivf2_assign(vecs_top, subc, nsub: int):
                 "vec_id": pd.Series([], dtype="int64"),
                 "embedding": pd.Series([], dtype=object),
                 "leaf": pd.Series([], dtype="int64"),
+                "rank": pd.Series([], dtype="int64"),
             }
         )
         if len(vdf) == 0 or len(cdf) == 0:
@@ -1176,11 +1177,13 @@ def _ivf2_assign(vecs_top, subc, nsub: int):
                 "vec_id": vdf["vec_id"].to_numpy(dtype=np.int64)[rows],
                 "embedding": [X[i].tolist() for i in rows],
                 "leaf": tcell * _IVF2_LEAF_STRIDE + top.ravel(),
+                "rank": vdf["rank"].to_numpy(dtype=np.int64)[rows] * nsub
+                + np.tile(np.arange(m), len(X)),
             }
         )
 
     return vecs_top.groupby("tcell").cogroup(subc.groupby("tcell")).applyInPandas(
-        assign, schema="vec_id long, embedding array<double>, leaf long"
+        assign, schema="vec_id long, embedding array<double>, leaf long, rank long"
     )
 
 
@@ -1204,27 +1207,18 @@ def ivf2_topk(
     if k2 >= _IVF2_LEAF_STRIDE:  # pragma: no cover — 2^20 subs per cell
         raise ValueError(f"ivf2: k2={k2} exceeds leaf stride")
     C1 = _train_centroids_df(e, K1)
-    home = _ivf_cells_udf(C1, 1)
     probe = _ivf_cells_udf(C1, min(top_probe, len(C1)))
-    data_top = e.select(
-        "vec_id", "embedding", F.explode(home("embedding")).alias("tcell")
-    )
-    subc = _ivf2_sub_centroids(data_top, k2)
-    data = _ivf2_assign(data_top, subc, 1)
     q_top = e.select(
-        "vec_id", "embedding", F.explode(probe("embedding")).alias("tcell")
+        "vec_id",
+        "embedding",
+        F.posexplode(probe("embedding")).alias("rank", "tcell"),
     )
-    qs = _ivf2_assign(q_top, subc, sub_probe).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qe"),
-        "leaf",
-    )
-    dd = data.select("vec_id", "embedding", "leaf")
-    # Round 7 (guide §8): cogroup by leaf — same shape as the flat
-    # path's cell cogroup; vectors cross once per leaf, the cosine grid
+    subc = _ivf2_sub_centroids(q_top.filter(F.col("rank") == 0), k2)
+    # Round 7 (guide §8): group by leaf — same shape as the flat path's
+    # cell grouping; vectors cross once per probed leaf, the cosine grid
     # is one numpy pass per leaf (bit-identical fold order), and the
     # margin pre-filter bounds the window input (see _cell_topk_cosine).
-    sims = _cell_topk_cosine(qs, dd, "leaf").select(
+    sims = _cell_topk_cosine(_ivf2_assign(q_top, subc, sub_probe), "leaf").select(
         "q_id", "vec_id", F.round(F.col("cosine"), 4).alias("cosine")
     )
     return _per_query_topk(sims, 3)
@@ -3337,15 +3331,17 @@ def d40(spark, sf):
     size; cosine is rounded BEFORE the argmax on both engines (d27's
     rule) so float ulps can't flip the winner, and the cid tie-break
     is total."""
-    return _centroid_assign(t(spark, sf, "embeddings"))
+    return _centroid_assign(t(spark, sf, "embeddings")).drop("embedding")
 
 
 def _centroid_assign(e, stats: tuple[int, int, dict] | None = None):
-    """(vec_id, cluster_id, cosine) nearest-centroid assignment against
-    the fixed vec_id < _D40_K centroid set, as a map-only projection —
-    the shared core of d40 and d42 (see d40's docstring for the scale
-    argument). `e` enters through dense_embeddings, so every row and
-    every centroid is a finite nonzero vector of one dim."""
+    """(vec_id, cluster_id, cosine, embedding) nearest-centroid
+    assignment against the fixed vec_id < _D40_K centroid set, as a
+    map-only projection — the shared core of d40 and d42 (see d40's
+    docstring for the scale argument). The assignment row carries its
+    vector, so d42 needs no embedding join-back. `e` enters through
+    dense_embeddings, so every row and every centroid is a finite
+    nonzero vector of one dim."""
     e, _, _ = dense_embeddings(e, stats)
     cents = (
         e.filter(F.col("vec_id") < _D40_K)
@@ -3379,7 +3375,7 @@ def _centroid_assign(e, stats: tuple[int, int, dict] | None = None):
             cos = (dots / np.sqrt(_fold_dot(XT, XT))[:, None]) / cnorms[None, :]
             yield pd.Series(list(cos))
 
-    proj = e.select("vec_id", cos_arr("embedding").alias("ca"))
+    proj = e.select("vec_id", "embedding", cos_arr("embedding").alias("ca"))
     scored = [
         F.struct(
             F.round(F.element_at("ca", k + 1), 4).alias("cosine"),
@@ -3392,6 +3388,7 @@ def _centroid_assign(e, stats: tuple[int, int, dict] | None = None):
         "vec_id",
         (-best.negcid).cast("bigint").alias("cluster_id"),
         best.cosine.alias("cosine"),
+        "embedding",
     )
 
 
@@ -3454,7 +3451,6 @@ def d42(spark, sf):
     decision across engines."""
     e, n, dim = dense_embeddings(t(spark, sf, "embeddings"))
     asg = _centroid_assign(e, (n, dim, {}))
-    m = asg.select("vec_id", "cluster_id").join(e, "vec_id")
     # Round 7 (guide §8): the within-cluster pair stage was a self-join
     # on cluster_id scoring every pair with the interpreted fold — at
     # sf1 that is ~25M pairs × 64 interpreted lambdas (measured 107 s).
@@ -3466,7 +3462,7 @@ def d42(spark, sf):
     # JVM-side, so the drop-set is bit-identical (d42's value oracle
     # stays green).
     dropped = (
-        _cluster_pair_candidates(m, _D42_TAU - 1e-3)
+        _cluster_pair_candidates(asg, _D42_TAU - 1e-3)
         .filter(F.round(F.col("cosine"), 4) >= _D42_TAU)
         .select(F.col("b_id").alias("vec_id"))
         .distinct()

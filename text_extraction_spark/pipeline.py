@@ -264,7 +264,6 @@ def extract_spans(
     corpus: DataFrame,
     media: DataFrame,
     salt_partitions: int | None = None,
-    broadcast_media: bool | None = None,
 ) -> DataFrame:
     """A2–A14 + A17: corpus (doc_id, spans) ⋈ media → per-span extraction.
 
@@ -329,12 +328,9 @@ def extract_spans(
         .alias("est_cost"),
         (F.spark_partition_id() * 2 + 1).alias("partition_id"),
     )
-    if broadcast_media is True:
-        media_results = F.broadcast(media_results)
-    else:
-        # build the small (text, cost) side in a hash map — skips the
-        # sort-merge sorts on both sides
-        media_results = media_results.hint("shuffle_hash")
+    # build the small (text, cost) side in a hash map — skips the
+    # sort-merge sorts on both sides
+    media_results = media_results.hint("shuffle_hash")
     media_out = media_in.join(media_results, "media_ref", "left").select(
         "doc_id",
         "offset",

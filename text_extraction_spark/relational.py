@@ -31,11 +31,6 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-# parquet (row_groups, uncompressed_bytes) per path — one driver-side
-# footer read each, cached for the process (metadata only, same class
-# as Spark's own file-listing cache; never caches query results)
-_SCAN_META: dict[str, tuple[int, int]] = {}
-
 # Below this uncompressed size the round-robin spread's own shuffle +
 # stage latency outweighs the parallelism it buys (measured at sf0.1,
 # 1.6–2.6 MB tables: spread cost ~+0.3 s vs ~0.3 s of serial map work
@@ -44,27 +39,24 @@ _SPREAD_MIN_BYTES = 4 * 1024 * 1024
 
 
 def _scan_meta(path: str) -> tuple[int, int]:
-    m = _SCAN_META.get(path)
-    if m is None:
-        import glob as _glob
+    """Parquet (row_groups, uncompressed_bytes) of a file or directory,
+    read from its footers on every call (~0.1 ms per table), so a table
+    rewritten in place is sized by what it holds now."""
+    import glob as _glob
 
-        import pyarrow.parquet as _pq
+    import pyarrow.parquet as _pq
 
-        files = (
-            [path]
-            if os.path.isfile(path)
-            else sorted(_glob.glob(os.path.join(path, "*.parquet")))
-        )
-        groups, nbytes = 0, 0
-        for f in files:
-            md = _pq.ParquetFile(f).metadata
-            groups += md.num_row_groups
-            nbytes += sum(
-                md.row_group(i).total_byte_size for i in range(md.num_row_groups)
-            )
-        m = (groups or 1, nbytes)
-        _SCAN_META[path] = m
-    return m
+    files = (
+        [path]
+        if os.path.isfile(path)
+        else sorted(_glob.glob(os.path.join(path, "*.parquet")))
+    )
+    groups, nbytes = 0, 0
+    for f in files:
+        md = _pq.ParquetFile(f).metadata
+        groups += md.num_row_groups
+        nbytes += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
+    return groups or 1, nbytes
 
 
 def t_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -78,7 +70,7 @@ def t_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     not split-aware (splits of a single-row-group file are fake
     parallelism), and additionally requires the table to carry enough
     bytes (_SPREAD_MIN_BYTES) for the spread to beat its own shuffle.
-    Costs one cached footer read on the driver; at any real table size
+    Costs one footer read on the driver; at any real table size
     row groups >> cores and the bare scan is returned unchanged — the
     guard can only ever fire where the table is small enough that the
     repartition it adds is trivially cheap. Round-robin repartition is
