@@ -28,16 +28,15 @@ def test_nearest_cell_ties_go_to_the_lowest_centroid_index(spark, monkeypatch):
     udf = dataops._ivf_cells_udf(C, n)
     assert udf.func(pd.Series(list(Q))).tolist() == want
 
-    vecs = spark.createDataFrame(
-        [(i, [float(x) for x in v], 0, 0) for i, v in enumerate(Q)],
-        "vec_id long, embedding array<double>, tcell long, rank int",
-    )
-    subc = spark.createDataFrame(
-        [(0, [float(x) for x in C.ravel()], len(C), dim)],
-        "tcell long, cents array<double>, k int, dim int",
+    # X trains top cell 0's leaves (its rank-0 rows, vec_id order kept),
+    # Q probes the cell (rank-1 rows)
+    rows = [(dim + i, [float(x) for x in v], 0, 0) for i, v in enumerate(X)]
+    rows += [(i, [float(x) for x in v], 0, 1) for i, v in enumerate(Q)]
+    probe = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, tcell long, rank int"
     )
     got: dict = {}
-    for r in dataops._ivf2_assign(vecs, subc, n).collect():
+    for r in dataops._ivf2_leaves(probe, 48, n).collect():
         got.setdefault(r["vec_id"], []).append(r["leaf"])
     assert [got[i] for i in range(dim)] == want
 

@@ -575,6 +575,27 @@ def test_embedding_dim_derived_and_drops_surfaced(spark):
     assert out and all(r.q_id < 100 and r.vec_id < 100 for r in out)
 
 
+def test_null_vector_at_the_smallest_id_is_one_dropped_row(spark):
+    """The canonical dim is the dim of the smallest vec_id that holds a
+    vector. A null vector at the smallest id is one dropped row; it
+    neither sets the dim nor fails the query (its size is null under
+    ANSI mode)."""
+    import warnings
+
+    rng = np.random.default_rng(4)
+    rows = [(0, None)] + [(i, rng.standard_normal(3).tolist()) for i in range(1, 6)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    assert dataops.emb_stats(df) == (6, 3, {"null vector": 1})
+    assert dataops.emb_stats(df.filter("vec_id = 0")) == (1, 0, {"null vector": 1})
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        dense, n, dim = dataops.dense_embeddings(df)
+    assert (n, dim) == (5, 3) and dense.count() == 5
+    assert [str(x.message) for x in w if x.category is UserWarning] == [
+        "embedding store: 1 rows dropped (null vector: 1)"
+    ]
+
+
 def _planted_48d_rows():
     """48-d store: 6 near-duplicate groups of 4 (cosine ~0.99) plus 16
     random singletons, so dedup yields multi-member components."""
@@ -1145,13 +1166,7 @@ def test_ivf2_leaf_structure_bounded(spark):
     data_top = df.select(
         "vec_id", "embedding", F.posexplode(home("embedding")).alias("rank", "tcell")
     ).filter(F.col("tcell") >= 0)
-    subc = dataops._ivf2_sub_centroids(data_top, 8)
-    leaves = (
-        dataops._ivf2_assign(data_top, subc, 1)
-        .groupBy("leaf")
-        .count()
-        .collect()
-    )
+    leaves = dataops._ivf2_leaves(data_top, 8, 1).groupBy("leaf").count().collect()
     assert stats[0] == n
     assert len(leaves) >= 30, len(leaves)  # ~64 leaves targeted
     assert max(r["count"] for r in leaves) <= n // 4

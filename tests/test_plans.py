@@ -3,6 +3,9 @@ in tests'): pushdown, pruning, join strategies, single UDF evaluation,
 and scan-aligned decode partitioning — the plan shapes the 100 TB story
 depends on, pinned so refactors can't silently regress them."""
 
+import re
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,6 +20,38 @@ def _plan(df) -> str:
 
 def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+# each Python node kind → the plan text that holds its function calls
+_PY_NODES = {
+    "ArrowEvalPython": r"ArrowEvalPython \[(.*?)\], \[",
+    "MapInArrow": r"MapInArrow (\w+\()",
+    "FlatMapGroupsInPandas": r"FlatMapGroupsInPandas \[.*?\], (\w+\()",
+    "FlatMapCoGroupsInPandas": r"FlatMapCoGroupsInPandas \[.*?\], \[.*?\], (\w+\()",
+}
+
+
+def _python_stages(plan: str) -> Counter:
+    """(node kind, function name) → how many times the plan evaluates
+    that Python stage."""
+    stages = Counter()
+    for kind, pat in _PY_NODES.items():
+        for m in re.finditer(pat, plan):
+            for name in re.findall(r"(?:^|, )(\w+)\(", m.group(1)):
+                stages[(kind, name)] += 1
+    return stages
+
+
+def _ivf2_store(spark):
+    """The 200-vector 16-d store the ivf2 plan pins run on."""
+    import numpy as np
+
+    rng = np.random.Generator(np.random.PCG64(3))
+    vecs = [v / np.linalg.norm(v) for v in rng.standard_normal((200, 16))]
+    return spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
 
 
 def test_projection_prunes_scan_schema(spark):
@@ -101,8 +136,6 @@ def test_text_salt_is_sized_by_task_slots(spark, tiny_corpus):
     partition (16 here): every Python task pays a fixed worker set-up
     cost that dwarfs its share of text compute. Still span-level
     (doc_id, offset) and still REPARTITION_BY_NUM."""
-    import re
-
     c = pipeline.load_corpus(spark, tiny_corpus)
     m = pipeline.load_media(spark, tiny_corpus)
     plan = _plan(pipeline.extract_spans(c, m))
@@ -191,7 +224,6 @@ def test_ann_paths_never_nested_loop(spark):
 def _exchange_blocks(df):
     import contextlib
     import io
-    import re
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -338,17 +370,9 @@ def test_ivf2_leaf_join_is_equi_never_nested_loop(spark):
     equi-join on `leaf` — a BroadcastNestedLoop/Cartesian anywhere in
     the hierarchy means the scale path silently degraded to corpus²,
     which is exactly what the two-level quantizer exists to prevent."""
-    import numpy as np
-
     from text_extraction_spark import dataops
 
-    rng = np.random.Generator(np.random.PCG64(3))
-    vecs = [v / np.linalg.norm(v) for v in rng.standard_normal((200, 16))]
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<double>",
-    )
-    plan = _plan(dataops.ivf2_topk(df, target_cell=8))
+    plan = _plan(dataops.ivf2_topk(_ivf2_store(spark), target_cell=8))
     assert "BroadcastNestedLoop" not in plan
     assert "CartesianProduct" not in plan
     assert "leaf" in plan  # the equi-join key is the leaf cell
@@ -359,13 +383,9 @@ def test_ivf_assigns_each_vector_once(spark):
     one probe UDF pass assigns the store and the rank-0 probe rows are
     the data. d15 runs one Python assignment pass and moves its vectors
     through one exchange by cell into one grouped scorer, with no
-    cogroup. ivf2's top-level probe UDF appears once per use of its
-    probe rows (sub-centroid training and leaf assignment: 2, not 4),
-    and the leaf assignment is its only cogroup."""
-    import re
-
-    import numpy as np
-
+    cogroup. ivf2 runs its top-level probe UDF once, and one grouped
+    pass per top cell trains that cell's leaves and assigns its probe
+    rows to them, with no cogroup."""
     from text_extraction_spark import dataops
 
     plan = _plan(dataops.QUERIES["d15_ann_ivf"](spark, SF))
@@ -374,15 +394,49 @@ def test_ivf_assigns_each_vector_once(spark):
     by_cell = re.findall(r"Exchange hashpartitioning\(cell#", plan)
     assert len(by_cell) == 1, plan
 
-    rng = np.random.Generator(np.random.PCG64(3))
-    vecs = [v / np.linalg.norm(v) for v in rng.standard_normal((200, 16))]
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<double>",
-    )
-    plan = _plan(dataops.ivf2_topk(df, target_cell=8))
-    assert plan.count("ArrowEvalPython") == 2, plan
-    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+    plan = _plan(dataops.ivf2_topk(_ivf2_store(spark), target_cell=8))
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "d06_ann_lsh_bucketed",
+        "d14_ann_recall",
+        "d15_ann_ivf",
+        "d40_cluster_assign",
+        "d42_semantic_dedup",
+        "d46_ann_pq",
+        "d72_ann_sq8",
+        "ivf2",
+    ],
+)
+def test_each_python_stage_runs_once(spark, query):
+    """Every Python stage of an embedding query is evaluated once: a
+    decision the grouped pass can make is made there, not worked out
+    again downstream by a join, a cogroup or a union that re-runs the
+    stage. d14 scores each ANN path once, d42 decides keep inside its
+    cluster grid, ivf2 trains and assigns its leaves in one pass."""
+    from text_extraction_spark import dataops
+
+    if query == "ivf2":
+        df = dataops.ivf2_topk(_ivf2_store(spark), target_cell=8)
+    else:
+        df = dataops.QUERIES[query](spark, SF)
+    stages = _python_stages(_plan(df))
+    assert stages and set(stages.values()) == {1}, stages
+
+
+def test_simhash_runs_once_per_join_side(spark):
+    """simhash_udf is marked nondeterministic so Catalyst cannot copy it
+    below the UDF-parallelism repartition with a pushed isnotnull(sig):
+    d03's plan evaluates it twice, once for each side of the block
+    self-join (4 times without the marking)."""
+    from text_extraction_spark import dataops
+
+    plan = _plan(dataops.QUERIES["d03_dedup_simhash"](spark, SF))
+    assert _python_stages(plan) == {("ArrowEvalPython", "simhash_udf"): 2}, plan
 
 
 def test_boilerplate_removal_broadcast_anti_join(spark):
@@ -438,19 +492,21 @@ def test_dsir_single_corpus_scan(spark):
 
 
 def test_semantic_dedup_cluster_equi_join(spark):
-    """d42 (round 6): the SemDeDup pair stage must be an EQUI-join on
+    """d42 (round 6): the SemDeDup pair stage must be partitioned on
     cluster_id — a nested-loop/cartesian anywhere means the clustering
-    failed to partition the quadratic problem — and both cosine sides
-    stay JVM-side."""
+    failed to partition the quadratic problem. The store is scanned and
+    assigned once (one FileScan, one Arrow pass of _centroid_assign),
+    and one exchange on cluster_id feeds the per-cluster grid, which
+    decides keep itself: no join and no other exchange follow it."""
     from text_extraction_spark import dataops
 
     plan = _plan(dataops.QUERIES["d42_semantic_dedup"](spark, SF))
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan
-    assert "cluster_id" in plan
-    # round 7: the centroid scoring runs as ONE Arrow pass per scan of
-    # the assignment subtree (see _centroid_assign); the pairwise
-    # within-cluster cosine stays JVM-side, and no row-at-a-time Python
-    # (BatchEvalPython) may appear anywhere
+    assert re.findall(r"Exchange \w+\(([a-z_]+)#", plan) == ["cluster_id"], plan
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "Join" not in plan, plan
+    # no row-at-a-time Python (BatchEvalPython) may appear anywhere
     assert "BatchEvalPython" not in plan
 
 
@@ -499,7 +555,6 @@ def test_pq_paths_ids_only_shuffles(spark):
     map-only encode stage and the bounded refine join-back."""
     import contextlib
     import io
-    import re
 
     from text_extraction_spark import dataops
 

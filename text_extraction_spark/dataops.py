@@ -254,6 +254,15 @@ def simhash_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
+# simhash_udf IS deterministic (pinned by its reference twin), but it is
+# marked nondeterministic on purpose, as pipeline.py marks its UDFs:
+# otherwise Catalyst pushes the self-join's inferred isnotnull(sig) below
+# _with_udf_parallelism's repartition and copies the UDF (4 evaluations
+# in d03's plan). The two evaluations left are the two sides of the
+# self-join in simhash_candidates.
+simhash_udf = simhash_udf.asNondeterministic()
+
+
 @q("d03_dedup_simhash")  # ⊘ rows-only
 def d03(spark, sf):
     """SimHash near-dup: 64-bit signature, bucketed on ALL FOUR 16-bit
@@ -458,10 +467,11 @@ def emb_stats(df, col: str = "embedding", id_col: str = "vec_id"):
     scans before any real work started). One groupBy over size(col)
     yields a handful of (dim, cnt, min_id, holes, zeros) rows;
     everything derives driver-side. Canonical dim = the dim of the
-    globally smallest id (deterministic at any cluster size). `drops`
-    maps each reason dense_embeddings filters rows out for — null
-    vector, another dim, a null or non-finite element, all elements
-    zero — to its nonzero row count ({} on a clean store)."""
+    smallest id that holds a non-null vector (deterministic at any
+    cluster size). `drops` maps each reason dense_embeddings filters
+    rows out for — null vector, another dim, a null or non-finite
+    element, all elements zero — to its nonzero row count ({} on a
+    clean store)."""
     rows = (
         df.groupBy(F.size(col).alias("dim"))
         .agg(
@@ -475,9 +485,12 @@ def emb_stats(df, col: str = "embedding", id_col: str = "vec_id"):
     if not rows:
         return 0, 0, {}
     n = int(sum(r["cnt"] for r in rows))
-    canon = min(rows, key=lambda r: r["min_id"])
+    present = [r for r in rows if r["dim"] is not None and r["dim"] >= 0]
+    null_vecs = n - sum(r["cnt"] for r in present)
+    if not present:
+        return n, 0, {"null vector": n}
+    canon = min(present, key=lambda r: r["min_id"])
     dim = int(canon["dim"])
-    null_vecs = sum(r["cnt"] for r in rows if r["dim"] is None or r["dim"] < 0)
     drops = {
         "null vector": null_vecs,
         f"embedding dim != {dim}": n - int(canon["cnt"]) - null_vecs,
@@ -1086,15 +1099,15 @@ def ivf_topk(e, C: np.ndarray, stats: tuple[int, int, dict] | None = None):
 #               _train_centroids_df, as on the flat path (K1 stays
 #               ≤ _IVF_MAX_K until n ≈ 42·8192² ≈ 2.8e9 vectors;
 #               closure ≤ K1·dim doubles, ~4 MB at the cap)
-#   sub level   k2 ≈ K1 centroids PER top cell — trained DISTRIBUTED,
-#               one applyInPandas task per top cell over a hash-ranked
-#               8·k2-row sample (the flat trainer's sample rule, pushed
-#               into the cluster), so total leaf count K1·k2 ≈ n/42
-#               at any n with no driver bottleneck
-#   assignment  ONE cogroup(probe rows by top cell, sub-centroids by top
-#               cell) → one batched matmul per cell; leaf =
+#   sub level   k2 ≈ K1 centroids PER top cell, trained and assigned
+#               DISTRIBUTED in one groupBy(tcell).applyInPandas pass
+#               (_ivf2_leaves): each cell trains on its hash-ranked
+#               8·k2-row sample of rank-0 rows (the flat trainer's
+#               sample rule, pushed into the cluster), then assigns all
+#               its probe rows with one batched matmul; leaf =
 #               tcell·STRIDE+sub, and a vector's rank-0 row (home top
-#               cell, nearest sub-centroid) is its home leaf
+#               cell, nearest sub-centroid) is its home leaf. Total leaf
+#               count K1·k2 ≈ n/42 at any n with no driver bottleneck
 #   probing     queries probe _IVF2_TOP_PROBE top cells × _IVF2_SUB_PROBE
 #               leaves each (16 leaves ≈ the flat path's nprobe=14), so
 #               per-query candidate work stays ~16·42 cosines at any n
@@ -1111,79 +1124,60 @@ _IVF2_SUB_PROBE = 4
 _IVF2_LEAF_STRIDE = 1 << 20  # leaf id = tcell * STRIDE + sub (k2 << STRIDE)
 
 
-def _ivf2_sub_centroids(data_top, k2: int):
-    """(vec_id, embedding, tcell) → one row per top cell holding that
-    cell's flattened sub-centroid matrix: (tcell, cents, k, dim).
-    Training is DISTRIBUTED — per-cell hash-ranked 8·k2-row sample via
-    row_number (never a whole-cell collect), then one seeded
-    _spherical_kmeans per cell inside applyInPandas; rows are
-    vec_id-sorted in-group so centroids don't depend on shuffle arrival
-    order."""
-    wc = Window.partitionBy("tcell").orderBy(F.xxhash64("vec_id"), "vec_id")
-    sample = (
-        data_top.withColumn("rn", F.row_number().over(wc))
-        .filter(F.col("rn") <= 8 * k2)
-        .drop("rn")
-    )
+def _ivf2_leaves(q_top, k2: int, nsub: int):
+    """(vec_id, embedding, tcell, rank) top-cell probe rows → (vec_id,
+    embedding, leaf, rank) in ONE groupBy(tcell).applyInPandas pass:
+    per top cell, the 8·k2 lowest-(xxhash64(vec_id), vec_id) rank-0
+    rows are the trainer sample (the hash rides as a JVM-side column,
+    as in _hyperplane_scored_pairs, so Python never re-implements
+    xxhash64); one seeded _spherical_kmeans runs on that sample sorted
+    by vec_id, so the sub-centroids do not depend on shuffle arrival
+    order; then every probe row of the cell takes its `nsub` nearest
+    leaves with one _nearest_cells call. The output rank is top rank ·
+    nsub + sub rank, so it is 0 exactly on the vector's home leaf. A
+    cell probed by no vector's rank-0 row has no sub-centroids and
+    emits nothing. The embedding rides through (re-attaching it later
+    would cost a second full-width shuffle)."""
 
-    def train(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id")
+    def leaves(pdf: pd.DataFrame) -> pd.DataFrame:
+        home = pdf[pdf["rank"] == 0]
+        if len(home) == 0:
+            return pd.DataFrame(
+                {
+                    "vec_id": pd.Series([], dtype="int64"),
+                    "embedding": pd.Series([], dtype=object),
+                    "leaf": pd.Series([], dtype="int64"),
+                    "rank": pd.Series([], dtype="int64"),
+                }
+            )
+        order = np.lexsort((home["vec_id"].to_numpy(), home["h"].to_numpy()))
+        sample = home.iloc[order[: 8 * k2]].sort_values("vec_id")
+        C = _spherical_kmeans(
+            np.stack(sample["embedding"].to_list()).astype(np.float64),
+            k=min(k2, len(sample)),
+        )
         X = np.stack(pdf["embedding"].to_list()).astype(np.float64)
-        C = _spherical_kmeans(X, k=min(k2, len(X)))
-        return pd.DataFrame(
-            {
-                "tcell": [int(pdf["tcell"].iloc[0])],
-                "cents": [C.ravel().tolist()],
-                "k": [int(C.shape[0])],
-                "dim": [int(C.shape[1])],
-            }
-        )
-
-    return sample.groupBy("tcell").applyInPandas(
-        train, schema="tcell long, cents array<double>, k int, dim int"
-    )
-
-
-def _ivf2_assign(vecs_top, subc, nsub: int):
-    """Cogroup (vec_id, embedding, tcell, rank) top-cell probe rows ×
-    that cell's sub-centroids → (vec_id, embedding, leaf, rank) with
-    each row's `nsub` nearest leaves in its top cell — one
-    _nearest_cells call per cell. The output rank is top rank · nsub +
-    sub rank, so it is 0 exactly on the vector's home leaf. The
-    embedding rides through (it is already in the cogroup stream;
-    re-attaching it later would cost a second full-width shuffle)."""
-
-    def assign(key, vdf: pd.DataFrame, cdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "vec_id": pd.Series([], dtype="int64"),
-                "embedding": pd.Series([], dtype=object),
-                "leaf": pd.Series([], dtype="int64"),
-                "rank": pd.Series([], dtype="int64"),
-            }
-        )
-        if len(vdf) == 0 or len(cdf) == 0:
-            return empty
-        k = int(cdf["k"].iloc[0])
-        dim = int(cdf["dim"].iloc[0])
-        C = np.asarray(cdf["cents"].iloc[0], dtype=np.float64).reshape(k, dim)
-        tcell = int(key[0])
-        X = np.stack(vdf["embedding"].to_list()).astype(np.float64)
-        m = min(nsub, k)
+        m = min(nsub, len(C))
         top = _nearest_cells(X, C, m)
         rows = np.repeat(np.arange(len(X)), m)
         return pd.DataFrame(
             {
-                "vec_id": vdf["vec_id"].to_numpy(dtype=np.int64)[rows],
+                "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64)[rows],
                 "embedding": [X[i].tolist() for i in rows],
-                "leaf": tcell * _IVF2_LEAF_STRIDE + top.ravel(),
-                "rank": vdf["rank"].to_numpy(dtype=np.int64)[rows] * nsub
+                "leaf": int(pdf["tcell"].iloc[0]) * _IVF2_LEAF_STRIDE + top.ravel(),
+                "rank": pdf["rank"].to_numpy(dtype=np.int64)[rows] * nsub
                 + np.tile(np.arange(m), len(X)),
             }
         )
 
-    return vecs_top.groupby("tcell").cogroup(subc.groupby("tcell")).applyInPandas(
-        assign, schema="vec_id long, embedding array<double>, leaf long, rank long"
+    return (
+        q_top.select(
+            "vec_id", "embedding", "tcell", "rank", F.xxhash64("vec_id").alias("h")
+        )
+        .groupBy("tcell")
+        .applyInPandas(
+            leaves, schema="vec_id long, embedding array<double>, leaf long, rank long"
+        )
     )
 
 
@@ -1213,12 +1207,11 @@ def ivf2_topk(
         "embedding",
         F.posexplode(probe("embedding")).alias("rank", "tcell"),
     )
-    subc = _ivf2_sub_centroids(q_top.filter(F.col("rank") == 0), k2)
     # Round 7 (guide §8): group by leaf — same shape as the flat path's
     # cell grouping; vectors cross once per probed leaf, the cosine grid
     # is one numpy pass per leaf (bit-identical fold order), and the
     # margin pre-filter bounds the window input (see _cell_topk_cosine).
-    sims = _cell_topk_cosine(_ivf2_assign(q_top, subc, sub_probe), "leaf").select(
+    sims = _cell_topk_cosine(_ivf2_leaves(q_top, k2, sub_probe), "leaf").select(
         "q_id", "vec_id", F.round(F.col("cosine"), 4).alias("cosine")
     )
     return _per_query_topk(sims, 3)
@@ -1246,12 +1239,12 @@ def d14(spark, sf):
     unmeasured ANN is an unknown — this IS the measurement, runnable at
     any sf."""
     exact3 = _exact_top3(spark, sf)
+    n_true = exact3.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_true"))
 
     def recall_of(approx, op: str):
         hits = exact3.join(approx.select("q_id", "vec_id"), ["q_id", "vec_id"], "left_semi")
-        per_q = (
-            exact3.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_true"))
-            .join(hits.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_hit")), "q_id", "left")
+        return (
+            n_true.join(hits.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_hit")), "q_id", "left")
             .select(
                 F.lit(op).alias("op"),
                 "q_id",
@@ -1260,15 +1253,21 @@ def d14(spark, sf):
                 ).alias("recall_at_3"),
             )
         )
-        mean_row = per_q.agg(
-            F.lit(op).alias("op"),
-            F.lit(-1).alias("q_id"),
-            F.round(F.avg("recall_at_3"), 4).alias("recall_at_3"),
-        )
-        return per_q.unionByName(mean_row)
 
-    return recall_of(d06(spark, sf), "lsh").unionByName(
-        recall_of(d15(spark, sf), "ivf")
+    per_q = recall_of(d06(spark, sf), "lsh").unionByName(recall_of(d15(spark, sf), "ivf"))
+    # ONE rollup over both ops' per-query rows yields the per-query rows
+    # (avg of one value is that value) and each op's mean row, so each
+    # ANN path is evaluated once; grouping_id 3 is the grand total
+    g = F.grouping_id()
+    return (
+        per_q.rollup("op", "q_id")
+        .agg(F.avg("recall_at_3").alias("m"), g.alias("g"))
+        .filter(F.col("g") < 3)
+        .select(
+            "op",
+            F.coalesce("q_id", F.lit(-1).cast("long")).alias("q_id"),
+            F.when(F.col("g") == 1, F.round("m", 4)).otherwise(F.col("m")).alias("recall_at_3"),
+        )
     )
 
 
@@ -2541,6 +2540,30 @@ SELECT id AS vec_id, component, (id = component) AS keep FROM cc
 """
 
 
+def _bruteforce_topk_sql(store_dir: str, n_queries: int) -> str:
+    """Brute-force cosine per query (vec_id < n_queries), round 4dp,
+    rank by (cosine desc, vec_id), top-3 in DuckDB — the shared oracle
+    shape for d47/d73 (lazy: it embeds the fixture path)."""
+    return f"""
+WITH v AS (
+  SELECT vec_id, embedding,
+         sqrt(list_aggregate(list_transform(embedding, x -> x * x), 'sum')) AS nrm
+  FROM read_parquet('{store_dir}/embeddings.parquet')
+), sims AS (
+  SELECT q.vec_id AS q_id, b.vec_id AS vec_id,
+         round(list_aggregate(list_transform(q.embedding,
+                   (x, i) -> x * b.embedding[i]), 'sum') / q.nrm / b.nrm, 4) AS cosine
+  FROM v q JOIN v b ON b.vec_id <> q.vec_id
+  WHERE q.vec_id < {n_queries}
+), ranked AS (
+  SELECT q_id, vec_id, cosine,
+         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rn
+  FROM sims
+)
+SELECT q_id, vec_id, cosine FROM ranked WHERE rn <= 3
+"""
+
+
 def d38_oracle_sql() -> str:
     return _bruteforce_components_sql(bigcluster_store_dir(), _NEARDUP_THRESHOLD)
 
@@ -3445,83 +3468,63 @@ def d42(spark, sf):
     Shape at 100 TB: clustering turns the quadratic all-pairs problem
     into sum-of-k² within clusters — with the centroid count grown
     ~n/target (d15's trainer rule) per-cluster size stays ~constant
-    and total verify work stays linear. The pair join is an equi-join
-    on cluster_id (never a cartesian); both cosine rounds happen
+    and total verify work stays linear. The store is scanned and
+    assigned once, and one exchange on cluster_id feeds the
+    per-cluster grid (never a cartesian); both cosine rounds happen
     BEFORE the tau compare / argmax so float ulps can't flip a drop
     decision across engines."""
     e, n, dim = dense_embeddings(t(spark, sf, "embeddings"))
     asg = _centroid_assign(e, (n, dim, {}))
-    # Round 7 (guide §8): the within-cluster pair stage was a self-join
-    # on cluster_id scoring every pair with the interpreted fold — at
-    # sf1 that is ~25M pairs × 64 interpreted lambdas (measured 107 s).
-    # One grouped numpy grid per cluster scores the same pairs with the
-    # fold's exact float64 op order and emits only pairs whose RAW
-    # cosine can still pass the rounded >= tau filter (margin 1e-3 ≫
-    # the 5e-5 max shift of F.round(·,4)). The EXACT filter —
-    # F.round(cosine, 4) >= tau on the emitted raw double — stays
-    # JVM-side, so the drop-set is bit-identical (d42's value oracle
-    # stays green).
-    dropped = (
-        _cluster_pair_candidates(asg, _D42_TAU - 1e-3)
-        .filter(F.round(F.col("cosine"), 4) >= _D42_TAU)
-        .select(F.col("b_id").alias("vec_id"))
-        .distinct()
-        .withColumn("dropflag", F.lit(True))
-    )
-    return asg.select("vec_id", "cluster_id").join(dropped, "vec_id", "left").select(
+    # Round 7 (guide §8): one grouped numpy grid per cluster scores the
+    # within-cluster pairs with the fold's exact float64 op order and
+    # keeps, per member, only its largest RAW cosine to a smaller-id
+    # mate. Spark's round is monotone, so round(max) = max(round): a
+    # member drops iff round(top, 4) >= tau, i.e. iff the rounded cosine
+    # to some smaller-id mate reaches tau. The rounding and the compare
+    # stay JVM-side, where d42's value oracle pins them.
+    return _cluster_top_mate(asg).select(
         "vec_id",
         "cluster_id",
-        F.col("dropflag").isNull().alias("kept"),
+        F.coalesce(F.round(F.col("top"), 4) < _D42_TAU, F.lit(True)).alias("kept"),
     )
 
 
-def _cluster_pair_candidates(m, floor: float):
+def _cluster_top_mate(m):
     """(cluster_id, vec_id, embedding) rows of a dense store (see
-    dense_embeddings) → (a_id, b_id, cosine) for every within-cluster
-    pair (a_id < b_id) whose RAW cosine is >= floor — the margin
-    superset d42's exact rounded-tau filter then prunes (see d42).
-    Cosines keep the JVM fold's float64 op order exactly (_fold_dot,
-    division dot / |a| / |b|)."""
-
-    _empty = {
-        "a_id": pd.Series([], dtype="int64"),
-        "b_id": pd.Series([], dtype="int64"),
-        "cosine": pd.Series([], dtype="float64"),
-    }
+    dense_embeddings) → (vec_id, cluster_id, top): every member once,
+    with its largest RAW cosine to a smaller-id member of its cluster
+    (null for the cluster's smallest id). Cosines keep the JVM fold's
+    float64 op order exactly (_fold_dot, division dot / |a| / |b| with
+    a the smaller id)."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame(_empty)
         ids = pdf["vec_id"].to_numpy()
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
         MT = np.stack(pdf["embedding"].to_list(), axis=1).astype(np.float64)[:, order]
         n = MT.shape[1]
         norms = np.sqrt(_fold_dot(MT, MT))
-        out_a, out_b, out_c = [], [], []
+        top = np.full(n, np.nan)  # null for the smallest id
         chunk = max(1, (1 << 22) // n)  # ~32 MB grid chunks
-        for s in range(0, n - 1, chunk):
-            e_ = min(s + chunk, n - 1)
-            acc = _fold_dot(MT[:, s:e_, None], MT[:, None, :])
-            cos = (acc / norms[s:e_, None]) / norms[None, :]
-            # upper triangle only (a_id < b_id after the id sort)
-            tri = np.arange(s, e_)[:, None] < np.arange(n)[None, :]
-            ai, bi = np.nonzero(tri & (cos >= floor))
-            out_a.append(ids[ai + s])
-            out_b.append(ids[bi])
-            out_c.append(cos[ai, bi])
+        for s in range(1, n, chunk):
+            e_ = min(s + chunk, n)
+            # rows are the larger ids b, columns their smaller-id mates a
+            acc = _fold_dot(MT[:, s:e_, None], MT[:, None, :e_])
+            cos = (acc / norms[None, :e_]) / norms[s:e_, None]
+            lower = np.arange(e_)[None, :] < np.arange(s, e_)[:, None]
+            top[s:e_] = np.where(lower, cos, -np.inf).max(axis=1)
         return pd.DataFrame(
             {
-                "a_id": pd.Series(np.concatenate(out_a), dtype="int64"),
-                "b_id": pd.Series(np.concatenate(out_b), dtype="int64"),
-                "cosine": pd.Series(np.concatenate(out_c), dtype="float64"),
+                "vec_id": pd.Series(ids, dtype="int64"),
+                "cluster_id": pd.Series(np.full(n, pdf["cluster_id"].iloc[0]), dtype="int64"),
+                "top": pd.Series(top, dtype="Float64"),
             }
         )
 
     return (
         m.select("cluster_id", "vec_id", "embedding")
         .groupBy("cluster_id")
-        .applyInPandas(fn, "a_id long, b_id long, cosine double")
+        .applyInPandas(fn, "vec_id long, cluster_id long, top double")
     )
 
 
@@ -4125,26 +4128,7 @@ def pq_store_dir() -> str:
 
 
 def d47_oracle_sql() -> str:
-    """Lazy (embeds the fixture path): brute-force cosine per query,
-    round 4dp, rank by (cosine desc, vec_id), top-3."""
-    return f"""
-WITH v AS (
-  SELECT vec_id, embedding,
-         sqrt(list_aggregate(list_transform(embedding, x -> x * x), 'sum')) AS nrm
-  FROM read_parquet('{pq_store_dir()}/embeddings.parquet')
-), sims AS (
-  SELECT q.vec_id AS q_id, b.vec_id AS vec_id,
-         round(list_aggregate(list_transform(q.embedding,
-                   (x, i) -> x * b.embedding[i]), 'sum') / q.nrm / b.nrm, 4) AS cosine
-  FROM v q JOIN v b ON b.vec_id <> q.vec_id
-  WHERE q.vec_id < {_PQG_QUERIES}
-), ranked AS (
-  SELECT q_id, vec_id, cosine,
-         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rn
-  FROM sims
-)
-SELECT q_id, vec_id, cosine FROM ranked WHERE rn <= 3
-"""
+    return _bruteforce_topk_sql(pq_store_dir(), _PQG_QUERIES)
 
 
 @q("d47_ann_pq_golden")  # oracle registered lazily (embeds store path)
@@ -6041,26 +6025,7 @@ def sq8_store_dir() -> str:
 
 
 def d73_oracle_sql() -> str:
-    """Lazy (embeds the fixture path): brute-force cosine per query,
-    round 4dp, rank by (cosine desc, vec_id), top-3."""
-    return f"""
-WITH v AS (
-  SELECT vec_id, embedding,
-         sqrt(list_aggregate(list_transform(embedding, x -> x * x), 'sum')) AS nrm
-  FROM read_parquet('{sq8_store_dir()}/embeddings.parquet')
-), sims AS (
-  SELECT q.vec_id AS q_id, b.vec_id AS vec_id,
-         round(list_aggregate(list_transform(q.embedding,
-                   (x, i) -> x * b.embedding[i]), 'sum') / q.nrm / b.nrm, 4) AS cosine
-  FROM v q JOIN v b ON b.vec_id <> q.vec_id
-  WHERE q.vec_id < {_SQ8G_QUERIES}
-), ranked AS (
-  SELECT q_id, vec_id, cosine,
-         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rn
-  FROM sims
-)
-SELECT q_id, vec_id, cosine FROM ranked WHERE rn <= 3
-"""
+    return _bruteforce_topk_sql(sq8_store_dir(), _SQ8G_QUERIES)
 
 
 @q("d73_ann_sq8_golden")  # oracle registered lazily (embeds store path)
