@@ -77,3 +77,13 @@ def test_each_ann_kernel_is_written_once():
     assert "def q(" not in s
     assert "def q(" not in src(extraction_queries)
     assert src(relational).count("def q(") == 1
+
+
+def test_minhash_verify_is_written_once():
+    """Source pin for the text near-dup plane: the MinHash verify — the
+    word sets joined onto both ends of each candidate pair — appears
+    once in dataops.py (minhash_jaccard), shared by d13/d36/d56 and
+    d20/d30."""
+    with open(dataops.__file__, encoding="utf-8") as f:
+        s = f.read()
+    assert s.count('.join(a, "doc_a").join(b, "doc_b")') == 1

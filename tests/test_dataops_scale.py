@@ -531,25 +531,35 @@ def test_minhash_candidate_recall_floor(spark):
 def test_simhash_candidate_recall(spark):
     """d03's 4-block OR-bucketing: Hamming ≤ 3 recall must be EXACTLY
     1.0 (pigeonhole over 4×16-bit blocks — a guarantee, not a tuning),
-    and Hamming ≤ 8 best-effort recall ≥ 0.5 (measured 0.641)."""
+    and Hamming ≤ 8 best-effort recall ≥ 0.5 (measured 0.641). The
+    candidate rows are exactly the pairs that share a 16-bit block and
+    sit within Hamming 8, each once, with its Hamming distance — also
+    for the pairs that share several blocks."""
     import itertools
 
     docs, df = _neardup_fixture(spark)
     sigs = dataops.simhash_udf.func(pd.Series([" ".join(ws) for ws in docs.values()]))
-    sig = dict(zip(docs.keys(), (int(v) for v in sigs)))
-    h3, h8 = set(), set()
+    sig = dict(zip(docs.keys(), (int(v) & ((1 << 64) - 1) for v in sigs)))
+    h3, h8, truth, multi = set(), set(), {}, set()
     for a, b in itertools.combinations(sorted(docs), 2):
-        hd = bin((sig[a] ^ sig[b]) & ((1 << 64) - 1)).count("1")
+        x = sig[a] ^ sig[b]
+        hd = bin(x).count("1")
         if hd <= 3:
             h3.add((a, b))
         if hd <= 8:
             h8.add((a, b))
-    cand = {
-        (r.doc_a, r.doc_b)
-        for r in dataops.simhash_candidates(df).select("doc_a", "doc_b").collect()
-    }
+            agree = sum((x >> (16 * r)) & 0xFFFF == 0 for r in range(4))
+            if agree:
+                truth[(a, b)] = hd
+            if agree >= 2:
+                multi.add((a, b))
+    rows = [(r.doc_a, r.doc_b, r.hamming) for r in dataops.simhash_candidates(df).collect()]
+    cand = {(a, b) for a, b, _ in rows}
     assert h3 and len(h3 & cand) == len(h3)
     assert len(h8 & cand) / len(h8) >= 0.5
+    assert multi, "fixture holds no pair agreeing on two blocks — regenerate"
+    assert len(rows) == len(cand)
+    assert {(a, b): h for a, b, h in rows} == truth
 
 
 def test_embedding_dim_derived_and_drops_surfaced(spark):

@@ -432,11 +432,24 @@ def test_simhash_runs_once_per_join_side(spark):
     """simhash_udf is marked nondeterministic so Catalyst cannot copy it
     below the UDF-parallelism repartition with a pushed isnotnull(sig):
     d03's plan evaluates it twice, once for each side of the block
-    self-join (4 times without the marking)."""
+    self-join (4 times without the marking). A pair's lowest agreeing
+    block owns it, so no aggregate dedups the block hits."""
     from text_extraction_spark import dataops
 
     plan = _plan(dataops.QUERIES["d03_dedup_simhash"](spark, SF))
     assert _python_stages(plan) == {("ArrowEvalPython", "simhash_udf"): 2}, plan
+    assert "HashAggregate" not in plan, plan
+
+
+def test_ann_recall_evaluates_its_exact_twin_once(spark):
+    """d14 evaluates _exact_top3 (a broadcast cross join over the store)
+    once for both ops: one nested-loop join, and one embeddings scan
+    each for the exact twin, its query side, d06 and d15."""
+    from text_extraction_spark import dataops
+
+    plan = _plan(dataops.QUERIES["d14_ann_recall"](spark, SF))
+    assert plan.count("BroadcastNestedLoopJoin") == 1, plan
+    assert plan.count("FileScan parquet") == 4, plan
 
 
 def test_boilerplate_removal_broadcast_anti_join(spark):

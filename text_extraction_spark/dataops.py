@@ -270,35 +270,36 @@ def d03(spark, sf):
     least one identical block (pigeonhole over 4 blocks), so recall at
     tight radii is GUARANTEED, and <= 8 gets four independent chances
     instead of one. Each block join is an equi join bounded by bucket
-    occupancy; duplicate pair hits across blocks collapse in one
-    distinct. Still never corpus²."""
+    occupancy; a pair agreeing on several blocks is kept only by its
+    lowest agreeing block, so it leaves once with no distinct. No skew
+    guard: a cap would change these rows and break the pigeonhole
+    guarantee d33 and the recall test rely on, so each bucket (the
+    largest: 1 068 docs at sf0.1, 2 088 at sf1) is joined whole."""
     return simhash_candidates(t_spread(spark, sf, "documents"))
 
 
 def simhash_candidates(docs) -> "F.DataFrame":
     """SimHash block-bucketed candidate pairs over any (doc_id, text)
-    DataFrame — the reusable core of d03, exposed for the recall gate."""
+    DataFrame — the reusable core of d03, exposed for the recall gate.
+    A joined row is kept only in the pair's owner block, the lowest
+    block on which sig_a ^ sig_b is 0 (Manku et al.'s "one table owns
+    each match"); the row's own block agrees, so each pair keeps one."""
+
+    def blocks(c):
+        return F.array(*[F.shiftrightunsigned(c, 16 * r).bitwiseAND(0xFFFF) for r in range(4)])
+
     d = _with_udf_parallelism(docs).select(
         "doc_id", simhash_udf("text").alias("sig")
     )
-    b = d.select(
-        "doc_id",
-        "sig",
-        F.posexplode(
-            F.array(*[
-                F.shiftrightunsigned("sig", 16 * r).bitwiseAND(F.lit(0xFFFF))
-                for r in range(4)
-            ])
-        ).alias("block", "prefix"),
-    )
+    b = d.select("doc_id", "sig", F.posexplode(blocks("sig")).alias("block", "prefix"))
     a1 = b.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"), "block", "prefix")
     a2 = b.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"), "block", "prefix")
+    x = F.col("sig_a").bitwiseXOR(F.col("sig_b"))
+    owner = F.array_position(blocks(x), 0) - 1
     return (
         a1.join(a2, ["block", "prefix"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.col("sig_a").bitwiseXOR(F.col("sig_b")).alias("x"))
-        .distinct()
-        .select("doc_a", "doc_b", F.bit_count("x").alias("hamming"))
+        .filter((F.col("doc_a") < F.col("doc_b")) & (F.col("block") == owner))
+        .select("doc_a", "doc_b", F.bit_count(x).alias("hamming"))
         .filter(F.col("hamming") <= 8)
     )
 
@@ -1238,23 +1239,22 @@ def d14(spark, sf):
     query plus a corpus-mean row (q_id = -1) per op. At 100 TB an
     unmeasured ANN is an unknown — this IS the measurement, runnable at
     any sf."""
-    exact3 = _exact_top3(spark, sf)
-    n_true = exact3.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_true"))
-
-    def recall_of(approx, op: str):
-        hits = exact3.join(approx.select("q_id", "vec_id"), ["q_id", "vec_id"], "left_semi")
-        return (
-            n_true.join(hits.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_hit")), "q_id", "left")
-            .select(
-                F.lit(op).alias("op"),
-                "q_id",
-                F.round(
-                    F.coalesce(F.col("n_hit"), F.lit(0)).cast("double") / F.col("n_true"), 4
-                ).alias("recall_at_3"),
-            )
-        )
-
-    per_q = recall_of(d06(spark, sf), "lsh").unionByName(recall_of(d15(spark, sf), "ivf"))
+    # the exact twin is evaluated once for both ops; an op's rows are
+    # distinct before they mark hits, so a repeated row counts once
+    exact = _exact_top3(spark, sf).select(
+        F.explode(F.array(F.lit("lsh"), F.lit("ivf"))).alias("op"), "q_id", "vec_id"
+    )
+    approx = (
+        d06(spark, sf).select(F.lit("lsh").alias("op"), "q_id", "vec_id")
+        .unionByName(d15(spark, sf).select(F.lit("ivf").alias("op"), "q_id", "vec_id"))
+        .distinct()
+        .withColumn("hit", F.lit(1))
+    )
+    per_q = (
+        exact.join(approx, ["op", "q_id", "vec_id"], "left")
+        .groupBy("op", "q_id")
+        .agg(F.round(F.count("hit") / F.count(F.lit(1)), 4).alias("recall_at_3"))
+    )
     # ONE rollup over both ops' per-query rows yields the per-query rows
     # (avg of one value is that value) and each op's mean row, so each
     # ANN path is evaluated once; grouping_id 3 is the grand total
@@ -1564,14 +1564,11 @@ def d13(spark, sf):
     return minhash_verified_pairs(t_spread(spark, sf, "documents"))
 
 
-def minhash_verified_pairs(docs):
-    """d13's reusable core over any (doc_id, text) DataFrame: MinHash+
-    LSH candidates (d02, skew-capped) → exact JVM word-set Jaccard →
-    keep pairs whose ROUNDED (6 dp) Jaccard >= 0.5 (rounding before the
-    threshold so Spark and the DuckDB oracle cut identically). d36 runs
-    this exact code over the planted substitution-group corpus where
-    candidate recall at the threshold is 1.0 by construction, licensing
-    a brute-force value oracle."""
+def minhash_jaccard(docs):
+    """The one MinHash verify over any (doc_id, text) DataFrame: MinHash+
+    LSH candidates (d02, skew-capped) → word sets joined onto both pair
+    ends → (doc_a, doc_b, jaccard), the raw JVM word-set Jaccard. The
+    callers cut it: minhash_verified_pairs and corpus_dedup_pipeline."""
     pairs = minhash_candidates(docs)
     d = docs.select(
         "doc_id", F.array_distinct(F.split("text", " ")).alias("words")
@@ -1581,10 +1578,19 @@ def minhash_verified_pairs(docs):
     j = pairs.join(a, "doc_a").join(b, "doc_b")
     inter = F.size(F.array_intersect("wa", "wb"))
     union = F.size("wa") + F.size("wb") - inter
-    jac = F.round(inter.cast("double") / union, 6)
-    return j.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= 0.5
-    )
+    return j.select("doc_a", "doc_b", (inter.cast("double") / union).alias("jaccard"))
+
+
+def minhash_verified_pairs(docs):
+    """d13's reusable core over any (doc_id, text) DataFrame:
+    minhash_jaccard → keep pairs whose ROUNDED (6 dp) Jaccard >= 0.5
+    (rounding before the threshold so Spark and the DuckDB oracle cut
+    identically). d36 runs this exact code over the planted
+    substitution-group corpus where candidate recall at the threshold
+    is 1.0 by construction, licensing a brute-force value oracle."""
+    return minhash_jaccard(docs).select(
+        "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
+    ).filter(F.col("jaccard") >= 0.5)
 
 
 # PII scrubbing (d16): conservative lookaround-free patterns that parse
@@ -1902,21 +1908,12 @@ def d20(spark, sf):
 
 
 def corpus_dedup_pipeline(docs):
-    """d20's reusable core over any (doc_id, text) DataFrame: MinHash+
-    LSH candidates → exact word-Jaccard verify >= 0.5 → components →
-    keep. d30 runs this exact code over the planted near-dup corpus
-    where the candidate recall at the verify threshold is 1.0 by
-    construction, licensing a brute-force DuckDB value oracle."""
-    pairs = minhash_candidates(docs)
-    d = docs.select(
-        "doc_id", F.array_distinct(F.split("text", " ")).alias("words")
-    )
-    a = d.select(F.col("doc_id").alias("doc_a"), F.col("words").alias("wa"))
-    b = d.select(F.col("doc_id").alias("doc_b"), F.col("words").alias("wb"))
-    j = pairs.join(a, "doc_a").join(b, "doc_b")
-    inter = F.size(F.array_intersect("wa", "wb"))
-    union = F.size("wa") + F.size("wb") - inter
-    verified = j.filter(inter.cast("double") / union >= 0.5).select(
+    """d20's reusable core over any (doc_id, text) DataFrame:
+    minhash_jaccard cut UNROUNDED at >= 0.5 → components → keep. d30
+    runs this exact code over the planted near-dup corpus where the
+    candidate recall at the verify threshold is 1.0 by construction,
+    licensing a brute-force DuckDB value oracle."""
+    verified = minhash_jaccard(docs).filter(F.col("jaccard") >= 0.5).select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
     cc = _connected_components(verified)
@@ -2937,9 +2934,9 @@ def d33(spark, sf):
     """d03's SimHash bucketing under a FULL value oracle on its
     provable-recall slice: the exact simhash_candidates code (UDF
     signatures recomputed from text, 4-block pigeonhole buckets,
-    per-block equi joins, distinct, bit_count) filtered to Hamming <= 3,
-    where pigeonhole GUARANTEES the candidate set equals brute force.
-    sf_dir is ignored (own fixture)."""
+    per-block equi joins, lowest-agreeing-block owner rule, bit_count)
+    filtered to Hamming <= 3, where pigeonhole GUARANTEES the candidate
+    set equals brute force. sf_dir is ignored (own fixture)."""
     import os
 
     docs = spark.read.parquet(
