@@ -475,6 +475,53 @@ def test_connected_components_raises_on_exhaustion(spark):
         dataops._connected_components(e, max_iter=1)
 
 
+def test_connected_components_star_forest_input_runs_no_round(spark):
+    """An input that already is a downward star forest is its own
+    answer: the stop rule accepts it before the first round."""
+    e = spark.createDataFrame([(1, 0), (2, 0), (4, 3)], "a: long, b: long")
+    got = {r.id: r.component for r in dataops._connected_components(e).collect()}
+    assert dataops._cc_last_rounds == 0
+    assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3}
+
+
+def test_connected_components_stop_rule_rejects_near_stars(spark):
+    """The stop rule's soundness: the star test rejects each near-star
+    (two parents, an upward edge, a root that is also a leaf) and
+    accepts an empty frame and an oriented star; on every one of these
+    inputs the components equal a union-find oracle."""
+    cases = {
+        "two parents": ([(3, 1), (3, 2)], False),
+        "upward edge": ([(0, 1)], False),
+        "root is a leaf": ([(2, 1), (1, 0)], False),
+        "empty": ([], True),
+        "oriented star": ([(1, 0), (2, 0), (3, 0)], True),
+    }
+    for name, (edges, is_star) in cases.items():
+        e = spark.createDataFrame(edges, "a: long, b: long")
+        assert dataops._is_star_forest(e) is is_star, name
+
+        n = 1 + max((v for ab in edges for v in ab), default=0)
+        parent = list(range(n))
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        verts = sorted({v for ab in edges for v in ab})
+        members: dict[int, list[int]] = {}
+        for v in verts:
+            members.setdefault(find(v), []).append(v)
+        want = {v: min(members[find(v)]) for v in verts}
+        got = {r.id: r.component for r in dataops._connected_components(e).collect()}
+        assert got == want, name
+
+
 def _neardup_fixture(spark):
     """Controlled near-dup fixture for the candidate-recall gates: 60
     base docs (80 words over an 800-word vocab) + 5 mutated twins each
@@ -920,8 +967,8 @@ def test_word_ngrams_short_docs_empty_not_descending(spark):
 
 def test_connected_components_round_count_is_logarithmic(spark):
     """Quantified diameter-independence: a 10× longer chain must cost
-    only ~log more contraction rounds (measured: diameter 200 → 9
-    rounds, diameter 2000 → 12; plain propagation would need 200 and
+    only ~log more contraction rounds (measured: diameter 200 → 8
+    rounds, diameter 2000 → 11; plain propagation would need 200 and
     2000). Pins the O(log² n) claim, not just correctness."""
     e = spark.createDataFrame([(i, i + 1) for i in range(200)], "a: long, b: long")
     dataops._connected_components(e).collect()

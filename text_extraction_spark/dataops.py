@@ -1779,60 +1779,62 @@ def _ckpt(df):
     return df.checkpoint() if sc.getCheckpointDir() else df.localCheckpoint()
 
 
+def _is_star_forest(e) -> bool:
+    """True when every edge points down (b < a), each `a` has exactly
+    one edge and no `b` is also an `a`. One aggregation job over both
+    edge ends, where only an `a` end carries `down`."""
+    ends = e.select(F.col("a").alias("v"), (F.col("b") < F.col("a")).alias("down")).unionByName(
+        e.select(F.col("b").alias("v"), F.lit(None).cast("boolean").alias("down"))
+    )
+    bad = (F.count("down") > 0) & ((F.count(F.lit(1)) > 1) | ~F.bool_and("down"))
+    return ends.groupBy("v").agg(bad.alias("bad")).filter("bad").isEmpty()
+
+
 def _connected_components(edges, max_iter: int = 25):
     """Distributed connected components over an (a, b) edge DataFrame →
     (id, component) with component = min doc id reachable.
 
-    Large-star/small-star alternation (Kiveris et al. 2014): repeat
-    both rounds until the edge set is a stable star forest — provably
-    centered at each component's minimum node — in O(log² n) rounds
-    independent of graph DIAMETER. Round-2 used plain min-label
-    propagation (O(diameter) rounds) and could exhaust max_iter on a
-    long dup-chain and silently return partially-propagated labels
-    (VERDICT r2 'what's wrong' #1); now max_iter=25 covers any corpus
-    below ~2^25 vertices per component and exhaustion RAISES instead of
-    returning wrong components. _ckpt() per round truncates the lineage
-    so planning time stays flat (reliable checkpoint when a dir is
-    configured). The input is evaluated ONCE: its distinct edges are
-    checkpointed, and the clean edge set and the vertex set (which keeps
-    vertices seen only on self-loops) both read that checkpoint.
+    Large-star/small-star alternation (Kiveris et al. 2014): O(log² n)
+    rounds, independent of graph DIAMETER. max_iter=25 covers any corpus
+    below ~2^25 vertices per component; exhaustion RAISES rather than
+    return partially-propagated components.
 
-    The rounds run when this function is CALLED (each one checkpoints
-    and counts): building the caller's frame already pays for all of
-    them, and the returned frame is only the final vertex × star-label
-    join."""
+    Stop rule: one star test (_is_star_forest) before each round; the
+    loop ends at the first downward star forest, so such an input runs 0
+    rounds. Sound because both rounds keep each component's vertex set,
+    so the stars are the components; each root is smaller than its
+    leaves, so it is the minimum; and the forest is a fixed point of both
+    rounds. A round is its checkpoint plus one star test.
+
+    _ckpt() per round keeps planning time flat (reliable checkpoint when
+    a dir is configured). The input is evaluated ONCE: its distinct edges
+    are checkpointed, and the edge set and the vertex set (which keeps
+    vertices seen only on self-loops) both read that checkpoint. The
+    rounds run when this function is CALLED: building the caller's frame
+    pays for all of them, and the returned frame is only the final
+    vertex × star-label join."""
     dist = _ckpt(edges.distinct())
-    clean = dist.filter(F.col("a") != F.col("b"))
     verts = (
         dist.select(F.col("a").alias("id"))
         .unionByName(dist.select(F.col("b").alias("id")))
         .distinct()
     )
-    e, n_e = clean, clean.count()
-    converged = n_e == 0
+    e = dist.filter(F.col("a") != F.col("b"))
     rounds = 0
-    for _ in range(max_iter):
-        if converged:
-            break
+    while not _is_star_forest(e):
+        if rounds == max_iter:
+            raise RuntimeError(
+                f"_connected_components: star-contraction did not converge in "
+                f"{max_iter} rounds ({e.count()} edges are still not a star "
+                "forest); refusing to return partially-propagated components"
+            )
         rounds += 1
-        new_e = _ckpt(_small_star(_large_star(e)))
-        n_new = new_e.count()
-        # Both sides are distinct sets, so equality ⟺ same size and
-        # new ⊆ old (one anti-join count, no full symmetric difference).
-        if n_new == n_e and new_e.join(e, ["a", "b"], "left_anti").count() == 0:
-            converged = True
-        e, n_e = new_e, n_new
-    if not converged:
-        raise RuntimeError(
-            f"_connected_components: star-contraction did not converge in "
-            f"{max_iter} rounds ({n_e} edges remain unstable); refusing to "
-            "return partially-propagated components"
-        )
+        e = _ckpt(_small_star(_large_star(e)))
     # Observability: round count of the last call (tests pin the
     # diameter-independence claim against it; a log line at 100 TB).
     global _cc_last_rounds
     _cc_last_rounds = rounds
-    # Stable star forest: every non-center points at its component min.
+    # Star forest: every leaf points at its component min.
     star = e.select(F.col("a").alias("id"), F.col("b").alias("component"))
     return verts.join(star, "id", "left").select(
         "id", F.coalesce("component", "id").alias("component")
@@ -1873,9 +1875,10 @@ def d19(spark, sf):
     pairs alone can't dedup transitive chains a~b~c). Edges here are a
     deterministic SQL-expressible candidate set (adjacent same-lang docs
     with word-Jaccard ≥ 0.4, chains up to length 5 in the testdata) so
-    DuckDB's recursive CTE can verify the DISTRIBUTED iterative
-    min-label propagation end-to-end — in production the same
-    _connected_components runs on d02/d13's LSH candidate pairs."""
+    DuckDB's recursive CTE can verify the DISTRIBUTED large-star/
+    small-star contraction (O(log² n) rounds) end-to-end — in production
+    the same _connected_components runs on d02/d13's LSH candidate
+    pairs."""
     d = t(spark, sf, "documents").select(
         "doc_id", "lang", F.array_distinct(F.split("text", " ")).alias("words")
     )
@@ -1899,11 +1902,11 @@ def d20(spark, sf):
     """The COMPLETE corpus-dedup pipeline as one call — what a user runs
     to dedup a 100 TB corpus: MinHash+LSH candidates (d02, skew-capped)
     → exact JVM word-Jaccard verification ≥ 0.5 (d13's verify stage) →
-    connected components (d19's iterative min-label propagation) →
-    per-component keep decision. Returns (doc_id, component, keep):
-    keep = the component's min doc_id survives, the rest are the dedup
-    DROP list. Every stage is bucketed/linear; the only iteration is
-    the O(diameter) component loop."""
+    connected components (d19's star contraction) → per-component keep
+    decision. Returns (doc_id, component, keep): keep = the component's
+    min doc_id survives, the rest are the dedup DROP list. Every stage
+    is bucketed/linear; the only iteration is the component loop's
+    O(log² n) star rounds."""
     return corpus_dedup_pipeline(t_spread(spark, sf, "documents"))
 
 
@@ -5658,7 +5661,7 @@ def _frozen_z(d):
 
 @q("d68_cluster_representative", _D68_SQL)
 def d68(spark, sf):
-    """Best-member keep decision: d19's distributed min-label
+    """Best-member keep decision: d19's distributed star-contraction
     components, then ONE extra shuffle — a window rank per component on
     the frozen-quality logit (z, not sigmoid(z): monotone, so the sort
     key needs no exp) with doc_id as the deterministic tiebreak. At

@@ -14,6 +14,9 @@ same JSON lines):
   d26          d26 (embedding dedup) at sf1 + sf10, verified inside the
                LSH bucket grid — target <= ~1.2x linear at the second
                decade. One warm-up run at sf0.1 precedes both decades.
+               Each decade also reports its connected-components rounds
+               (_cc_last_rounds) and its Spark job count (one job group
+               per decade).
                (was: scale_run_r6.py d26)
   d16          d16 (PII scrub) at sf10 with the candidate prefilter —
                target meaningfully below the 54.1 s round-5 record.
@@ -176,20 +179,26 @@ def run_d26() -> None:
     from text_extraction_spark.scaledata import sf1_dir
 
     spark = _spark()
+    sc = spark.sparkContext
     fn = D.QUERIES["d26_embedding_dedup_pipeline"]
     # one warm-up at sf0.1: d26's connected-components rounds run when the
     # frame is built, so a per-decade warm-up would be a full hidden run
     fn(spark, SF01).write.format("noop").mode("overwrite").save()
-    out = {}
+    out, layer = {}, {}
     for tag, sf_dir in (("sf1", sf1_dir()), ("sf10", sf1_dir(copies=100))):
+        group = f"scale-run-d26-{tag}"
+        sc.setJobGroup(group, group)
         t0 = time.monotonic()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         out[tag] = round(time.monotonic() - t0, 1)
+        layer[f"{tag}_cc_rounds"] = D._cc_last_rounds
+        layer[f"{tag}_jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
     print(json.dumps({
         "op": "d26 embedding dedup (bucket-grid verify)",
         "sf1_wall_s": out["sf1"],
         "sf10_wall_s": out["sf10"],
         "decade_linearity": round(out["sf10"] / (10 * out["sf1"]), 2),
+        **layer,
     }))
 
 
