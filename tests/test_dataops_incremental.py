@@ -139,8 +139,6 @@ def test_d58_snapshot_diff_statuses(spark):
 
 
 def test_d59_streaming_set_equals_batch_and_is_incremental(spark):
-    import tempfile
-
     from text_extraction_spark import streaming
 
     got = {r["text_hash"] for r in dataops.QUERIES["d59_stream_ingest_dedup"](spark, SF).collect()}
@@ -154,9 +152,9 @@ def test_d59_streaming_set_equals_batch_and_is_incremental(spark):
     assert got == want
     # the replay genuinely arrives as multiple micro-batches (state
     # carries across them), not one big batch
-    replay = streaming.make_docs_replay_dir(SF, tempfile.mkdtemp(prefix="docs_mb_"))
+    replay = streaming.replay_dir(f"{SF}/documents.parquet", "doc_id", 8)
     _, stats = streaming.run_available_now(
-        streaming.streaming_ingest_dedup(streaming.read_docs_stream(spark, replay)),
+        streaming.streaming_ingest_dedup(streaming.stream_source(spark, path=replay)),
         spark,
         with_stats=True,
     )

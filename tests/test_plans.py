@@ -428,17 +428,23 @@ def test_each_python_stage_runs_once(spark, query):
     assert stages and set(stages.values()) == {1}, stages
 
 
-def test_simhash_runs_once_per_join_side(spark):
+def test_simhash_runs_once(spark):
     """simhash_udf is marked nondeterministic so Catalyst cannot copy it
-    below the UDF-parallelism repartition with a pushed isnotnull(sig):
-    d03's plan evaluates it twice, once for each side of the block
-    self-join (4 times without the marking). A pair's lowest agreeing
-    block owns it, so no aggregate dedups the block hits."""
+    below the UDF-parallelism repartition with a pushed isnotnull(sig),
+    and the block rows are hash-partitioned on the join key before the
+    self-join: AQE's final plan evaluates the UDF once, both join sides
+    reading one exchange. A pair's lowest agreeing block owns it, so no
+    aggregate dedups the block hits."""
     from text_extraction_spark import dataops
 
-    plan = _plan(dataops.QUERIES["d03_dedup_simhash"](spark, SF))
-    assert _python_stages(plan) == {("ArrowEvalPython", "simhash_udf"): 2}, plan
-    assert "HashAggregate" not in plan, plan
+    df = dataops.QUERIES["d03_dedup_simhash"](spark, SF)
+    df.collect()
+    plan = _plan(df)
+    assert "isFinalPlan=true" in plan
+    final = plan.split("Initial Plan")[0]
+    assert _python_stages(final) == {("ArrowEvalPython", "simhash_udf"): 1}, final
+    assert "ReusedExchange" in final, final
+    assert "HashAggregate" not in final, final
 
 
 def test_ann_recall_evaluates_its_exact_twin_once(spark):

@@ -9,22 +9,21 @@ from pyspark.sql import functions as F
 from text_extraction_spark import streaming
 
 SF = "/root/testdata/sf0.001"
+EVENTS = os.path.join(SF, "events.parquet")
 
 
 @pytest.fixture(scope="module")
-def replay(tmp_path_factory):
-    return streaming.make_replay_dir(SF, str(tmp_path_factory.mktemp("replay")))
+def replay():
+    return streaming.replay_dir(EVENTS, "ts", 10)
 
 
 @pytest.fixture(scope="module")
-def replay_late(tmp_path_factory):
-    return streaming.make_replay_dir(
-        SF, str(tmp_path_factory.mktemp("replay_late")), late_chunk=True
-    )
+def replay_late():
+    return streaming.replay_dir(EVENTS, "ts", 10, late_chunk=True)
 
 
 def test_replay_preserves_all_events(spark, replay):
-    n_src = spark.read.parquet(os.path.join(SF, "events.parquet")).count()
+    n_src = spark.read.parquet(EVENTS).count()
     assert spark.read.parquet(replay).count() == n_src
 
 
@@ -33,7 +32,7 @@ def test_streaming_tumbling_counts_match_batch(spark, replay):
     window the watermark finalized (append mode emits only closed
     windows; the tail windows near max(ts) may be withheld)."""
     result = streaming.run_available_now(
-        streaming.windowed_counts(streaming.read_events_stream(spark, replay)), spark
+        streaming.windowed_counts(streaming.stream_source(spark, path=replay)), spark
     )
     batch = (
         spark.read.parquet(replay)
@@ -63,11 +62,11 @@ def test_watermark_drops_late_rows(spark, replay, replay_late):
     last_err = None
     for _attempt in range(2):
         in_order = streaming.run_available_now(
-            streaming.windowed_counts(streaming.read_events_stream(spark, replay)),
+            streaming.windowed_counts(streaming.stream_source(spark, path=replay)),
             spark,
         ).collect()
         late, stats = streaming.run_available_now(
-            streaming.windowed_counts(streaming.read_events_stream(spark, replay_late)),
+            streaming.windowed_counts(streaming.stream_source(spark, path=replay_late)),
             spark,
             with_stats=True,
         )
@@ -92,7 +91,7 @@ def test_streaming_dedup_within_watermark(spark, tmp_path_factory, replay):
     import pyarrow.parquet as pq
 
     dup_dir = str(tmp_path_factory.mktemp("dup"))
-    files = sorted(os.listdir(replay))[:4]
+    files = sorted(f for f in os.listdir(replay) if f.startswith("chunk-"))[:4]
     for i, f in enumerate(files):
         t = pq.read_table(os.path.join(replay, f))
         pq.write_table(t, os.path.join(dup_dir, f"chunk-{i:03d}.parquet"))
@@ -101,7 +100,7 @@ def test_streaming_dedup_within_watermark(spark, tmp_path_factory, replay):
         t = pq.read_table(os.path.join(replay, f))
         pq.write_table(t, os.path.join(dup_dir, f"chunk-{i + 4:03d}.parquet"))
     result = streaming.run_available_now(
-        streaming.streaming_dedup(streaming.read_events_stream(spark, dup_dir)), spark
+        streaming.streaming_dedup(streaming.stream_source(spark, path=dup_dir)), spark
     )
     n_unique = (
         spark.read.parquet(dup_dir).select("event_id").distinct().count()
@@ -115,7 +114,7 @@ def test_stateful_running_totals_match_batch(spark, replay):
     user equals the batch groupBy total."""
     import uuid
 
-    stream = streaming.read_events_stream(spark, replay)
+    stream = streaming.stream_source(spark, path=replay)
     name = "s" + uuid.uuid4().hex[:12]
     q = (
         streaming.running_user_totals(stream)
@@ -156,21 +155,14 @@ def test_streaming_extraction_matches_golden(spark, tiny_corpus, tmp_path_factor
     """Documents replayed as a stream, extracted incrementally via
     foreachBatch → the union of batch outputs equals the golden oracle
     exactly (the batch pipeline's equality gate, streaming edition)."""
-    import pyarrow.parquet as pq
-
     from text_extraction_spark import pipeline
 
-    stream_dir = str(tmp_path_factory.mktemp("docstream"))
-    t = pq.read_table(os.path.join(tiny_corpus, "documents.parquet"))
-    step = max(1, t.num_rows // 5)
-    for i in range(5):
-        chunk = t.slice(i * step, step if i < 4 else t.num_rows - 4 * step)
-        if chunk.num_rows:
-            pq.write_table(chunk, os.path.join(stream_dir, f"chunk-{i:02d}.parquet"))
-
+    stream_dir = streaming.replay_dir(
+        os.path.join(tiny_corpus, "documents.parquet"), "doc_id", 3
+    )
     out = str(tmp_path_factory.mktemp("streamout"))
     res = streaming.extract_corpus_streaming(spark, stream_dir, tiny_corpus, out)
-    assert res["batches"] >= 2  # genuinely incremental
+    assert res["batches"] == 3  # one micro-batch per chunk: genuinely incremental
 
     e = spark.read.option("basePath", res["out_table"]).parquet(res["out_table"])
     g = spark.read.parquet(os.path.join(tiny_corpus, "golden.parquet"))
@@ -207,21 +199,73 @@ def test_stream_stream_join_matches_batch(spark, replay):
 
 def test_stream_source_seam(spark, replay):
     """Round-3 seam (VERDICT r2 missing #4): stream_source is the one
-    place a source format binds. file-replay must behave exactly like
-    read_events_stream; the built-in rate source must construct a
-    streaming DataFrame with the documented schema; unknown formats
-    raise."""
+    place a source format binds. file-replay reads one chunk per
+    trigger (one micro-batch per chunk) and casts parquet's
+    TIMESTAMP_NTZ to TIMESTAMP so watermarks apply; the built-in rate
+    source must construct a streaming DataFrame with the documented
+    schema; unknown formats raise."""
     import pytest
 
     s = streaming.stream_source(spark, "file-replay", path=replay)
-    out = streaming.run_available_now(streaming.windowed_counts(s), spark)
-    ref = streaming.run_available_now(
-        streaming.windowed_counts(streaming.read_events_stream(spark, replay)), spark
+    assert s.isStreaming and dict(s.dtypes)["ts"] == "timestamp"
+    n_chunks = sum(f.startswith("chunk-") for f in os.listdir(replay))
+    _, stats = streaming.run_available_now(
+        s.select("event_id"), spark, with_stats=True
     )
-    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, ref.collect()))
+    assert n_chunks == 10 and stats["batches"] == n_chunks
     rate = streaming.stream_source(spark, "rate", rowsPerSecond="5")
     assert rate.isStreaming and set(rate.columns) == {"timestamp", "value"}
     with pytest.raises(ValueError, match="unknown stream source"):
         streaming.stream_source(spark, "socket-banana")
     with pytest.raises(ValueError, match="requires path"):
         streaming.stream_source(spark, "file-replay")
+
+
+def test_stream_is_cut_and_read_in_one_function():
+    """One replay writer and one stream source: `os.utime` (the chunk
+    mtimes that fix replay order) and `readStream` each appear in one
+    top-level function of the package."""
+    import ast
+    import pathlib
+
+    owners = {"utime": set(), "readStream": set()}
+    for path in sorted(pathlib.Path(streaming.__file__).parent.rglob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            for node in ast.walk(top):
+                if isinstance(node, ast.Attribute) and node.attr in owners:
+                    owners[node.attr].add((path.name, getattr(top, "name", top.lineno)))
+    assert owners == {
+        "utime": {("streaming.py", "replay_dir")},
+        "readStream": {("streaming.py", "stream_source")},
+    }
+
+
+@pytest.mark.parametrize(
+    "name, n_mkdtemp",
+    [
+        ("q31_watermark_late_data", 0),
+        ("q33_stateful_running_totals", 0),
+        ("q39_stream_stream_join", 0),
+        ("d59_stream_ingest_dedup", 0),
+        ("x07_streaming_extraction", 1),  # its output dir
+    ],
+)
+def test_rebuild_writes_no_replay_copy(spark, monkeypatch, name, n_mkdtemp):
+    """A streaming entry reads its replay from the cache: after one warm
+    build, a rebuild makes no temp copy of its input."""
+    import tempfile
+
+    from text_extraction_spark import dataops, extraction_queries, relational
+
+    qs = {**relational.QUERIES, **dataops.QUERIES, **extraction_queries.QUERIES}
+    qs[name](spark, SF)
+    calls = []
+    mkdtemp = tempfile.mkdtemp
+
+    def counted(*args, **kwargs):
+        calls.append(kwargs.get("prefix"))
+        return mkdtemp(*args, **kwargs)
+
+    monkeypatch.setattr(tempfile, "mkdtemp", counted)
+    qs[name](spark, SF)
+    assert len(calls) == n_mkdtemp, calls

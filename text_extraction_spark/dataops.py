@@ -178,7 +178,14 @@ def _with_udf_parallelism(df):
     carries >= defaultParallelism splits and this is a structural
     no-op (no Exchange added). Per-doc UDF outputs are deterministic
     regardless of batch composition (reference-twin pinned), so the
-    round-robin shuffle cannot change any result."""
+    round-robin shuffle cannot change any result.
+
+    Not the same rule as relational.t_spread: at sf0.1 `documents` is
+    1 row group of 1.58 MB, under _SPREAD_MIN_BYTES, so t_spread
+    returns the bare scan and only this guard spreads the UDF. Measured
+    on a 4-core Xeon, local[4], 5 interleaved warm runs to the noop
+    sink, medians with this guard → without: d02 0.89 → 1.03 s, d09
+    0.58 → 1.08 s, d03 0.64 → 0.61 s (flat)."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:
@@ -257,9 +264,10 @@ def simhash_udf(texts: pd.Series) -> pd.Series:
 # simhash_udf IS deterministic (pinned by its reference twin), but it is
 # marked nondeterministic on purpose, as pipeline.py marks its UDFs:
 # otherwise Catalyst pushes the self-join's inferred isnotnull(sig) below
-# _with_udf_parallelism's repartition and copies the UDF (4 evaluations
-# in d03's plan). The two evaluations left are the two sides of the
-# self-join in simhash_candidates.
+# _with_udf_parallelism's repartition and copies the UDF. The block rows
+# in simhash_candidates are hash-partitioned once on the join key, so
+# both sides of the self-join read one exchange and AQE evaluates the
+# UDF once.
 simhash_udf = simhash_udf.asNondeterministic()
 
 
@@ -291,7 +299,9 @@ def simhash_candidates(docs) -> "F.DataFrame":
     d = _with_udf_parallelism(docs).select(
         "doc_id", simhash_udf("text").alias("sig")
     )
-    b = d.select("doc_id", "sig", F.posexplode(blocks("sig")).alias("block", "prefix"))
+    b = d.select(
+        "doc_id", "sig", F.posexplode(blocks("sig")).alias("block", "prefix")
+    ).repartition("block", "prefix")
     a1 = b.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"), "block", "prefix")
     a2 = b.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"), "block", "prefix")
     x = F.col("sig_a").bitwiseXOR(F.col("sig_b"))
@@ -1844,7 +1854,9 @@ def _connected_components(edges, max_iter: int = 25):
 _cc_last_rounds = 0
 
 
-_CC_SQL = """
+# d19's edges and components as DuckDB CTEs (edges, verts, bidir, cc),
+# shared by the d19 and d68 oracles.
+_CC_CTES = """
 WITH edges AS (
   SELECT d1.doc_id AS a, d2.doc_id AS b
   FROM documents d1 JOIN documents d2
@@ -1862,10 +1874,30 @@ cc AS (
     SELECT e.a, r.label FROM r JOIN bidir e ON e.b = r.id WHERE r.label < e.a
   )
   SELECT id, min(label) AS component FROM r GROUP BY id
-)
+)"""
+
+_CC_SQL = f"""{_CC_CTES}
 SELECT component, count(*) AS n_docs, min(id) AS min_doc
 FROM cc GROUP BY component
 """
+
+
+def _adjacent_edges(docs):
+    """d19's deterministic candidate edges: adjacent same-lang docs with
+    word-Jaccard >= 0.4, as (a, b) rows over a (doc_id, lang, text)
+    frame."""
+    d = docs.select(
+        "doc_id", "lang", F.array_distinct(F.split("text", " ")).alias("words")
+    )
+    d1 = d.select(F.col("doc_id").alias("a"), F.col("lang").alias("l1"), F.col("words").alias("wa"))
+    d2 = d.select(F.col("doc_id").alias("b"), F.col("lang").alias("l2"), F.col("words").alias("wb"))
+    inter = F.size(F.array_intersect("wa", "wb"))
+    union = F.size(F.array_distinct(F.concat("wa", "wb")))
+    return (
+        d1.join(d2, (F.col("b") == F.col("a") + 1) & (F.col("l1") == F.col("l2")))
+        .filter(inter.cast("double") / union >= 0.4)
+        .select("a", "b")
+    )
 
 
 @q("d19_dedup_components", _CC_SQL)
@@ -1879,19 +1911,7 @@ def d19(spark, sf):
     small-star contraction (O(log² n) rounds) end-to-end — in production
     the same _connected_components runs on d02/d13's LSH candidate
     pairs."""
-    d = t(spark, sf, "documents").select(
-        "doc_id", "lang", F.array_distinct(F.split("text", " ")).alias("words")
-    )
-    d1 = d.select(F.col("doc_id").alias("a"), F.col("lang").alias("l1"), F.col("words").alias("wa"))
-    d2 = d.select(F.col("doc_id").alias("b"), F.col("lang").alias("l2"), F.col("words").alias("wb"))
-    inter = F.size(F.array_intersect("wa", "wb"))
-    union = F.size(F.array_distinct(F.concat("wa", "wb")))
-    edges = (
-        d1.join(d2, (F.col("b") == F.col("a") + 1) & (F.col("l1") == F.col("l2")))
-        .filter(inter.cast("double") / union >= 0.4)
-        .select("a", "b")
-    )
-    cc = _connected_components(edges)
+    cc = _connected_components(_adjacent_edges(t(spark, sf, "documents")))
     return cc.groupBy("component").agg(
         F.count(F.lit(1)).alias("n_docs"), F.min("id").alias("min_doc")
     )
@@ -4675,6 +4695,37 @@ FROM z
 """
 
 
+def _frozen_z(d):
+    """d55's frozen-classifier logit as a JVM Column over `text`."""
+    words = F.split("text", " ")
+    nw = F.size(words)
+    x1 = F.least(F.log(F.lit(1.0) + nw.cast("double")) / 8.0, F.lit(1.0))
+    x2 = F.length("text").cast("double") / nw / F.lit(12.0)
+    x3 = (
+        F.size(
+            F.filter(words, lambda w: F.array_contains(F.split(F.lit(_STOPWORDS), " "), w))
+        ).cast("double")
+        / nw
+    )
+    return (
+        F.lit(_D55_W[0])
+        + F.lit(_D55_W[1]) * ((x1 - _D55_M[0]) / _D55_S[0])
+        + F.lit(_D55_W[2]) * ((x2 - _D55_M[1]) / _D55_S[1])
+        + F.lit(_D55_W[3]) * ((x3 - _D55_M[2]) / _D55_S[2])
+    )
+
+
+def _frozen_z_sql(text: str) -> str:
+    """d55's frozen-classifier logit as DuckDB SQL over the `text` column
+    expression (the oracle twin of _frozen_z)."""
+    return f"""{_D55_W[0]}
+         + {_D55_W[1]} * (((least(ln(1 + len(string_split({text}, ' '))) / 8.0, 1.0)) - {_D55_M[0]}) / {_D55_S[0]})
+         + {_D55_W[2]} * (((CAST(length({text}) AS DOUBLE) / len(string_split({text}, ' ')) / 12.0) - {_D55_M[1]}) / {_D55_S[1]})
+         + {_D55_W[3]} * (((CAST(len(list_filter(string_split({text}, ' '),
+                  w -> list_contains(string_split('{_STOPWORDS}', ' '), w))) AS DOUBLE)
+             / len(string_split({text}, ' '))) - {_D55_M[2]}) / {_D55_S[2]})"""
+
+
 @q("d55_quality_classifier_apply", _D55_SQL)
 def d55(spark, sf):
     """Score every document with the frozen d52 logistic model and gate
@@ -4686,25 +4737,7 @@ def d55(spark, sf):
     keep rule thresholds the ROUNDED score so Spark and the oracle cut
     identically (the d36 round-then-threshold rule)."""
     d = t(spark, sf, "documents")
-    words = F.split("text", " ")
-    nw = F.size(words)
-    x1 = F.least(F.log(F.lit(1.0) + nw.cast("double")) / 8.0, F.lit(1.0))
-    x2 = F.length("text").cast("double") / nw / F.lit(12.0)
-    x3 = (
-        F.size(
-            F.filter(
-                words, lambda w: F.array_contains(F.split(F.lit(_STOPWORDS), " "), w)
-            )
-        ).cast("double")
-        / nw
-    )
-    z = (
-        F.lit(_D55_W[0])
-        + F.lit(_D55_W[1]) * ((x1 - _D55_M[0]) / _D55_S[0])
-        + F.lit(_D55_W[2]) * ((x2 - _D55_M[1]) / _D55_S[1])
-        + F.lit(_D55_W[3]) * ((x3 - _D55_M[2]) / _D55_S[2])
-    )
-    score = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
+    score = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-_frozen_z(d))), 6)
     return d.select(
         "doc_id",
         score.alias("score"),
@@ -4933,23 +4966,15 @@ def d59(spark, sf):
     oracle-checkable (the first streaming entry with a value oracle,
     not rows-only). At scale the state store is one hash per distinct
     doc per partition — the streaming twin of d54's persisted index.
-    The replay dir is CACHED per source table (size+mtime fingerprint,
-    the q34 freshness rule): repeated sweeps reuse it instead of
-    rewriting a corpus-sized /tmp copy on every call, so the timed op
-    is the streaming query, not driver-side pyarrow IO."""
+    The replay is streaming.replay_dir's cached cut, so the timed op is
+    the streaming query, not driver-side pyarrow IO."""
     import os
 
     from . import streaming
-    from .conf import cached_dir
 
-    st = os.stat(os.path.join(sf, "documents.parquet"))
-    tag = os.path.basename(sf.rstrip("/")).replace(".", "_")
-    replay = cached_dir(
-        f"docs_replay_{tag}_{st.st_size}_{st.st_mtime_ns}",
-        lambda tmp: streaming.make_docs_replay_dir(sf, tmp),
-    )
+    replay = streaming.replay_dir(os.path.join(sf, "documents.parquet"), "doc_id", 8)
     return streaming.run_available_now(
-        streaming.streaming_ingest_dedup(streaming.read_docs_stream(spark, replay)),
+        streaming.streaming_ingest_dedup(streaming.stream_source(spark, path=replay)),
         spark,
         output_mode="append",
     ).select("text_hash")
@@ -5348,12 +5373,7 @@ _D65_TAU = 0.8
 _D65_SQL = f"""
 WITH z AS (
   SELECT doc_id, source,
-         {_D55_W[0]}
-         + {_D55_W[1]} * (((least(ln(1 + len(string_split(text, ' '))) / 8.0, 1.0)) - {_D55_M[0]}) / {_D55_S[0]})
-         + {_D55_W[2]} * (((CAST(length(text) AS DOUBLE) / len(string_split(text, ' ')) / 12.0) - {_D55_M[1]}) / {_D55_S[1]})
-         + {_D55_W[3]} * (((CAST(len(list_filter(string_split(text, ' '),
-                  w -> list_contains(string_split('{_STOPWORDS}', ' '), w))) AS DOUBLE)
-             / len(string_split(text, ' '))) - {_D55_M[2]}) / {_D55_S[2]}) AS z
+         {_frozen_z_sql("text")} AS z
   FROM documents
 )
 SELECT source,
@@ -5374,25 +5394,7 @@ def d65(spark, sf):
     engines). At 100 TB the output is one row per source — the table a
     curation run reads FIRST to skip entire crawls."""
     d = t(spark, sf, "documents")
-    words = F.split("text", " ")
-    nw = F.size(words)
-    x1 = F.least(F.log(F.lit(1.0) + nw.cast("double")) / 8.0, F.lit(1.0))
-    x2 = F.length("text").cast("double") / nw / F.lit(12.0)
-    x3 = (
-        F.size(
-            F.filter(
-                words, lambda w: F.array_contains(F.split(F.lit(_STOPWORDS), " "), w)
-            )
-        ).cast("double")
-        / nw
-    )
-    z = (
-        F.lit(_D55_W[0])
-        + F.lit(_D55_W[1]) * ((x1 - _D55_M[0]) / _D55_S[0])
-        + F.lit(_D55_W[2]) * ((x2 - _D55_M[1]) / _D55_S[1])
-        + F.lit(_D55_W[3]) * ((x3 - _D55_M[2]) / _D55_S[2])
-    )
-    score = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
+    score = F.lit(1.0) / (F.lit(1.0) + F.exp(-_frozen_z(d)))
     avg4 = F.round(F.avg("score"), 4)
     return (
         d.select("source", score.alias("score"))
@@ -5595,33 +5597,10 @@ def d67(spark, sf):
 # uses z (sigmoid is monotone — no exp in the sort key); the reported
 # score rounds to 4 dp (the d36/d65 rule for cross-engine float sums).
 _D68_Z_SQL = f"""
-         {_D55_W[0]}
-         + {_D55_W[1]} * (((least(ln(1 + len(string_split(d.text, ' '))) / 8.0, 1.0)) - {_D55_M[0]}) / {_D55_S[0]})
-         + {_D55_W[2]} * (((CAST(length(d.text) AS DOUBLE) / len(string_split(d.text, ' ')) / 12.0) - {_D55_M[1]}) / {_D55_S[1]})
-         + {_D55_W[3]} * (((CAST(len(list_filter(string_split(d.text, ' '),
-                  w -> list_contains(string_split('{_STOPWORDS}', ' '), w))) AS DOUBLE)
-             / len(string_split(d.text, ' '))) - {_D55_M[2]}) / {_D55_S[2]})
+         {_frozen_z_sql("d.text")}
 """
 
-_D68_SQL = f"""
-WITH edges AS (
-  SELECT d1.doc_id AS a, d2.doc_id AS b
-  FROM documents d1 JOIN documents d2
-    ON d2.doc_id = d1.doc_id + 1 AND d2.lang = d1.lang
-  WHERE CAST(len(list_intersect(list_distinct(string_split(d1.text,' ')),
-                                list_distinct(string_split(d2.text,' ')))) AS DOUBLE)
-        / len(list_distinct(list_concat(string_split(d1.text,' '), string_split(d2.text,' ')))) >= 0.4
-),
-verts AS (SELECT a AS id FROM edges UNION SELECT b FROM edges),
-bidir AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges),
-cc AS (
-  WITH RECURSIVE r(id, label) AS (
-    SELECT id, id FROM verts
-    UNION
-    SELECT e.a, r.label FROM r JOIN bidir e ON e.b = r.id WHERE r.label < e.a
-  )
-  SELECT id, min(label) AS component FROM r GROUP BY id
-),
+_D68_SQL = f"""{_CC_CTES},
 z AS (
   SELECT d.doc_id, {_D68_Z_SQL} AS z
   FROM documents d JOIN cc ON cc.id = d.doc_id
@@ -5639,26 +5618,6 @@ FROM ranked WHERE rn = 1
 """
 
 
-def _frozen_z(d):
-    """d55's frozen-classifier logit as a JVM Column over `text`."""
-    words = F.split("text", " ")
-    nw = F.size(words)
-    x1 = F.least(F.log(F.lit(1.0) + nw.cast("double")) / 8.0, F.lit(1.0))
-    x2 = F.length("text").cast("double") / nw / F.lit(12.0)
-    x3 = (
-        F.size(
-            F.filter(words, lambda w: F.array_contains(F.split(F.lit(_STOPWORDS), " "), w))
-        ).cast("double")
-        / nw
-    )
-    return (
-        F.lit(_D55_W[0])
-        + F.lit(_D55_W[1]) * ((x1 - _D55_M[0]) / _D55_S[0])
-        + F.lit(_D55_W[2]) * ((x2 - _D55_M[1]) / _D55_S[1])
-        + F.lit(_D55_W[3]) * ((x3 - _D55_M[2]) / _D55_S[2])
-    )
-
-
 @q("d68_cluster_representative", _D68_SQL)
 def d68(spark, sf):
     """Best-member keep decision: d19's distributed star-contraction
@@ -5669,19 +5628,8 @@ def d68(spark, sf):
     and the score join is doc_id-co-partitioned with the component
     labels; per-component state is the O(cluster) member list, never
     O(cluster²) pairs."""
-    d = t(spark, sf, "documents").select(
-        "doc_id", "lang", "text", F.array_distinct(F.split("text", " ")).alias("words")
-    )
-    d1 = d.select(F.col("doc_id").alias("a"), F.col("lang").alias("l1"), F.col("words").alias("wa"))
-    d2 = d.select(F.col("doc_id").alias("b"), F.col("lang").alias("l2"), F.col("words").alias("wb"))
-    inter = F.size(F.array_intersect("wa", "wb"))
-    union = F.size(F.array_distinct(F.concat("wa", "wb")))
-    edges = (
-        d1.join(d2, (F.col("b") == F.col("a") + 1) & (F.col("l1") == F.col("l2")))
-        .filter(inter.cast("double") / union >= 0.4)
-        .select("a", "b")
-    )
-    cc = _connected_components(edges)
+    d = t(spark, sf, "documents")
+    cc = _connected_components(_adjacent_edges(d))
     scored = d.select("doc_id", _frozen_z(d).alias("z"))
     m = cc.join(scored, cc["id"] == scored["doc_id"]).select("component", "id", "z")
     w = Window.partitionBy("component").orderBy(F.col("z").desc(), F.col("id"))

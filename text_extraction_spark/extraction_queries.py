@@ -358,18 +358,10 @@ def x07(spark, sf):
     Golden equality asserted in tests/test_streaming.py."""
     import tempfile
 
-    import pyarrow.parquet as pq
-
-    from .streaming import extract_corpus_streaming
+    from .streaming import extract_corpus_streaming, replay_dir
 
     cdir = corpus_dir()
-    stream_dir = tempfile.mkdtemp(prefix="tes_docstream_")
-    t_ = pq.read_table(os.path.join(cdir, "documents.parquet"))
-    step = max(1, t_.num_rows // 4)
-    for i in range(4):
-        chunk = t_.slice(i * step, step if i < 3 else t_.num_rows - 3 * step)
-        if chunk.num_rows:
-            pq.write_table(chunk, os.path.join(stream_dir, f"chunk-{i:02d}.parquet"))
+    stream_dir = replay_dir(os.path.join(cdir, "documents.parquet"), "doc_id", 2)
     out = tempfile.mkdtemp(prefix="tes_streamout_")
     res = extract_corpus_streaming(spark, stream_dir, cdir, out)
     e = spark.read.option("basePath", res["out_table"]).parquet(res["out_table"])

@@ -731,9 +731,12 @@ def q31(spark, sf):
     window, Trigger.AvailableNow (SURVEY Q31). Late-drop assertions live
     in tests/test_streaming.py; here the batch result is returned for the
     rows-only check."""
-    from .streaming import windowed_counts_available_now
+    from . import streaming
 
-    return windowed_counts_available_now(spark, sf)
+    replay = streaming.replay_dir(os.path.join(sf, "events.parquet"), "ts", 10)
+    return streaming.run_available_now(
+        streaming.windowed_counts(streaming.stream_source(spark, path=replay)), spark
+    )
 
 
 @q(
@@ -755,13 +758,11 @@ def q33(spark, sf):
     """applyInPandasWithState custom stateful operator (running per-user
     totals across micro-batches); semantics asserted against the batch
     twin in tests/test_streaming.py."""
-    import tempfile
-
     from . import streaming
 
-    replay = streaming.make_replay_dir(sf, tempfile.mkdtemp(prefix="events_state_"))
+    replay = streaming.replay_dir(os.path.join(sf, "events.parquet"), "ts", 10)
     return streaming.run_available_now(
-        streaming.running_user_totals(streaming.read_events_stream(spark, replay)),
+        streaming.running_user_totals(streaming.stream_source(spark, path=replay)),
         spark,
         output_mode="update",
     )
@@ -930,11 +931,9 @@ def q39(spark, sf):
     """Watermarked stream-stream join (purchases ⋈ signups within 1 hour,
     both sides streaming); batch-equivalence asserted in
     tests/test_streaming.py."""
-    import tempfile
-
     from . import streaming
 
-    replay = streaming.make_replay_dir(sf, tempfile.mkdtemp(prefix="events_ssj_"))
+    replay = streaming.replay_dir(os.path.join(sf, "events.parquet"), "ts", 10)
     return streaming.run_available_now(
         streaming.stream_stream_join(spark, replay), spark
     )

@@ -2,10 +2,11 @@
 
 Batch-mode window aggregations (tumbling/sliding/session) live in
 relational.py with DuckDB oracles; this module provides the genuinely
-streaming pieces: a deterministic file-source replay of the `events`
-table, watermarked windowed aggregation under Trigger.AvailableNow, and
-streaming dedup — with late-data semantics asserted in
-tests/test_streaming.py (FIXTURES.md §4).
+streaming pieces: one cached, ordered file-source replay of a table
+(replay_dir) read through one seam (stream_source), watermarked
+windowed aggregation under Trigger.AvailableNow, and streaming dedup —
+with late-data semantics asserted in tests/test_streaming.py
+(FIXTURES.md §4).
 """
 
 from __future__ import annotations
@@ -16,53 +17,59 @@ import uuid
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType
 
 
-def make_replay_dir(
-    sf_dir: str, out_dir: str, n_chunks: int = 10, late_chunk: bool = False
+def replay_dir(
+    src_parquet: str, order_col: str, n_chunks: int, late_chunk: bool = False
 ) -> str:
-    """Split events.parquet into n chronological chunks (chunk-00..NN) —
-    a deterministic stand-in for a stream arriving in event-time order.
+    """Cut `src_parquet` into n_chunks `order_col`-ordered chunks
+    (chunk-000..NN) — a deterministic stand-in for a stream arriving in
+    that order — published once through conf.cached_dir. The cache key
+    is the source's path, (size, mtime_ns) and the chunking, so a
+    rewritten source gets a fresh replay and a rebuild writes nothing.
 
-    late_chunk=True: hold back a slice of the OLDEST events and append it
+    late_chunk=True: hold back a slice of the OLDEST rows and append it
     as the final chunk — rows that arrive after the watermark has passed
     their window, to exercise late-data dropping.
     """
-    tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
-    order = pq.read_table(os.path.join(sf_dir, "events.parquet"), columns=["ts"])
+    import hashlib
+    import time
+
     import pyarrow.compute as pc
 
-    idx = pc.sort_indices(order.column("ts"))
-    tbl = tbl.take(idx)
-    os.makedirs(out_dir, exist_ok=True)
-    n = tbl.num_rows
-    if late_chunk:
-        # oldest 5% arrives LAST
-        held = tbl.slice(0, max(1, n // 20))
-        rest = tbl.slice(max(1, n // 20))
+    from .conf import cached_dir
+
+    st = os.stat(src_parquet)
+    src = hashlib.sha256(os.path.abspath(src_parquet).encode()).hexdigest()[:12]
+    late = "_late" if late_chunk else ""
+
+    def build(out_dir: str) -> None:
+        tbl = pq.read_table(src_parquet)
+        tbl = tbl.take(pc.sort_indices(tbl.column(order_col)))
+        n = tbl.num_rows
+        # the oldest 5% arrives LAST
+        held = tbl.slice(0, max(1, n // 20) if late_chunk else 0)
+        rest = tbl.slice(held.num_rows)
         step = max(1, rest.num_rows // n_chunks)
         chunks = [rest.slice(i * step, step) for i in range(n_chunks - 1)]
-        tail = rest.slice((n_chunks - 1) * step)
-        if tail.num_rows:
-            chunks.append(tail)
-        chunks.append(held)
-    else:
-        step = max(1, n // n_chunks)
-        chunks = [tbl.slice(i * step, step) for i in range(n_chunks - 1)]
-        chunks.append(tbl.slice((n_chunks - 1) * step))
-    import time as _time
+        chunks += [rest.slice((n_chunks - 1) * step), held]
+        base = time.time()
+        for i, c in enumerate(c for c in chunks if c.num_rows):
+            p = os.path.join(out_dir, f"chunk-{i:03d}.parquet")
+            pq.write_table(c, p)
+            # FileStreamSource orders new files by MODIFICATION TIME;
+            # chunks written within the same clock tick tie and can be
+            # picked up out of order (observed: the held-back late chunk
+            # processed early → watermark never ahead of it → flaky drop
+            # counts). Strictly increasing mtimes make replay order =
+            # chunk order, always.
+            os.utime(p, (base + i, base + i))
 
-    base_mtime = _time.time()
-    for i, c in enumerate(c for c in chunks if c.num_rows):
-        p = os.path.join(out_dir, f"chunk-{i:03d}.parquet")
-        pq.write_table(c, p)
-        # FileStreamSource orders new files by MODIFICATION TIME; chunks
-        # written within the same clock tick tie and can be picked up out
-        # of order (observed: the held-back late chunk processed early →
-        # watermark never ahead of it → flaky drop counts). Strictly
-        # increasing mtimes make replay order = chunk order, always.
-        os.utime(p, (base_mtime + i, base_mtime + i))
-    return out_dir
+    return cached_dir(
+        f"replay_{src}_{st.st_size}_{st.st_mtime_ns}_{order_col}_{n_chunks}{late}",
+        build,
+    )
 
 
 def stream_source(
@@ -75,8 +82,9 @@ def stream_source(
     seam): the single place a source format binds, so a production
     source swaps in with one argument and nothing else changes.
 
-    * 'file-replay' — this sandbox's live source: ordered parquet chunk
-      replay with maxFilesPerTrigger=1 (read_events_stream).
+    * 'file-replay' — the offline stand-in for a live feed: a
+      replay_dir read one chunk per trigger, so there is one
+      micro-batch per chunk.
     * 'rate' — Spark's built-in synthetic source (smoke-tested).
     * 'kafka' — the production line; raises at load() in this env
       because no kafka connector jar / broker exists (options pass
@@ -85,26 +93,28 @@ def stream_source(
     if fmt == "file-replay":
         if path is None:
             raise ValueError("file-replay requires path=<replay_dir>")
-        return read_events_stream(spark, path)
+        schema = spark.read.parquet(path).schema
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(path)
+        )
+        # parquet µs timestamps surface as TIMESTAMP_NTZ in Spark 4, but
+        # watermarks require TIMESTAMP; session tz is UTC so values are
+        # unchanged by the cast.
+        return stream.withColumns(
+            {
+                f.name: F.col(f.name).cast("timestamp")
+                for f in schema
+                if isinstance(f.dataType, TimestampNTZType)
+            }
+        )
     if fmt in ("rate", "kafka"):
         reader = spark.readStream.format(fmt)
         for k, v in options.items():
             reader = reader.option(k, v)
         return reader.load()
     raise ValueError(f"unknown stream source format: {fmt!r}")
-
-
-def read_events_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
-    schema = spark.read.parquet(replay_dir).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-        # parquet µs timestamps surface as TIMESTAMP_NTZ in Spark 4, but
-        # watermarks require TIMESTAMP; session tz is UTC so values are
-        # unchanged by the cast.
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
 
 
 def run_available_now(
@@ -191,21 +201,11 @@ def running_user_totals(stream: DataFrame) -> DataFrame:
     )
 
 
-def windowed_counts_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q31 entry: replay events as a file stream, watermarked windowed
-    counts, AvailableNow to completion (rows-only driver check)."""
-    import tempfile
-
-    replay = make_replay_dir(sf_dir, tempfile.mkdtemp(prefix="events_replay_"))
-    return run_available_now(windowed_counts(read_events_stream(spark, replay)), spark)
-
-
 def extract_corpus_streaming(
     spark: SparkSession,
     docs_stream_dir: str,
     corpus_dir: str,
     out_dir: str,
-    max_files_per_trigger: int = 2,
 ) -> dict:
     """Incremental extraction: documents arriving as a file stream are
     run through the SAME extraction pipeline (extract_spans + reassemble)
@@ -216,17 +216,10 @@ def extract_corpus_streaming(
     OVERWRITES its own directory (idempotent), mirroring the A18 bucket
     protocol. The media store is static (the common shape: media blobs
     land first, document records reference them)."""
-    import os
-
     from .pipeline import extract_spans, load_media, reassemble
 
     media = load_media(spark, corpus_dir)
-    schema = spark.read.parquet(docs_stream_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_stream_dir)
-    )
+    stream = stream_source(spark, path=docs_stream_dir)
     out_table = os.path.join(out_dir, "extracted_stream")
     n_batches = {"n": 0}
 
@@ -247,12 +240,12 @@ def extract_corpus_streaming(
     return {"batches": n_batches["n"], "out_table": out_table}
 
 
-def stream_stream_join(spark: SparkSession, replay_dir: str) -> DataFrame:
+def stream_stream_join(spark: SparkSession, replay: str) -> DataFrame:
     """Stream-stream inner join with watermarked state: purchases joined
     to the same user's signups within 1 hour before the purchase. Both
     sides are streaming; watermarks bound the join state retention."""
     purchases = (
-        read_events_stream(spark, replay_dir)
+        stream_source(spark, path=replay)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -262,7 +255,7 @@ def stream_stream_join(spark: SparkSession, replay_dir: str) -> DataFrame:
         .withWatermark("p_ts", "30 minutes")
     )
     signups = (
-        read_events_stream(spark, replay_dir)
+        stream_source(spark, path=replay)
         .filter(F.col("event_type") == "signup")
         .select(
             F.col("event_id").alias("signup_id"),
@@ -277,39 +270,6 @@ def stream_stream_join(spark: SparkSession, replay_dir: str) -> DataFrame:
             "p_user = s_user AND s_ts <= p_ts AND s_ts >= p_ts - INTERVAL 1 HOUR"
         ),
     ).select("purchase_id", "signup_id", "p_ts", "s_ts")
-
-
-def make_docs_replay_dir(sf_dir: str, out_dir: str, n_chunks: int = 8) -> str:
-    """Split documents.parquet into n doc_id-ordered chunks with strictly
-    increasing mtimes — the deterministic ingest-stream stand-in for a
-    crawl feed (same mtime discipline as make_replay_dir: the file
-    source orders new files by modification time)."""
-    tbl = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
-    import pyarrow.compute as pc
-
-    tbl = tbl.take(pc.sort_indices(tbl.column("doc_id")))
-    os.makedirs(out_dir, exist_ok=True)
-    n = tbl.num_rows
-    step = max(1, n // n_chunks)
-    chunks = [tbl.slice(i * step, step) for i in range(n_chunks - 1)]
-    chunks.append(tbl.slice((n_chunks - 1) * step))
-    import time as _time
-
-    base = _time.time()
-    for i, c in enumerate(c for c in chunks if c.num_rows):
-        p = os.path.join(out_dir, f"chunk-{i:03d}.parquet")
-        pq.write_table(c, p)
-        os.utime(p, (base + i, base + i))
-    return out_dir
-
-
-def read_docs_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
-    schema = spark.read.parquet(replay_dir).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
 
 
 def streaming_ingest_dedup(stream: DataFrame) -> DataFrame:
